@@ -168,19 +168,6 @@ def q_cdc_lww_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cdc_lww_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O17: identical semantics via the two-phase salted reduce (skew path);
-    oracle twin is the same LWW SQL — proving salting changes the physical
-    plan, not the answer."""
-    from airbyte_destination_spark.operators.dedup import lww_reduce_salted
-
-    log = _cdc_events(spark, sf_dir)
-    red = lww_reduce_salted(log, ["doc_key"], ["change_lsn"], n_salts=8)
-    return red.where(F.col("op") != "D").select(
-        "doc_key", F.col("change_lsn").alias("last_lsn"), "event_type", "value"
-    )
-
-
 def q_enrich_raw_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/O5: deterministic sha256 raw id (reference recipe: components
     NUL-joined, hex, 8-4-4-4-12) over the events stream."""
@@ -1388,8 +1375,8 @@ def q_kmv_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest planner's skew detector: hot doc_keys in a change
     batch found from the count-min grid (functions/sketch.py), with a
-    per-key salt-factor recommendation for the salted LWW reduce
-    (operators/dedup.lww_reduce_salted, O17). The pipeline the report
+    per-key salt-factor recommendation: how many slices a two-phase
+    reduce would split each hot key into (O17). The pipeline the report
     models: the CMS is maintained per epoch anyway (sum-mergeable),
     candidate keys come from a deterministic ~6% row sample (a hot key
     is in any row sample w.h.p. — no exact per-key count is ever
@@ -4284,7 +4271,6 @@ def _swept(fn: Callable[[SparkSession, str], DataFrame]):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     d = {
         "cdc_lww_final_state": q_cdc_lww_final_state,
-        "cdc_lww_salted": q_cdc_lww_salted,
         "cdc_engine_cow_final_state": q_cdc_engine_cow_final_state,
         "cdc_engine_rebucket_final_state": q_cdc_engine_rebucket_final_state,
         "cdc_engine_sharded_final_state": q_cdc_engine_sharded_final_state,
@@ -5169,7 +5155,6 @@ WHERE rn = 1 AND op <> 'D'
     WHERE user_id IS NOT NULL ORDER BY user_id LIMIT 5
   )
 """,
-        "cdc_lww_salted": _LWW_SQL,
         "cdc_engine_cow_final_state": _LWW_SQL,
         "cdc_engine_mor_final_state": _LWW_SQL,
         # bootstrap must reconstruct the full-history LWW state even

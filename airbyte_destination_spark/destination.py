@@ -8,7 +8,7 @@ Spark-native re-expression of the reference's top-level connector
       RECORD -> from_json per stream schema -> enrich [O2,O4,O5]
         overwrite     : DELETE extracted_at <= sync start, then append [O13]
         append        : append, duplicates kept                        [O12]
-        append_dedup  : LWW reduce by (pk, cursor) -> merge            [O11]
+        append_dedup  : merge, LWW by (pk, cursor, raw id)             [O11]
 
 Deviation from the reference, by design: the reference flushes buffers
 at each STATE barrier because it streams serially; a batch engine
@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,6 @@ from pyspark.sql import functions as F
 from airbyte_destination_spark import protocol as P
 from airbyte_destination_spark.functions.enrich import raw_id_expr
 from airbyte_destination_spark.lake import LakeTable
-from airbyte_destination_spark.operators.dedup import lww_reduce
 
 
 @dataclass
@@ -125,10 +125,10 @@ def _indexed_records(typed: DataFrame, offsets: dict[int, int]) -> DataFrame:
     layout, so partition ids line up with the offsets pass).
 
     Invariant: the source must reproduce identical partitioning and row
-    order across jobs — file scans and local relations do. For a source
-    that does not (socket/queue), Destination.write(persist_input=True)
-    pins one materialization instead; the validation pass doubles as
-    the cache fill, so no extra job appears either way."""
+    order across jobs — file scans and local relations do. Destination.write
+    pins one materialization of any input whose plan has an Exchange
+    (its row->partition assignment is job-dependent); the validation
+    pass doubles as the cache fill, so no extra job appears either way."""
     recs = typed.where(F.col("type") == P.TYPE_RECORD)
     if not offsets:
         return recs.withColumn("_record_index", F.lit(0).cast("long"))
@@ -140,60 +140,6 @@ def _indexed_records(typed: DataFrame, offsets: dict[int, int]) -> DataFrame:
         off_map[F.spark_partition_id()]
         + F.monotonically_increasing_id().bitwiseAND(F.lit(_SEQ_MASK)),
     )
-
-
-def _global_record_index(records: DataFrame) -> DataFrame:
-    """0-based index over RECORD messages in input order — the
-    reference's recordIndex (destination.go:393,423,453). Standalone
-    variant for an ARBITRARY DataFrame (caches one projection so the
-    numbering survives non-reproducible upstream partitioning); the
-    wire path uses the fused zero-persist pair `_validated_offsets` +
-    `_indexed_records` instead.
-
-    Partition-parallel two-pass zipWithIndex: pass 1 collects per-
-    partition (count, min id) — a #partitions-sized control-plane job —
-    and turns counts into exclusive global offsets; pass 2 adds
-    offset + (id - min id) per row. monotonically_increasing_id is
-    contiguous within a partition, so the arithmetic needs no window
-    and the plan has NO single-partition exchange (the round-1 version
-    was a global Window.orderBy — one task saw the whole sync).
-
-    The _pid/_mid projection is CACHED before pass 1 so pass 2 reads the
-    exact same partitions/ids instead of re-running the scan — the
-    numbering would otherwise silently break for any upstream source
-    that doesn't reproduce identical partitioning across jobs (the
-    spooled file scan does; a future socket/queue source would not).
-    Callers must unpersist the returned DataFrame when done.
-    """
-    base = records.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_mid", F.monotonically_increasing_id()
-    )
-    base = base.persist()
-    parts = sorted(
-        (r["_pid"], r["n"], r["lo"])
-        for r in base.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("_mid").alias("lo"))
-        .collect()
-    )
-    offsets, acc = {}, 0
-    lows = {}
-    for pid, n, lo in parts:
-        offsets[pid], lows[pid] = acc, lo
-        acc += n
-    if not parts:
-        base.unpersist()
-        return records.withColumn("_record_index", F.lit(0).cast("long"))
-    off_map = F.create_map(*[F.lit(x) for pid in offsets for x in (pid, offsets[pid])])
-    low_map = F.create_map(*[F.lit(x) for pid in lows for x in (pid, lows[pid])])
-    out = (
-        base.withColumn(
-            "_record_index",
-            off_map[F.col("_pid")] + (F.col("_mid") - low_map[F.col("_pid")]),
-        )
-        .drop("_mid", "_pid")
-    )
-    out._cached_base = base  # handle for the caller's unpersist
-    return out
 
 
 def _echo_state(line: str) -> str:
@@ -223,7 +169,6 @@ class Destination:
         lines: DataFrame | str,
         sync_start_ms: int | None = None,
         on_state=None,
-        persist_input: bool | None = None,
     ) -> WriteResult:
         """Apply one sync's NDJSON message stream to the warehouse.
 
@@ -240,12 +185,11 @@ class Destination:
         (`_validated_offsets`), and per-stream jobs re-scan the source
         (cheap projection; a file scan or local relation reproduces
         identical partitioning every job — the record-index
-        invariant). `persist_input=None` (default) auto-detects: an
-        Exchange upstream of the message scan (repartition / join /
-        agg) makes row->partition assignment job-dependent under AQE,
-        so such inputs get ONE pinned materialization — the validation
-        pass doubles as the cache fill, no extra job either way. Pass
-        True/False to force.
+        invariant). An Exchange upstream of the message scan
+        (repartition / join / agg) makes row->partition assignment
+        job-dependent under AQE, so such inputs get ONE pinned
+        materialization — the validation pass doubles as the cache
+        fill, no extra job either way.
 
         Streams write CONCURRENTLY — each stream targets its own
         independent LakeTable, so their Spark jobs overlap instead of
@@ -264,11 +208,8 @@ class Destination:
             F.get_json_object("value", "$.record.stream").alias("stream"),
             F.get_json_object("value", "$.record.namespace").alias("namespace"),
         )
-        if persist_input is None:
-            persist_input = (
-                "Exchange" in typed._jdf.queryExecution().executedPlan().toString()
-            )
-        if persist_input:
+        pinned = "Exchange" in typed._jdf.queryExecution().executedPlan().toString()
+        if pinned:
             typed = typed.persist()
 
         # ONE pass: malformed gate (destination.go:396-400) + record
@@ -277,21 +218,13 @@ class Destination:
         records = _indexed_records(typed, offsets)
 
         result = WriteResult()
-        if len(catalog.streams) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(len(catalog.streams), 4)
-            ) as pool:
-                futs = [
-                    (s.table_name, pool.submit(self._write_stream, s, records, sync_start_ms))
-                    for s in catalog.streams
-                ]
-                for name, fut in futs:
-                    result.tables[name] = fut.result()
-        else:
-            for s in catalog.streams:
-                result.tables[s.table_name] = self._write_stream(s, records, sync_start_ms)
+        with ThreadPoolExecutor(max_workers=max(1, min(len(catalog.streams), 4))) as pool:
+            futs = [
+                (s.table_name, pool.submit(self._write_stream, s, records, sync_start_ms))
+                for s in catalog.streams
+            ]
+            for name, fut in futs:
+                result.tables[name] = fut.result()
 
         # STATE echo after the data landed (flush-before-state)
         state_src = typed.where(F.col("type") == P.TYPE_STATE).select("value")
@@ -305,7 +238,7 @@ class Destination:
             ]
             result.n_states = len(result.states)
 
-        if persist_input:
+        if pinned:
             typed.unpersist()
 
         # Full-reset detection (destination.go:181-184,262-268): a sync
@@ -396,12 +329,15 @@ class Destination:
         out = enriched.drop("_record_index", "_emitted_at")
         if s.destination_sync_mode == P.MODE_APPEND_DEDUP:
             if s.merge_engine != "lww":
-                # partial/aggregate engines fold EVERY event — an LWW
-                # pre-reduce would drop summed/inherited contributions
+                # partial/aggregate engines fold EVERY event
                 stats = table.merge(out, reduce=s.merge_engine)
             else:
-                reduced = lww_reduce(out, key_cols, [ver_col], tiebreak_cols=[P.RAW_ID_COL])
-                stats = table.merge(reduced)
+                # the merge's max_by is the only reduce: a cursor tie
+                # inside the sync goes to the greatest raw id, and a sync
+                # row beats a stored row with the same cursor. Lineage
+                # counts one row per key — the rows this sync writes.
+                per_key = out.groupBy(*key_cols).agg(F.max(ver_col).alias(ver_col))
+                stats = table.merge(out, tiebreak_cols=[P.RAW_ID_COL], lineage_df=per_key)
         else:
             stats = table.append(out)
         return stats.rows_upserted

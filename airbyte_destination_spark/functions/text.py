@@ -335,7 +335,8 @@ def _ranked_vocab(words: DataFrame) -> DataFrame:
     across the two jobs + a per-partition row_number offset by the
     exclusive prefix counts (a #partitions-row control-plane collect)
     — the wire path's two-pass zipWithIndex discipline
-    (destination.py _global_record_index) lifted to a sorted domain.
+    (destination.py _validated_offsets + _indexed_records) lifted to a
+    sorted domain.
     The corpus scan itself only feeds a map-side-combined count.
     """
     freq = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))

@@ -405,39 +405,31 @@ def _zone_map_pred(keys_by_bucket: dict[int, list]):
     return pred
 
 
-# AQE toggle for merge-shaped jobs. The merge plan is fully determined
-# (explicit REPARTITION_BY_NUM to n_buckets, skew absorbed by the
-# max_by map-side combine), so adaptive re-planning buys nothing — but
-# it costs a driver-side re-optimization barrier per stage, measured as
-# a large fraction of small-epoch wall time at high parallelism
-# (streaming/pipeline.py first measured 2.3x epoch throughput with it
-# off). Round 6 moves the toggle down into LakeTable._apply so EVERY
-# merge caller gets it — the engine-replay queries call merge()
-# directly, not through apply_change_batch, and were paying the AQE
-# barriers on each of their per-epoch commits. Session-wide while an
-# apply is in flight (SQLConf has no per-plan switch); the lock makes
-# nested/concurrent applies restore the right value.
+# AQE toggle for merge-shaped jobs — the engine's only AQE switch. The
+# merge plan is fully determined (explicit REPARTITION_BY_NUM to
+# n_buckets, then one aggregate over that exchange), so adaptive
+# re-planning buys nothing — but it costs a driver-side
+# re-optimization barrier per stage, measured as a large fraction of
+# small-epoch wall time at high parallelism (2.3x epoch throughput
+# with it off). Every fold/write job (_apply, compact, compact_tiered)
+# runs under it. Session-wide while a job is in flight (SQLConf has no
+# per-plan switch); the lock makes nested/concurrent jobs restore the
+# right value.
 _AQE_LOCK = threading.RLock()
 
 
 class _no_aqe:
-    """Context manager: AQE off for the duration of a merge-shaped job.
-    SPARK_GRAFT_MERGE_AQE=1 disables the toggle (A/B escape hatch)."""
+    """Context manager: AQE off for the duration of a merge-shaped job."""
 
     def __init__(self, spark: SparkSession):
         self.conf = spark.conf
-        self.off = os.environ.get("SPARK_GRAFT_MERGE_AQE", "0") != "1"
 
     def __enter__(self):
-        if not self.off:
-            return
         _AQE_LOCK.acquire()
         self.prev = self.conf.get("spark.sql.adaptive.enabled", "true")
         self.conf.set("spark.sql.adaptive.enabled", "false")
 
     def __exit__(self, *exc):
-        if not self.off:
-            return False
         try:
             self.conf.set("spark.sql.adaptive.enabled", self.prev)
         finally:
@@ -1638,6 +1630,12 @@ class LakeTable:
         Returns {"version", "buckets", "files_merged", "bytes_merged"}
         or None when no bucket holds a qualifying run.
         """
+        with _no_aqe(spark):  # fixed-shape fold+write, like compact
+            return self._compact_tiered_no_aqe(spark, min_run, tier_factor, max_run)
+
+    def _compact_tiered_no_aqe(
+        self, spark: SparkSession, min_run: int, tier_factor: float, max_run: int
+    ) -> dict | None:
         from airbyte_destination_spark.operators.dedup import lww_reduce_agg
 
         def _size(e: dict) -> int:
@@ -2684,8 +2682,9 @@ class LakeTable:
         greatest version wins, including against rows already in the
         table (ReplacingMergeTree(Ver) semantics, destination.go:337-351).
         Rows whose winning op is D are removed. Only buckets containing
-        batch keys are rewritten. Ties on the version column are broken
-        by `tiebreak_cols`, then batch-over-existing.
+        batch keys are rewritten. Ties on the version column go to the
+        batch row over the stored one, then (inside the batch) to the
+        greatest `tiebreak_cols`.
 
         `lineage_df` (optional): a cheaper projection to aggregate the
         per-bucket lineage from — it only needs the key + version
@@ -3972,10 +3971,12 @@ class LakeTable:
                 # i == bucket i afterwards — the write then needs no
                 # further shuffle. REPARTITION_BY_NUM is AQE-stable.
                 combined = combined.repartition(m["n_buckets"], *[F.col(c) for c in _bucket_cols(m)])
-                # LWW as max_by aggregation: map-side partial combine
-                # pre-reduces every upstream partition, so hot keys never
-                # concentrate on one reducer (built-in skew handling) and
-                # the batch needs no separate pre-dedup pass.
+                # LWW as max_by aggregation over that exchange: the only
+                # reduce on the write path, so the batch needs no
+                # separate pre-dedup pass. Its partial aggregate runs
+                # AFTER the bucket exchange, so a hot key's rows all
+                # cross the shuffle to one bucket (no pre-shuffle
+                # combine here, unlike standalone lww_reduce_agg).
                 if reduce == "partial":
                     # per-column last-non-null fold; the existing live
                     # row re-enters as one non-delete event at the row's
@@ -3988,7 +3989,7 @@ class LakeTable:
 
                     winners = partial_update_reduce(
                         combined.drop(_BUCKET_COL), key_cols, ver_col,
-                        tiebreak_cols=list(tiebreak_cols or []) + ["_src"],
+                        tiebreak_cols=["_src", *(tiebreak_cols or [])],
                     )
                     # _bucket is key-functional — recompute it rather
                     # than letting the per-column fold null it on
@@ -4006,14 +4007,14 @@ class LakeTable:
                     winners = aggregate_reduce(
                         combined.drop(_BUCKET_COL), key_cols, ver_col,
                         agg_spec=m["agg_spec"],
-                        tiebreak_cols=list(tiebreak_cols or []) + ["_src"],
+                        tiebreak_cols=["_src", *(tiebreak_cols or [])],
                     )
                     winners = self._with_bucket(winners, m)
                 else:
                     other = [c for c in combined.columns if c not in key_cols]
-                    ord_fields = ([F.col(ver_col)] if ver_col is not None else []) + (
-                        [F.col(c) for c in tiebreak_cols or []]
-                    ) + [F.col("_src")]
+                    ord_fields = ([F.col(ver_col)] if ver_col is not None else []) + [
+                        F.col(c) for c in ["_src", *(tiebreak_cols or [])]
+                    ]
                     winners = (
                         combined.groupBy(*key_cols)
                         .agg(

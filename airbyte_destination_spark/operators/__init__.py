@@ -1,6 +1,6 @@
-"""Dataflow operators: last-writer-wins reduce (plain + salted), routing."""
+"""Dataflow operators: last-writer-wins reduce (window + aggregate), routing."""
 
 from airbyte_destination_spark.operators.dedup import (  # noqa: F401
     lww_reduce,
-    lww_reduce_salted,
+    lww_reduce_agg,
 )

@@ -1,4 +1,4 @@
-"""Last-writer-wins reduce over a change batch (O11) — plain and salted.
+"""Last-writer-wins reduce over a change batch (O11) — window and aggregate.
 
 Semantics: per key, keep the single row with the greatest version
 (ReplacingMergeTree(Ver) as configured by the reference at
@@ -7,18 +7,14 @@ e2e fixture where the later `updated_at` wins, e2e/main_test.go:86-105).
 
 Two physical strategies:
 
-- `lww_reduce`: one shuffle, window row_number. Right when keys are
-  roughly uniform — Catalyst turns it into a single hash exchange +
-  in-partition sort, whole-stage-codegen'd.
+- `lww_reduce`: one shuffle, window row_number. Catalyst turns it into
+  a single hash exchange + in-partition sort, whole-stage-codegen'd;
+  the reference the other reduces are tested against.
 
-- `lww_reduce_salted`: two-phase for skewed keys. A hot key (one doc_id
-  receiving a large fraction of 10^10 updates) makes one reducer
-  partition the straggler; salting splits each key across `n_salts`
-  sub-reducers, reduces per (key, salt), then re-reduces the n_salts
-  survivors per key. Phase-2 input is <= n_salts rows per key, so the
-  second shuffle is tiny. This is the classic two-phase skew reduce
-  (the reference is single-threaded, so it never faces this — SURVEY
-  O17).
+- `lww_reduce_agg`: max_by hash aggregation with map-side partial
+  combine, so a hot key contributes at most one row per upstream
+  partition to the shuffle (SURVEY O17). The lake merge
+  (lake/table.py) folds batch and stored rows with the same max_by.
 """
 
 from __future__ import annotations
@@ -69,36 +65,6 @@ def lww_reduce_agg(
     payload = F.struct(*[F.col(c) for c in other])
     agg = df.groupBy(*key_cols).agg(F.max_by(payload, F.struct(*ord_cols)).alias("_w"))
     return agg.select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in other])
-
-
-def lww_reduce_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    version_cols: list[str],
-    tiebreak_cols: list[str] | None = None,
-    n_salts: int = 16,
-    salt_source_col: str | None = None,
-) -> DataFrame:
-    """Two-phase LWW reduce for skewed keys.
-
-    Salt is derived from a high-cardinality column (default: the first
-    version column) so one key's rows spread across `n_salts` partitions
-    deterministically.
-    """
-    src = salt_source_col or version_cols[0]
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(src)), F.lit(n_salts)))
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(
-        *_order(version_cols, tiebreak_cols or [])
-    )
-    phase1 = (
-        salted.withColumn("_rn", F.row_number().over(w1)).where(F.col("_rn") == 1).drop("_rn")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*_order(version_cols, tiebreak_cols or []))
-    return (
-        phase1.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_salt")
-    )
 
 
 def partial_update_reduce(

@@ -78,18 +78,6 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         # bigger shuffle write buffer = fewer flush syscalls per task
         .config("spark.shuffle.file.buffer", "1m")
-        # v2 file-output commit: task output renames to the destination
-        # at task commit instead of a serial per-file rename loop at job
-        # commit. The engine's manifest is the visibility gate (files
-        # are referenced only after the fsynced manifest commit), so
-        # v1's stricter job-commit atomicity buys nothing here, while
-        # its serial rename loop is a per-commit driver cost that grows
-        # with bucket count (measured ~0.04 s per 8-bucket merge commit
-        # locally; at 64+ buckets on object storage it is the dominant
-        # commit term).
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
-        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Hadoop's ChecksumFileSystem serializes concurrent local writes
         # (measured 6x slowdown at 32 threads); raw local FS scales and
@@ -101,13 +89,14 @@ def get_spark(
         # threshold tripled wide-config throughput)
         .config("spark.storage.memoryMapThreshold", "2g")
         # FileOutputCommitter v1 moves every output file serially in the
-        # driver at job commit — measured as the dominant serial cost of
-        # a 64-file snapshot write (v2-full 2M-row write: 3.9s -> 0.9s at
-        # local[32]). v2 commits files at task commit; safe for the lake
-        # format because the snapshot manifest (not the directory) is the
-        # real commit: uncommitted leftovers are never referenced, task
-        # attempts stay under _temporary until commitTask, and
-        # speculation is off.
+        # driver at job commit — a per-commit driver cost that grows with
+        # bucket count (~0.04 s per 8-bucket merge commit locally) and
+        # dominated a 64-file snapshot write (v2-full 2M-row write: 3.9s
+        # -> 0.9s at local[32]). v2 commits files at task commit; safe for
+        # the lake format because the snapshot manifest (not the
+        # directory) is the real commit: uncommitted leftovers are never
+        # referenced, task attempts stay under _temporary until
+        # commitTask, and speculation is off.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
     for k, v in (extra_conf or {}).items():

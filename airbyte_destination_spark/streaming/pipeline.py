@@ -3,8 +3,8 @@
 Reference control flow (/root/reference/internal/connector/destination.go:384-470):
 serial scan -> enrich -> route -> bounded buffer -> POST -> STATE flush.
 Ours: micro-batch DataFrame -> validate (Arrow UDF) -> enrich (codegen
-exprs) -> last-writer-wins reduce (salted window) -> LakeTable.merge
-(bucket-pruned copy-on-write) -> epoch manifest commit.
+exprs) -> LakeTable.merge (one max_by last-writer-wins reduce over batch
+plus stored rows, bucket-pruned copy-on-write) -> epoch manifest commit.
 
 Exactly-once: every micro-batch carries a deterministic epoch id; the
 merge is a no-op when the table snapshot already records that epoch
@@ -19,7 +19,6 @@ upgraded from at-least-once to exactly-once.
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,12 +28,7 @@ from pyspark.sql import types as T
 from airbyte_destination_spark import protocol as P
 from airbyte_destination_spark.functions.enrich import enrich_records, raw_id_expr
 from airbyte_destination_spark.functions.validate import validate_tokens
-from airbyte_destination_spark.lake import LakeTable, MergeStats
-from airbyte_destination_spark.operators.dedup import (
-    lww_reduce,
-    lww_reduce_agg,
-    lww_reduce_salted,
-)
+from airbyte_destination_spark.lake import CommitConflict, LakeTable, MergeStats
 from airbyte_destination_spark.sources.changelog import records_only
 
 
@@ -46,45 +40,30 @@ class IngestConfig:
     # "cow": eager merge, reads are plain scans; "mor": O(batch) delta
     # appends, reads fold, compact() amortizes (ReplacingMergeTree-style)
     merge_strategy: str = "cow"
-    # pre-reduce strategy before the merge: None (default — the merge's
-    # max_by aggregation reduces batch+table in ONE shuffle with map-side
-    # combine, which is also the skew answer), or "window" / "salted" /
-    # "agg" to materialize a per-batch reduce first (kept for parity and
-    # for pipelines that want the reduced batch as an artifact).
-    pre_reduce: str | None = None
-    n_salts: int = 16  # used when pre_reduce == "salted"
     # merge engine: "lww" (whole-row last-writer-wins, the
     # ReplacingMergeTree default), "partial" (partial-image updates —
     # NULL batch columns inherit the stored value), or "aggregate"
     # (per-column declared folds from agg_spec — SummingMergeTree).
-    # Non-LWW engines imply eager enrichment (every surviving event
-    # contributes, so there is no discarded-row hash to defer) and
-    # reject pre_reduce (an LWW pre-reduce would silently drop summed /
-    # inherited contributions); null-token upserts bypass token
-    # validation (NULL means "column not written" for these engines).
+    # The merge's own max_by is the only reduce on every engine. LWW
+    # batches carrying `emitted_at` defer the _airbyte_raw_id sha256
+    # until after that reduce: the id derives from (namespace, stream,
+    # version, extracted_at), all of which survive it, so only winning
+    # rows pay the hash. Non-LWW engines enrich eagerly (every event
+    # contributes, so there is no discarded-row hash to save);
+    # null-token upserts bypass token validation there (NULL means
+    # "column not written" for these engines).
     reduce: str = "lww"
     agg_spec: dict | None = None  # required when reduce == "aggregate"
     validate: bool = True
-    tokens_col: str = "tokens"
-    n_tok_col: str = "n_tok"
-    # defer the _airbyte_raw_id hash to AFTER the LWW reduce: the id is
-    # derivable from (namespace, stream, version, extracted_at), all of
-    # which survive the reduce, so computing it per input event wastes a
-    # sha256 + a 36-char string in the shuffle for every row the reduce
-    # will discard (Zipf-keyed logs discard most). The merge carries
-    # (namespace, stream) as thin carry columns and computes the id only
-    # for winning batch rows (existing rows keep their stored id).
-    defer_enrich: bool = True
-    repartition: int | None = None  # pre-shuffle width for the reduce
     quarantine_root: str | None = None
-    # micro-batch bounds (O7). The reference flushes a buffer at
+    # micro-batch bound (O7). The reference flushes a buffer at
     # 1,047,000 bytes or 500 records per POST (destination.go:29,435);
     # a Spark trigger is a distributed batch, so the per-trigger byte
     # bound is that constant scaled by the partition fan-out (default
     # 64x ~= one reference-sized flush per core on a 64-slot stage).
     # Spark's file source enforces maxBytesPerTrigger at file
     # granularity: an epoch closes once the next file would cross it.
-    max_files_per_trigger: int = 64
+    # None: no per-trigger bound.
     max_bytes_per_trigger: int | None = 64 * 1_047_000
     # MOR read amplification bound: after a merge, any bucket holding
     # >= this many delta files is folded (ReplacingMergeTree's
@@ -100,27 +79,23 @@ class IngestConfig:
     compact_policy: str = "full"
 
 
-def _prepare_batch(batch: DataFrame, cfg: IngestConfig, table_cols: list[str] | None):
-    """envelope -> enriched, validated, LWW-reduced rows ready to merge."""
+def _prepare_batch(batch: DataFrame, cfg: IngestConfig):
+    """envelope -> validated, enriched rows ready to merge (the merge
+    itself reduces them per key)."""
     if "data" in batch.columns:
         batch = records_only(batch)
 
-    if cfg.pre_reduce and cfg.reduce != "lww":
-        raise ValueError(
-            f"pre_reduce={cfg.pre_reduce!r} with reduce={cfg.reduce!r}: an LWW "
-            "pre-reduce would drop contributions the merge engine must fold"
-        )
-    if cfg.validate and cfg.tokens_col in batch.columns:
+    if cfg.validate and "tokens" in batch.columns:
         # deletes legitimately carry a null payload — only validate upserts
         deletes = batch.where(F.col("op") == "D")
         upserts = batch.where((F.col("op").isNull()) | (F.col("op") != "D"))
         if cfg.reduce != "lww":
             # partial/aggregate: NULL tokens on an upsert means "column
             # not written this event", not a malformed record
-            passthrough = upserts.where(F.col(cfg.tokens_col).isNull())
-            upserts = upserts.where(F.col(cfg.tokens_col).isNotNull())
+            passthrough = upserts.where(F.col("tokens").isNull())
+            upserts = upserts.where(F.col("tokens").isNotNull())
             deletes = deletes.unionByName(passthrough)
-        valid, quarantined = validate_tokens(upserts, cfg.tokens_col, cfg.n_tok_col)
+        valid, quarantined = validate_tokens(upserts)
         batch = valid.unionByName(deletes)
     else:
         quarantined = None
@@ -128,10 +103,10 @@ def _prepare_batch(batch: DataFrame, cfg: IngestConfig, table_cols: list[str] | 
     for c in ("namespace", "stream"):
         if c not in batch.columns:
             batch = batch.withColumn(c, F.lit(""))
-    defer = cfg.defer_enrich and "emitted_at" in batch.columns and cfg.reduce == "lww"
+    defer = "emitted_at" in batch.columns and cfg.reduce == "lww"
     if defer:
         # only the cheap cast now; the raw-id sha256 runs post-reduce on
-        # winners (see IngestConfig.defer_enrich)
+        # winners (see IngestConfig.reduce)
         batch = batch.withColumn(
             P.EXTRACTED_AT_COL, F.timestamp_millis(F.col("emitted_at"))
         )
@@ -140,43 +115,27 @@ def _prepare_batch(batch: DataFrame, cfg: IngestConfig, table_cols: list[str] | 
     # else: bare change log without the Airbyte envelope timestamp — the
     # raw-id recipe needs emitted_at, so system columns are skipped
 
-    if cfg.repartition:
-        batch = batch.repartition(cfg.repartition, *cfg.key_cols)
-
-    if cfg.pre_reduce == "salted":
-        reduced = lww_reduce_salted(
-            batch, cfg.key_cols, [cfg.version_col], n_salts=cfg.n_salts
-        )
-    elif cfg.pre_reduce == "window":
-        reduced = lww_reduce(batch, cfg.key_cols, [cfg.version_col])
-    elif cfg.pre_reduce == "agg":
-        reduced = lww_reduce_agg(batch, cfg.key_cols, [cfg.version_col])
-    else:
-        reduced = batch  # the merge's own max_by aggregation reduces
-
     carries = ("namespace", "stream") if defer else ()
     drop = [
         c
         for c in ("stream", "namespace", "emitted_at")
-        if c in reduced.columns and c not in carries
+        if c in batch.columns and c not in carries
     ]
-    reduced = reduced.drop(*drop)
-    if table_cols is not None:
-        keep = [c for c in reduced.columns if c in set(table_cols) | {"op", *carries}]
-        reduced = reduced.select(*keep)
-    return reduced, quarantined, carries
+    return batch.drop(*drop), quarantined, carries
 
 
 def _ensure_table(
     table: LakeTable, merged: DataFrame, cfg: IngestConfig, carries: tuple[str, ...] = ()
 ) -> None:
-    if not table.exists():
-        skip = {"op", *carries}
-        fields = [f for f in merged.schema.fields if f.name not in skip]
-        if carries and P.RAW_ID_COL not in {f.name for f in fields}:
-            # deferred enrichment: the id column exists in the table
-            # schema even though batches only materialize it post-reduce
-            fields.append(T.StructField(P.RAW_ID_COL, T.StringType(), True))
+    if table.exists():
+        return
+    skip = {"op", *carries}
+    fields = [f for f in merged.schema.fields if f.name not in skip]
+    if carries and P.RAW_ID_COL not in {f.name for f in fields}:
+        # deferred enrichment: the id column exists in the table
+        # schema even though batches only materialize it post-reduce
+        fields.append(T.StructField(P.RAW_ID_COL, T.StringType(), True))
+    try:
         table.create(
             T.StructType(fields),
             cfg.key_cols,
@@ -185,10 +144,13 @@ def _ensure_table(
             merge_strategy=cfg.merge_strategy,
             agg_spec=cfg.agg_spec if cfg.reduce == "aggregate" else None,
         )
-
-
-# serializes applies on a session so the AQE save/restore below is safe
-_APPLY_LOCK = threading.RLock()
+    except (FileExistsError, CommitConflict):
+        # another consumer (thread or process) created the table between
+        # our exists() check and our create commit; roll its create
+        # forward if it has not flipped LATEST yet, then use that table
+        table._recover_orphan()
+        if not table.exists():
+            raise
 
 
 def apply_change_batch(
@@ -199,19 +161,9 @@ def apply_change_batch(
 ) -> MergeStats:
     """Apply one micro-batch of change events to the table, exactly once.
 
-    AQE is switched off for the duration of the apply job: the merge
-    plan is fully determined (explicit REPARTITION_BY_NUM to n_buckets,
-    skew absorbed by max_by map-side combine), so adaptive re-planning
-    buys nothing — but it costs a driver-side re-optimization barrier
-    per stage, which at high parallelism was measured as ~1s of the
-    epoch wall (2.3x epoch throughput at local[32] with it off).
-
-    The override is SESSION-WIDE while an apply is in flight (SQLConf
-    has no per-plan AQE switch): a query planned concurrently on the
-    same session during that window is planned without AQE (it still
-    runs correctly). Applies themselves are serialized under a module
-    lock, so overlapping applies can't corrupt the saved conf value.
-    """
+    The merge and any inline compaction run with AQE off
+    (lake.table._no_aqe): their plans are fixed-shape, so adaptive
+    re-planning only adds per-stage barriers."""
     cfg = cfg or IngestConfig()
     # cheap pre-check before any work: replayed epoch -> skip. epoch_id
     # may be a LIST of ids committing atomically (sharded consumer);
@@ -223,22 +175,8 @@ def apply_change_batch(
             ",".join(ids), table.current_version(), 0, 0, 0, skipped=True
         )
 
-    with _APPLY_LOCK:
-        conf = batch.sparkSession.conf
-        prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return _apply_change_batch_inner(table, batch, epoch_id, cfg)
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-
-def _apply_change_batch_inner(
-    table: LakeTable, batch: DataFrame, epoch_id: str, cfg: IngestConfig
-) -> MergeStats:
-
-    reduced, quarantined, carries = _prepare_batch(batch, cfg, None)
-    _ensure_table(table, reduced, cfg, carries)
+    prepared, quarantined, carries = _prepare_batch(batch, cfg)
+    _ensure_table(table, prepared, cfg, carries)
 
     n_quarantined = 0
     if quarantined is not None and cfg.quarantine_root:
@@ -265,7 +203,7 @@ def _apply_change_batch_inner(
             shutil.rmtree(qdir, ignore_errors=True)
 
     # lineage pre-pass on the RAW key+version projection: it prunes to
-    # two thin parquet columns, where aggregating `reduced` would
+    # two thin parquet columns, where aggregating `prepared` would
     # re-run validate+enrich and drag the token payload into the scan
     # (measured ~3x the lineage-job time per epoch). Counts are
     # therefore "records received" per bucket — the reference's
@@ -296,7 +234,7 @@ def _apply_change_batch_inner(
             )
 
     stats = table.merge(
-        reduced, epoch_id=epoch_id, lineage_df=lineage_df,
+        prepared, epoch_id=epoch_id, lineage_df=lineage_df,
         post_reduce=post_reduce, carry_cols=carries, reduce=cfg.reduce,
     )
     stats.rows_quarantined = n_quarantined
@@ -652,13 +590,8 @@ def run_ingest_stream(
     if data_schema is None:
         data_schema = spark.read.parquet(log_dir).schema
     reader = spark.readStream.schema(data_schema)
-    # byte bound wins when both are set (Spark treats them as
-    # alternatives; the reference applies whichever trips first —
-    # with the byte cap set, it is byte-bounded epochs)
     if cfg.max_bytes_per_trigger is not None:
         reader = reader.option("maxBytesPerTrigger", str(cfg.max_bytes_per_trigger))
-    else:
-        reader = reader.option("maxFilesPerTrigger", str(cfg.max_files_per_trigger))
     stream = reader.parquet(log_dir)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

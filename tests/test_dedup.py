@@ -1,8 +1,8 @@
-"""LWW reduce: plain vs salted equivalence, incl. a hot key spanning salts."""
+"""LWW reduce: window vs aggregate equivalence, incl. a hot key spanning partitions."""
 
 from pyspark.sql import functions as F
 
-from airbyte_destination_spark.operators.dedup import lww_reduce, lww_reduce_salted
+from airbyte_destination_spark.operators.dedup import lww_reduce, lww_reduce_agg
 from airbyte_destination_spark.sources.changegen import change_events
 
 
@@ -13,13 +13,13 @@ def _canon(df):
     )
 
 
-def test_salted_equals_plain_on_skewed_log(spark):
+def test_agg_equals_plain_on_skewed_log(spark):
     # skew=3 concentrates most of 5000 events on a handful of doc ids,
-    # so the hot key genuinely spans many salts/partitions
+    # so the hot key genuinely spans many upstream partitions
     log = change_events(spark, 5000, 50, seed=7, skew=3.0).select("op", "change_lsn", "data.*")
     plain = lww_reduce(log, ["doc_id"], ["change_lsn"])
-    salted = lww_reduce_salted(log, ["doc_id"], ["change_lsn"], n_salts=16)
-    assert _canon(plain) == _canon(salted)
+    agg = lww_reduce_agg(log, ["doc_id"], ["change_lsn"])
+    assert _canon(plain) == _canon(agg)
 
 
 def test_lww_single_winner_per_key(spark):

@@ -409,6 +409,45 @@ def test_multi_stream_concurrent_write_matches_serial(spark, tmp_path):
         assert result.tables[f"st{k}"] == len(expected)
 
 
+def test_append_dedup_cursor_ties(spark, dest):
+    """Both LWW tie rules of an append_dedup sync: inside one sync, two
+    records of one key with an equal cursor keep the greater raw id; a
+    later sync that re-sends the stored cursor value replaces the stored
+    row, even when its own raw id is smaller."""
+    from pyspark.sql import functions as F
+
+    from airbyte_destination_spark.functions.enrich import raw_id_expr
+
+    def raw_id(index, emitted):
+        return (
+            spark.range(1)
+            .select(raw_id_expr("", "airlines_dedup", F.lit(index), F.lit(emitted)))
+            .first()[0]
+        )
+
+    catalog = P.ConfiguredCatalog.from_dict({"streams": [CATALOG["streams"][1]]})
+    ts = "2024-03-19T18:05:49.000Z"
+    dest.write(
+        catalog,
+        _lines_df(spark, [
+            _rec("airlines_dedup", 1705379710, id=1, name="a", updated_at=ts),
+            _rec("airlines_dedup", 1705379710, id=1, name="b", updated_at=ts),
+        ]),
+    )
+    ids = {"a": raw_id(0, 1705379710), "b": raw_id(1, 1705379710)}
+    winner = max(ids, key=ids.get)
+    rows = dest.read_table("airlines_dedup").collect()
+    assert [(r.id, r.name, r[P.RAW_ID_COL]) for r in rows] == [(1, winner, ids[winner])]
+
+    # a resend whose raw id sorts below the stored one still wins
+    emitted = next(e for e in range(1705379711, 1705379800) if raw_id(0, e) < ids[winner])
+    dest.write(
+        catalog, _lines_df(spark, [_rec("airlines_dedup", emitted, id=1, name="c", updated_at=ts)])
+    )
+    rows = dest.read_table("airlines_dedup").collect()
+    assert [(r.id, r.name, r[P.RAW_ID_COL]) for r in rows] == [(1, "c", raw_id(0, emitted))]
+
+
 def test_catalog_merge_engine_aggregate_stream(spark, dest):
     """TableSettings-analog engine selection from the catalog: an
     append_dedup stream with merge_engine='aggregate' SUMS its declared

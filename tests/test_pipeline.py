@@ -36,15 +36,6 @@ def test_replay_matches_oracle(spark, tmp_path, changelog):
     assert n > 0
 
 
-def test_replay_salted_matches_oracle(spark, tmp_path, changelog):
-    log_dir, dirs = changelog
-    table = LakeTable(str(tmp_path / "t"))
-    run_ingest_batches(
-        spark, dirs, table, IngestConfig(n_buckets=8, pre_reduce="salted", n_salts=8)
-    )
-    assert_equal_state(table.read(spark), f"{log_dir}/batch-*/*.parquet")
-
-
 def test_resume_after_partial_replay(spark, tmp_path, changelog):
     """Crash-resume: replaying from the start skips applied epochs and the
     final state is identical — exactly-once, the reference's
@@ -98,6 +89,25 @@ def test_quarantine_split(spark, tmp_path):
     assert qdf.count() == 1 and qdf.first()["_reject_reason"] == "n_tok_mismatch"
 
 
+@pytest.mark.parametrize("stale_checks", [1, 2])
+def test_ensure_table_adopts_a_racing_create(spark, tmp_path, stale_checks):
+    """Two consumers racing on a new table both see it missing; the
+    loser's create fails — FileExistsError when create's own check
+    already sees the table (1 stale check), CommitConflict when both
+    reach the commit (2) — and must use the winner's table."""
+    from airbyte_destination_spark.streaming.pipeline import _ensure_table
+
+    batch = spark.createDataFrame([("d1", 1, "I")], "doc_id string, change_lsn long, op string")
+    cfg = IngestConfig(n_buckets=4)
+    path = str(tmp_path / "t")
+    _ensure_table(LakeTable(path), batch, cfg)
+    loser = LakeTable(path)
+    stale = [False] * stale_checks
+    loser.exists = lambda: stale.pop() if stale else LakeTable.exists(loser)
+    _ensure_table(loser, batch, cfg)
+    assert LakeTable(path).current_version() == 1
+
+
 def test_byte_bounded_epochs(spark, tmp_path, changelog):
     """O7: with max_bytes_per_trigger set, a multi-file log splits into
     multiple bounded epochs (the reference's 1,047,000-byte flush rule
@@ -119,23 +129,27 @@ def test_byte_bounded_epochs(spark, tmp_path, changelog):
 
 
 def test_deferred_enrich_ids_match_eager(spark, tmp_path, changelog):
-    """defer_enrich moves the raw-id sha256 after the LWW reduce; the
-    stored ids (and every other column) must be bit-identical to the
-    eager path — a row's id depends only on its own fields."""
+    """The LWW pipeline computes the raw-id sha256 after the merge's
+    reduce, on winners only; the stored ids must equal the eager recipe
+    (enrich_records) applied to the LWW winners of the log — a row's id
+    depends only on its own fields."""
+    from pyspark.sql import functions as F
+
+    from airbyte_destination_spark import protocol as P
+    from airbyte_destination_spark.functions.enrich import enrich_records
+    from airbyte_destination_spark.operators.dedup import lww_reduce
+    from airbyte_destination_spark.sources.changelog import records_only
+
     log_dir, dirs = changelog
-    eager = LakeTable(str(tmp_path / "eager"))
-    run_ingest_batches(
-        spark, dirs, eager, IngestConfig(n_buckets=8, defer_enrich=False)
-    )
-    deferred = LakeTable(str(tmp_path / "deferred"))
-    run_ingest_batches(
-        spark, dirs, deferred, IngestConfig(n_buckets=8, defer_enrich=True)
-    )
-    cols = sorted(c for c in eager.read(spark).columns)
-    assert cols == sorted(deferred.read(spark).columns)
-    a = sorted(map(tuple, eager.read(spark).select(*cols).collect()))
-    b = sorted(map(tuple, deferred.read(spark).select(*cols).collect()))
-    assert a == b and len(a) > 0
+    table = LakeTable(str(tmp_path / "t"))
+    run_ingest_batches(spark, dirs, table, IngestConfig(n_buckets=8))
+    cols = ["doc_id", P.RAW_ID_COL, P.EXTRACTED_AT_COL]
+    winners = lww_reduce(
+        records_only(spark.read.parquet(f"{log_dir}/batch-*")), ["doc_id"], ["change_lsn"]
+    ).where(F.col("op") != "D")
+    want = sorted(map(tuple, enrich_records(winners).select(*cols).collect()))
+    got = sorted(map(tuple, table.read(spark).select(*cols).collect()))
+    assert got == want and len(got) > 0
 
 
 def _write_numeric_log(spark, root, n_batches=3):
@@ -247,16 +261,6 @@ def test_ingest_reduce_partial_inherits_and_validates(spark, tmp_path):
     assert got == want
     # undeleted keys inherited their batch-0 tokens through null updates
     assert want["d001"][1] == [1, 0]
-
-
-def test_ingest_pre_reduce_rejected_for_non_lww(spark, tmp_path):
-    from airbyte_destination_spark.streaming.pipeline import apply_change_batch
-
-    dirs, full = _write_numeric_log(spark, str(tmp_path / "log"), n_batches=1)
-    table = LakeTable(str(tmp_path / "t"))
-    cfg = IngestConfig(reduce="partial", pre_reduce="salted")
-    with pytest.raises(ValueError, match="pre_reduce"):
-        apply_change_batch(table, spark.read.parquet(dirs[0]), "e0", cfg)
 
 
 def test_bloom_maintenance_rides_ingest(spark, tmp_path, changelog):

@@ -126,10 +126,18 @@ def test_record_index_has_no_single_partition_exchange(spark):
     round-1 global Window.orderBy pulled every record through one task
     (a 100 TB non-starter); the two-pass offset design must show NO
     SinglePartition exchange and still produce exactly 0..n-1."""
-    from airbyte_destination_spark.destination import _global_record_index
+    from airbyte_destination_spark import protocol as P
+    from airbyte_destination_spark.destination import (
+        _indexed_records,
+        _validated_offsets,
+    )
 
-    df = spark.range(0, 5000, 1, 8).selectExpr("id", "'x' AS v")
-    idx = _global_record_index(df)
+    typed = spark.range(0, 5000, 1, 8).selectExpr(
+        f"'{P.TYPE_RECORD}' AS type", "CAST(id AS STRING) AS value"
+    )
+    offsets, n = _validated_offsets(typed)
+    assert n == 5000 and len(offsets) == 8
+    idx = _indexed_records(typed, offsets)
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan
     got = sorted(r._record_index for r in idx.select("_record_index").collect())
