@@ -454,6 +454,15 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
 # distributed path (which read_keys/read_prefix cap anyway)
 _ROUTE_FOLD_MAX = 8192
 
+# Point-lookup limits. A probe of at most _LOOKUP_MAX_KEYS distinct keys
+# gets a literal IN on the distributed plan (longer lists would bloat
+# the plan with a kilobyte literal); one that also keeps at most
+# _LOOKUP_DRIVER_MAX_BYTES of files after pruning is read on the driver
+# with pyarrow and never launches a Spark job (see read_keys). An entry
+# without a recorded size counts as over the byte bound.
+_LOOKUP_MAX_KEYS = 256
+_LOOKUP_DRIVER_MAX_BYTES = 64 << 20
+
 
 def _route_keys(spark: SparkSession, keys: list, key_dt, n_buckets: int):
     """[(key, bucket, xxhash64)] for a probe key list, deduplicated,
@@ -501,6 +510,15 @@ def _route_keys(spark: SparkSession, keys: list, key_dt, n_buckets: int):
             F.xxhash64("k"),
         ).collect()
     ]
+
+
+def _local_df(spark: SparkSession, tbl, schema: T.StructType) -> DataFrame:
+    """`tbl` (a pyarrow Table) as a LocalRelation DataFrame. Chunks are
+    combined first: spark.createDataFrame(pa.Table) drops every record
+    batch after a zero-row one (chunks [2, 0, 3] come back as 2 rows),
+    and per-file reads concatenated into one table yield such
+    batches."""
+    return spark.createDataFrame(tbl.combine_chunks(), schema)
 
 
 class LakeTable:
@@ -939,21 +957,37 @@ class LakeTable:
         )
 
     def read_keys(self, spark: SparkSession, keys: list) -> DataFrame:
-        """Point lookups with three file-level pruning layers:
-        (1) bucket pruning — only the buckets the keys hash to are
-        scanned (1/n_buckets of the table per key); (2) zone-map FILE
-        pruning inside each candidate bucket — a file is opened only
-        if some probe key falls inside its manifest (kmin, kmax)
-        bounds; (3) bloom pruning (lake/bloom.py) — when a per-file
-        key bloom exists, the file is opened only if some probe key
-        MAY be present. Zone maps win on key-clustered files (sorted
-        compaction); blooms win on the CDC-natural shape where every
-        epoch's file spans the whole key space and ranges prune
-        nothing. Together they keep point lookups O(files containing
-        the key) on an un-compacted MOR table. Safe under the MOR LWW
-        fold because every layer is per-key complete (any file that
-        CAN contain a probed key is kept; blooms have no false
-        negatives).
+        """Point lookups with three pruning layers: (1) bucket pruning
+        — only the buckets the keys hash to are scanned (1/n_buckets of
+        the table per key); (2) zone-map FILE pruning inside each
+        candidate bucket — a file is opened only if some probe key
+        falls inside its manifest (kmin, kmax) bounds, and, when a
+        per-file key bloom exists (lake/bloom.py), only if some probe
+        key MAY be present; (3) ROW-GROUP pruning inside the kept files
+        by their parquet min/max statistics. Zone maps win on
+        key-clustered files (sorted compaction); blooms win on the
+        CDC-natural shape where every epoch's file spans the whole key
+        space and ranges prune nothing. Together they keep point
+        lookups O(files containing the key) on an un-compacted MOR
+        table. Safe under the MOR LWW fold because every layer is
+        per-key complete (any file that CAN contain a probed key is
+        kept; blooms have no false negatives).
+
+        Two execution paths return the same rows:
+        - DRIVER path, when the probe has at most _LOOKUP_MAX_KEYS
+          distinct keys AND the kept files' manifest sizes sum to at
+          most _LOOKUP_DRIVER_MAX_BYTES: the kept files are read on
+          the driver with pyarrow (`filters=` does layer 3), aligned by
+          the same code the parquet reader uses, folded per key in
+          Python for MOR tables, and returned as a LocalRelation. No
+          Spark job runs, and the caller's select/collect over the
+          result stays job-free — a short query does not pay the
+          distributed pipeline's fixed start-up cost.
+        - SPARK path otherwise (long key lists such as secondary-index
+          probes, or file sets too big for the driver): a parquet scan
+          of the kept files, a pushed literal IN for layer 3 (key lists
+          up to _LOOKUP_MAX_KEYS), the MOR fold, and a broadcast semi
+          join against the probe keys.
 
         Single-column keys only; `keys` is a list of key values.
         """
@@ -962,45 +996,136 @@ class LakeTable:
         key_cols = m["key_cols"]
         if len(key_cols) != 1:
             raise ValueError("read_keys supports single-column keys")
-        kdf, keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
-            spark, m, schema, keys
+        keys_by_bucket, kept = self._lookup_files(spark, m, schema, keys)
+        probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
+        kept_bytes = sum(e.get("bytes", float("inf")) for e in kept)
+        if len(probe) <= _LOOKUP_MAX_KEYS and kept_bytes <= _LOOKUP_DRIVER_MAX_BYTES:
+            return self._read_keys_local(spark, m, schema, probe, kept)
+        paths = {e["path"] for e in kept}
+        pruned = self._resolve(
+            spark, m, sorted(keys_by_bucket), schema,
+            file_pred=lambda b, e: e["path"] in paths,
         )
-        buckets = sorted(keys_by_bucket)
-        pred = self._point_lookup_pred(
-            keys_by_bucket, hashes_by_bucket,
-            key_type=schema[key_cols[0]].dataType.simpleString(),
-        )
-        pruned = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(keys) <= 256:
+        if len(keys) <= _LOOKUP_MAX_KEYS:
             # third pruning layer: a literal IN predicate reaches the
             # parquet scan as a pushed filter, so ROW GROUPS inside the
             # kept files are skipped by their min/max stats (selective
             # after sorted compaction keys every file). The semi join
             # stays authoritative; the filter is a redundant narrowing,
             # applied pre-fold which is safe for the same per-key-
-            # completeness reason as file pruning. Capped so a huge key
-            # list can't bloat the plan with a kilobyte literal.
+            # completeness reason as file pruning.
             pruned = pruned.where(F.col(key_cols[0]).isin(list(keys)))
-        return pruned.join(F.broadcast(kdf), key_cols, "left_semi")
-
-    def _keys_by_bucket(self, spark, m, schema, keys):
-        """(probe kdf, bucket -> keys, bucket -> xxhash64(key)). The
-        hash column rides the same tiny collect the bucket routing
-        already pays, and is the SAME engine expression the bloom
-        build hashes file keys with — Python never re-implements it."""
-        key_cols = m["key_cols"]
-        if len(key_cols) != 1:
-            raise ValueError("point lookups support single-column keys only")
         kdf = spark.createDataFrame(
             [(k,) for k in keys], T.StructType([schema[key_cols[0]]])
         )
+        return pruned.join(F.broadcast(kdf), key_cols, "left_semi")
+
+    def _read_keys_local(
+        self,
+        spark: SparkSession,
+        m: dict,
+        schema: T.StructType,
+        probe: list,
+        kept: list[dict],
+    ) -> DataFrame:
+        """read_keys' driver path: the kept files read with pyarrow, one
+        LocalRelation per schema id aligned by `_align_file_group`,
+        collected (a Project over a LocalRelation folds to a
+        LocalTableScan, so no job runs), folded per key with
+        `lww_reduce_agg`'s order for MOR tables, tombstones dropped,
+        and the survivors returned as a LocalRelation."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        k0 = m["key_cols"][0]
+        # a NULL probe key matches nothing, as in the semi join
+        probe = [k for k in probe if k is not None]
+        file_schemas: dict[str, tuple] = {}  # sid -> (Spark, Arrow) schema
+        by_sid: dict[str, list] = {}
+        for e in kept if probe else []:
+            tbl = pq.read_table(
+                os.path.join(self.root, e["path"]),
+                filters=[(k0, "in", probe)],
+                coerce_int96_timestamp_unit="us",
+            )
+            # conform the file to the schema it was written under:
+            # columns it predates (`_deleted` before tombstones) become
+            # typed nulls; files other than tiered-compaction output get
+            # their commit version as a `_cv` column, so all files of
+            # one schema id share one LocalRelation
+            sid = str(e["schema_id"])
+            if sid not in file_schemas:
+                fs = self._file_schema(m, sid, stored=True)
+                file_schemas[sid] = (fs, to_arrow_schema(fs))
+            arrow_schema = file_schemas[sid][1]
+            n = tbl.num_rows
+            cols = []
+            for f in arrow_schema:
+                if f.name in tbl.column_names:
+                    cols.append(tbl[f.name].cast(f.type))
+                elif f.name == "_cv":
+                    cols.append(pa.array([int(e.get("cv", 0))] * n, f.type))
+                else:
+                    cols.append(pa.nulls(n, f.type))
+            by_sid.setdefault(sid, []).append(
+                pa.Table.from_arrays(cols, schema=arrow_schema)
+            )
+        target = T.StructType(
+            schema.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
+        )
+        rows = []
+        for sid, tables in by_sid.items():
+            tbl = pa.concat_tables(tables)
+            if tbl.num_rows:
+                df = _local_df(spark, tbl, file_schemas[sid][0])
+                rows.extend(self._align_file_group(m, sid, df, target).collect())
+        if m.get("merge_strategy", "cow") == "mor":
+            # lww_reduce_agg's winner: greatest (version, _cv), a NULL
+            # version below any value (Spark's struct ordering)
+            ver = m["version_col"]
+            names = target.fieldNames() + ["_cv"]
+            ik, icv = names.index(k0), names.index("_cv")
+            iv = names.index(ver) if ver else None
+
+            def order(r):
+                v = r[iv] if iv is not None else None
+                return (v is not None, v, r[icv])
+
+            best: dict = {}
+            for r in rows:
+                k = r[ik]
+                if k not in best or order(r) > order(best[k]):
+                    best[k] = r
+            rows = list(best.values())
+        # COW reads never fold: append-mode files may hold duplicate
+        # keys, and every one of those rows is returned
+        n_out = len(schema.fields)
+        live = [r[:n_out] for r in rows if not r[_DELETED_COL]]
+        out = (
+            LocalDataToArrowConversion.convert(live, schema, False)
+            if live
+            else to_arrow_schema(schema).empty_table()
+        )
+        return _local_df(spark, out, schema)
+
+    def _keys_by_bucket(self, spark, m, schema, keys):
+        """(bucket -> keys, bucket -> xxhash64(key)), probe keys
+        deduplicated. The hash column rides the same tiny collect the
+        bucket routing already pays, and is the SAME engine expression
+        the bloom build hashes file keys with — Python never
+        re-implements it."""
+        key_cols = m["key_cols"]
+        if len(key_cols) != 1:
+            raise ValueError("point lookups support single-column keys only")
         keys_by_bucket: dict[int, list] = {}
         hashes_by_bucket: dict[int, list[int]] = {}
         key_dt = schema[key_cols[0]].dataType
         for k, b, h in _route_keys(spark, keys, key_dt, m["n_buckets"]):
             keys_by_bucket.setdefault(b, []).append(k)
             hashes_by_bucket.setdefault(b, []).append(h)
-        return kdf, keys_by_bucket, hashes_by_bucket
+        return keys_by_bucket, hashes_by_bucket
 
     def scan(
         self,
@@ -1075,7 +1200,7 @@ class LakeTable:
         buckets = sorted(by_bucket)
         pred = _zone_map_pred(by_bucket) if b0 == m["key_cols"][0] else None
         out = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(values) <= 256:
+        if len(values) <= _LOOKUP_MAX_KEYS:
             out = out.where(F.col(b0).isin(list(values)))
         return out.join(F.broadcast(vdf), [b0], "left_semi")
 
@@ -1101,19 +1226,26 @@ class LakeTable:
         tests/EXPLAIN."""
         m = self.manifest()
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        _, keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
+        return self._lookup_files(spark, m, schema, keys)[1]
+
+    def _lookup_files(self, spark, m, schema, keys):
+        """(bucket -> distinct probe keys, kept manifest entries): the
+        buckets the keys route to, and the files there that zone-map
+        and bloom pruning keep."""
+        keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
             spark, m, schema, keys
         )
         pred = self._point_lookup_pred(
             keys_by_bucket, hashes_by_bucket,
             key_type=schema[m["key_cols"][0]].dataType.simpleString(),
         )
-        return [
+        kept = [
             e
             for b in sorted(keys_by_bucket)
             for e in m["buckets"].get(str(b), [])
             if pred(b, e)
         ]
+        return keys_by_bucket, kept
 
     def _point_lookup_pred(
         self,
@@ -2425,15 +2557,37 @@ class LakeTable:
         """Read ONE (schema_id, commit version, stored-cv) file group
         aligned to `target` plus the `_cv` column — the per-group body
         of `_read_buckets`, shared with the one-pass CDF reader."""
+        df = spark.read.schema(self._file_schema(m, sid, stored)).parquet(*paths)
+        return self._align_file_group(m, sid, df, target, None if stored else cv)
+
+    @staticmethod
+    def _file_schema(m: dict, sid: str, stored: bool) -> T.StructType:
+        """The columns a data file written under schema `sid` holds:
+        that schema, the `_deleted` tombstone flag and, for stored-cv
+        (tiered-compaction) files, the per-row `_cv`."""
+        return T.StructType(
+            T.StructType.fromJson(m["schemas"][sid]).fields
+            + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
+            + ([T.StructField("_cv", T.LongType(), True)] if stored else [])
+        )
+
+    @staticmethod
+    def _align_file_group(
+        m: dict,
+        sid: str,
+        df: DataFrame,
+        target: T.StructType,
+        cv: int | None = None,
+    ) -> DataFrame:
+        """Align `df`, rows of files written under schema `sid`, to
+        `target` plus the `_cv` column: dropped lineages out, renames
+        and initial defaults applied, types cast. `cv=None` means `df`
+        already carries `_cv`; otherwise `cv` is stamped on every row.
+        The one alignment both readers share — the parquet scan of
+        `_read_file_group` and read_keys' driver path."""
         cv_field = T.StructField("_cv", T.LongType(), True)
         target_cv = T.StructType(target.fields + [cv_field])
         tgt_types = {f.name: f.dataType for f in target.fields}
-        file_schema = T.StructType(
-            T.StructType.fromJson(m["schemas"][sid]).fields
-            + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-            + ([cv_field] if stored else [])
-        )
-        df = spark.read.schema(file_schema).parquet(*paths)
         ren, dead = _file_column_maps(
             m.get("renames"), m.get("adds"), m.get("drops"), sid
         )
@@ -2457,7 +2611,7 @@ class LakeTable:
             # the column keep explicit NULLs
             if dc not in df.columns and dc in tgt_types:
                 df = df.withColumn(dc, F.lit(dv).cast(tgt_types[dc]))
-        if stored:
+        if cv is None:
             return align_to_schema(df, target_cv)
         return align_to_schema(df, target).withColumn(
             "_cv", F.lit(cv).cast("long")

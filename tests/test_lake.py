@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import types as T
 
 from airbyte_destination_spark.lake import LakeTable
+from airbyte_destination_spark.lake import table as lake_table
 
 SCHEMA = T.StructType(
     [
@@ -349,7 +350,7 @@ def test_table_changes_across_rebucket_boundary(spark, tmp_table_root):
     assert ch == {("a", "update"), ("c", "insert")}
 
 
-def test_zone_map_file_pruning_point_lookup(spark, tmp_path):
+def test_zone_map_file_pruning_point_lookup(spark, tmp_path, monkeypatch):
     """Manifest entries carry (kmin, kmax) footer bounds; read_keys
     prunes FILES inside the candidate buckets with them — on an
     un-compacted MOR table with time-correlated keys a point lookup
@@ -384,10 +385,17 @@ def test_zone_map_file_pruning_point_lookup(spark, tmp_path):
     probe = [2042, 2007]
     cand = t.files_for_keys(spark, probe)
     assert len(cand) < len(entries) // 2, (len(cand), len(entries))
+    # a small lookup is served on the driver: a LocalRelation, no scan
     lookup = t.read_keys(spark, probe)
-    # third layer: the literal IN predicate must reach the parquet scan
-    # so row-group min/max stats prune inside the kept files
     plan = lookup._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    # the Spark path (kept files over the driver byte bound): the third
+    # layer's literal IN predicate must reach the parquet scan so
+    # row-group min/max stats prune inside the kept files
+    with monkeypatch.context() as mp:
+        mp.setattr(lake_table, "_LOOKUP_DRIVER_MAX_BYTES", -1)
+        lookup = t.read_keys(spark, probe)
+        plan = lookup._jdf.queryExecution().executedPlan().toString()
     assert "In(doc_id" in plan, plan
     got = sorted((r.doc_id, r.payload) for r in lookup.collect())
     assert got == [(2007, "p2-7"), (2042, "p2-42")], got
@@ -429,6 +437,34 @@ def test_zone_map_entries_without_stats_fail_open(spark, tmp_path):
     assert len(t.files_for_keys(spark, ["a"])) >= 1
     got = [r.k for r in t.read_keys(spark, ["a"]).collect()]
     assert got == ["a"], got
+
+
+def test_point_lookup_keeps_rows_after_a_file_without_hits(spark, tmp_path):
+    """Three kept files of one schema id, the middle one holding no probe
+    key: the driver path's per-file reads concatenate to record batches
+    [1, 0, 1], and spark.createDataFrame(pa.Table) drops every batch
+    after an empty one unless the chunks are combined first."""
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("k", T.StringType(), False),
+                T.StructField("v", T.LongType(), False),
+            ]
+        ),
+        ["k"],
+        "v",
+        n_buckets=1,
+        merge_strategy="mor",
+    )
+    s = "k string, v long, op string"
+    for i, ks in enumerate([("a", "z"), ("b", "y"), ("c", "x")]):
+        t.merge(
+            spark.createDataFrame([(k, i, "I") for k in ks], s), epoch_id=f"e-{i}"
+        )
+    assert len(t.files_for_keys(spark, ["a", "c"])) == 3
+    got = sorted((r.k, r.v) for r in t.read_keys(spark, ["a", "c"]).collect())
+    assert got == [("a", 0), ("c", 2)], got
 
 
 def test_scan_bounds_pruning_cow_append(spark, tmp_path):
@@ -843,7 +879,7 @@ def test_point_lookup_key_routing_launches_no_spark_job(spark, tmp_path):
     schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
     sc = spark.sparkContext
     sc.setJobGroup("probe-routing", "probe-routing")
-    _, by_bucket, hashes = t._keys_by_bucket(spark, m, schema, [1, 2, 3, 2])
+    by_bucket, hashes = t._keys_by_bucket(spark, m, schema, [1, 2, 3, 2])
     jobs = sc.statusTracker().getJobIdsForGroup("probe-routing")
     sc.setJobGroup(None, None)
     assert sum(len(v) for v in by_bucket.values()) == 3  # deduped
