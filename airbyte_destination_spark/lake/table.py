@@ -454,13 +454,18 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
 # distributed path (which read_keys/read_prefix cap anyway)
 _ROUTE_FOLD_MAX = 8192
 
-# Point-lookup limits. A probe of at most _LOOKUP_MAX_KEYS distinct keys
-# gets a literal IN on the distributed plan (longer lists would bloat
-# the plan with a kilobyte literal); one that also keeps at most
-# _LOOKUP_DRIVER_MAX_BYTES of files after pruning is read on the driver
-# with pyarrow and never launches a Spark job (see read_keys). An entry
-# without a recorded size counts as over the byte bound.
-_LOOKUP_MAX_KEYS = 256
+# Longest probe list pushed to a parquet scan as a literal IN (read_keys'
+# Spark path, read_prefix); longer lists would bloat the plan with a
+# kilobyte literal and rely on the semi join alone.
+_ISIN_MAX_KEYS = 256
+# read_keys reads its kept files on the driver with pyarrow, launching no
+# Spark job, when their manifest sizes sum to at most this; an entry
+# without a recorded size counts as over. The bound is driver memory:
+# pyarrow decodes a kept file whole before filtering, so a lookup's peak
+# follows its largest file (measured driver RSS +0.22 GB for one 62 MB
+# file, +0.91 GB for one 247 MB file). Below it the driver path also
+# took less CPU and wall time than the distributed plan at every size
+# measured (up to 309 MB of kept files and 10k keys, local[4]).
 _LOOKUP_DRIVER_MAX_BYTES = 64 << 20
 
 
@@ -974,20 +979,20 @@ class LakeTable:
         kept; blooms have no false negatives).
 
         Two execution paths return the same rows:
-        - DRIVER path, when the probe has at most _LOOKUP_MAX_KEYS
-          distinct keys AND the kept files' manifest sizes sum to at
-          most _LOOKUP_DRIVER_MAX_BYTES: the kept files are read on
-          the driver with pyarrow (`filters=` does layer 3), aligned by
-          the same code the parquet reader uses, folded per key in
-          Python for MOR tables, and returned as a LocalRelation. No
-          Spark job runs, and the caller's select/collect over the
+        - DRIVER path, when the kept files' manifest sizes sum to at
+          most _LOOKUP_DRIVER_MAX_BYTES, however many keys the probe
+          holds: the kept files are read on the driver with pyarrow
+          (`filters=` does layer 3), aligned by the same code the
+          parquet reader uses, folded per key in Python for MOR
+          tables, and returned as a LocalRelation. No Spark job runs
+          (key lists over _ROUTE_FOLD_MAX pay one routing job, as on
+          the Spark path), and the caller's select/collect over the
           result stays job-free — a short query does not pay the
           distributed pipeline's fixed start-up cost.
-        - SPARK path otherwise (long key lists such as secondary-index
-          probes, or file sets too big for the driver): a parquet scan
-          of the kept files, a pushed literal IN for layer 3 (key lists
-          up to _LOOKUP_MAX_KEYS), the MOR fold, and a broadcast semi
-          join against the probe keys.
+        - SPARK path otherwise (file sets too big for one machine): a
+          parquet scan of the kept files, a pushed literal IN for
+          layer 3 (key lists up to _ISIN_MAX_KEYS), the MOR fold, and
+          a broadcast semi join against the probe keys.
 
         Single-column keys only; `keys` is a list of key values.
         """
@@ -997,16 +1002,15 @@ class LakeTable:
         if len(key_cols) != 1:
             raise ValueError("read_keys supports single-column keys")
         keys_by_bucket, kept = self._lookup_files(spark, m, schema, keys)
-        probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
-        kept_bytes = sum(e.get("bytes", float("inf")) for e in kept)
-        if len(probe) <= _LOOKUP_MAX_KEYS and kept_bytes <= _LOOKUP_DRIVER_MAX_BYTES:
+        if sum(e.get("bytes", float("inf")) for e in kept) <= _LOOKUP_DRIVER_MAX_BYTES:
+            probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
             return self._read_keys_local(spark, m, schema, probe, kept)
         paths = {e["path"] for e in kept}
         pruned = self._resolve(
             spark, m, sorted(keys_by_bucket), schema,
             file_pred=lambda b, e: e["path"] in paths,
         )
-        if len(keys) <= _LOOKUP_MAX_KEYS:
+        if len(keys) <= _ISIN_MAX_KEYS:
             # third pruning layer: a literal IN predicate reaches the
             # parquet scan as a pushed filter, so ROW GROUPS inside the
             # kept files are skipped by their min/max stats (selective
@@ -1200,7 +1204,7 @@ class LakeTable:
         buckets = sorted(by_bucket)
         pred = _zone_map_pred(by_bucket) if b0 == m["key_cols"][0] else None
         out = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(values) <= _LOOKUP_MAX_KEYS:
+        if len(values) <= _ISIN_MAX_KEYS:
             out = out.where(F.col(b0).isin(list(values)))
         return out.join(F.broadcast(vdf), [b0], "left_semi")
 

@@ -1,13 +1,16 @@
 """read_keys' two execution paths and the rule between them.
 
-Small probes are served on the driver (pyarrow reads of the pruned
-files, a LocalRelation result, no Spark job); long key lists and file
-sets over the byte bound take the distributed plan (parquet scan, MOR
-fold, broadcast semi join). Both must return the same rows.
+Probes whose pruned files are small are served on the driver (pyarrow
+reads of those files, a LocalRelation result, no Spark job); file sets
+over the byte bound take the distributed plan (parquet scan, MOR fold,
+broadcast semi join). Both must return the same rows.
 """
 
 import datetime
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -233,22 +236,16 @@ def test_small_lookup_starts_no_spark_job(spark, tmp_path):
     assert len(got) == len(keys) - 1
 
 
-def test_path_rule_key_count_and_byte_bound(spark, tmp_path, monkeypatch):
-    """The driver path runs for at most _LOOKUP_MAX_KEYS distinct keys
-    whose kept files sum to at most _LOOKUP_DRIVER_MAX_BYTES; one key
-    more, one byte less, or an entry without a recorded size takes the
+def test_path_rule_byte_bound(spark, tmp_path, monkeypatch):
+    """The driver path runs when the kept files sum to at most
+    _LOOKUP_DRIVER_MAX_BYTES, however many keys the probe holds; one
+    byte less, or an entry without a recorded size, takes the
     distributed plan."""
 
     def local(keys) -> bool:
         return _plan(t.read_keys(spark, keys)).startswith("LocalTableScan")
 
     t = _bloom_mor_table(spark, tmp_path)
-    cap = lake_table._LOOKUP_MAX_KEYS
-    keys = [f"k{i}" for i in range(cap)]
-    assert local(keys)
-    assert local(keys + keys[:10])  # duplicates do not count
-    assert not local(keys + ["k-extra"])
-
     probe = ["k1", "k250"]
     kept = sum(e["bytes"] for e in t.files_for_keys(spark, probe))
     with monkeypatch.context() as mp:
@@ -259,3 +256,62 @@ def test_path_rule_key_count_and_byte_bound(spark, tmp_path, monkeypatch):
     t.files_for_keys(spark, probe)[0].pop("bytes")
     assert not local(probe)
     assert sorted(r.doc_id for r in t.read_keys(spark, probe).collect()) == probe
+
+
+def test_long_probe_paths_agree(spark, tmp_path, monkeypatch):
+    """A probe longer than the literal-IN cap (the secondary-index
+    lookup's shape) is served on the driver when its files are small,
+    and returns what the distributed plan returns without the IN."""
+    t = _bloom_mor_table(spark, tmp_path)
+    keys = [f"k{i}" for i in range(lake_table._ISIN_MAX_KEYS + 20)]
+    keys += ["absent"] + keys[:10]
+    assert len(set(keys)) > lake_table._ISIN_MAX_KEYS
+    got = _both_paths(spark, t, keys, monkeypatch)
+    assert len(got) == len(set(keys)) - 2  # k5 tombstoned, one absent
+
+
+def test_key_widening_paths_agree(spark, tmp_path, monkeypatch):
+    """An int key widened to long: files written before the widening
+    store int32 keys, and a probe mixing an old key with keys beyond
+    the int32 range reads them identically on both paths. One bucket,
+    so old and new keys route to the same files; MOR, so the base file
+    written before the widening stays live beside the delta."""
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.IntegerType(), False),
+                T.StructField("v", T.LongType(), False),
+                T.StructField("s", T.StringType(), True),
+            ]
+        ),
+        ["doc_id"],
+        "v",
+        n_buckets=1,
+        merge_strategy="mor",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [(i, 1, f"a{i}", "I") for i in range(6)],
+            "doc_id int, v long, s string, op string",
+        ),
+        epoch_id="e-0",
+    )
+    big = (1 << 31) + 5
+    t.merge(
+        spark.createDataFrame(
+            [(big, 2, "big", "I"), (3, 2, "b3", "U")],
+            "doc_id long, v long, s string, op string",
+        ),
+        epoch_id="e-1",
+    )
+    assert t.schema()["doc_id"].dataType == T.LongType()
+    stored = {
+        pq.read_schema(os.path.join(t.root, e["path"])).field("doc_id").type
+        for e in t.manifest()["buckets"]["0"]
+    }
+    assert stored == {pa.int32(), pa.int64()}
+    got = _both_paths(spark, t, [1, 3, big, 1 << 40, -(1 << 40)], monkeypatch)
+    assert sorted(tuple(r.values()) for r in got) == [
+        (1, 1, "a1"), (3, 2, "b3"), (big, 2, "big")
+    ]
