@@ -25,9 +25,9 @@ Design:
   (xxhash64(key), input_file_name) from the needed files, group by
   file, fold each group's hashes into a bit array vectorized in numpy
   (Arrow-batched applyInPandas — key payloads never move).
-- Probe hashes are computed by the SAME engine expression
-  (xxhash64, seed 42) inside the tiny probe-key job read_keys already
-  runs, so Python never re-implements the hash. Bit positions derive
+- Probe hashes are Spark's xxhash64 (seed 42) of each probe key,
+  computed on the driver by lake/hashing.py (pinned to the engine
+  expression by tests/test_hashing.py). Bit positions derive
   from the one 64-bit hash via Kirsch-Mitzenmacher double hashing:
   pos_i = (h1 + i*h2) mod m with h2 forced odd — identical uint64
   arithmetic numpy-side (build) and int-side (probe).

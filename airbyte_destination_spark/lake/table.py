@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from airbyte_destination_spark.lake.hashing import key_hashes
 from airbyte_destination_spark.lake.schema import align_to_schema, merge_schemas
 
 _META = "_meta"
@@ -386,6 +387,32 @@ def _bucket_cols(m: dict) -> list[str]:
     return m.get("bucket_cols") or m["key_cols"]
 
 
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _rehash_cols(m: dict, current: T.StructType, merged: T.StructType) -> list[str]:
+    """The bucket columns whose hash changes from `current` to `merged`
+    (schema evolution). A key column may change type only by an
+    integral promotion: byte, short and int all hash as an int in
+    Spark, so promotions among them keep every key's bucket, while a
+    promotion to long moves keys (unless there is one bucket). Any
+    other change — to float, double, decimal, or the collapse to
+    string — would change key equality and raises ValueError."""
+    out = []
+    for c in m["key_cols"]:
+        old, new = current[c].dataType, merged[c].dataType
+        if old == new:
+            continue
+        if not (isinstance(old, _INTEGRAL) and isinstance(new, _INTEGRAL)):
+            raise ValueError(
+                f"key column {c!r} cannot change type from "
+                f"{old.simpleString()} to {new.simpleString()}"
+            )
+        if isinstance(new, T.LongType) and c in _bucket_cols(m) and m["n_buckets"] > 1:
+            out.append(c)
+    return out
+
+
 def _zone_map_pred(keys_by_bucket: dict[int, list]):
     """file_pred keeping a file iff it lacks zone-map bounds or some
     probe key of its bucket falls inside them. Type-mismatched bounds
@@ -450,10 +477,6 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-# literal-fold routing stays plan-bounded; larger probe lists take the
-# distributed path (which read_keys/read_prefix cap anyway)
-_ROUTE_FOLD_MAX = 8192
-
 # Longest probe list pushed to a parquet scan as a literal IN (read_keys'
 # Spark path, read_prefix); longer lists would bloat the plan with a
 # kilobyte literal and rely on the semi join alone.
@@ -469,52 +492,24 @@ _ISIN_MAX_KEYS = 256
 _LOOKUP_DRIVER_MAX_BYTES = 64 << 20
 
 
-def _route_keys(spark: SparkSession, keys: list, key_dt, n_buckets: int):
-    """[(key, bucket, xxhash64)] for a probe key list, deduplicated,
-    WITHOUT launching a Spark job when the list is small: the bucket and
-    hash expressions are evaluated via ONE `transform` over a single
-    array literal on a one-row VALUES relation, which Catalyst
-    constant-folds into a LocalTableScan whose collect is driver-side
-    (verified job-free; a createDataFrame-based projection is an
-    ExistingRDD scan and always pays one job). One array literal keeps
-    analysis O(1) in expression count — the earlier two-expressions-
-    per-key form spent ~0.4 s of driver time per 1000 probe keys in
-    the analyzer/optimizer alone, which is why the fold cap can now sit
-    at 8192. The expressions are the SAME engine expressions bucket
-    placement and the bloom build use — Python never re-implements the
-    hash. Probe lists beyond _ROUTE_FOLD_MAX (or containing NULLs)
-    fall back to one distributed projection job."""
-    uniq = []
+def _route_keys(keys: list, key_dt, n_buckets: int) -> list[tuple]:
+    """[(key, bucket, xxhash64)] for a probe key list: NULLs dropped (a
+    NULL key matches nothing), duplicates dropped, each key's bucket
+    `pmod(murmur3, n_buckets)` as `bucket_expr` places it and its
+    xxhash64 as the bloom build hashes it — both computed by
+    lake/hashing.py on the driver, so routing makes no JVM call. A key
+    type the module does not hash raises TypeError here, before any
+    file is read."""
+    hashes = key_hashes(key_dt)
+    out = []
     seen = set()
     for k in keys:
-        if k not in seen:
-            seen.add(k)
-            uniq.append(k)
-    simple = key_dt.simpleString()
-    if uniq and len(uniq) <= _ROUTE_FOLD_MAX and None not in seen:
-        arr = F.lit(uniq).cast(f"array<{simple}>")
-        expr = F.transform(
-            arr,
-            lambda kl: F.struct(
-                F.pmod(F.hash(kl), F.lit(n_buckets)).cast("int").alias("b"),
-                F.xxhash64(kl).alias("h"),
-            ),
-        ).alias("r")
-        row = spark.sql("VALUES (1)").select(expr).collect()[0]
-        return [
-            (k, int(r["b"]), int(r["h"])) for k, r in zip(uniq, row["r"])
-        ]
-    kdf = spark.createDataFrame(
-        [(k,) for k in uniq], T.StructType([T.StructField("k", key_dt, True)])
-    )
-    return [
-        (r[0], int(r[1]), int(r[2]))
-        for r in kdf.select(
-            F.col("k"),
-            F.pmod(F.hash("k"), F.lit(n_buckets)).cast("int"),
-            F.xxhash64("k"),
-        ).collect()
-    ]
+        if k is None or k in seen:
+            continue
+        seen.add(k)
+        m3, xx = hashes(k)
+        out.append((k, m3 % n_buckets, xx))
+    return out
 
 
 def _local_df(spark: SparkSession, tbl, schema: T.StructType) -> DataFrame:
@@ -985,32 +980,33 @@ class LakeTable:
           (`filters=` does layer 3), aligned by the same code the
           parquet reader uses, folded per key in Python for MOR
           tables, and returned as a LocalRelation. No Spark job runs
-          (key lists over _ROUTE_FOLD_MAX pay one routing job, as on
-          the Spark path), and the caller's select/collect over the
-          result stays job-free — a short query does not pay the
-          distributed pipeline's fixed start-up cost.
+          (keys are routed by lake/hashing.py, with no JVM call), and
+          the caller's select/collect over the result stays job-free —
+          a short query does not pay the distributed pipeline's fixed
+          start-up cost.
         - SPARK path otherwise (file sets too big for one machine): a
           parquet scan of the kept files, a pushed literal IN for
           layer 3 (key lists up to _ISIN_MAX_KEYS), the MOR fold, and
           a broadcast semi join against the probe keys.
 
-        Single-column keys only; `keys` is a list of key values.
+        Single-column keys only; `keys` is a list of key values, and a
+        NULL among them matches nothing.
         """
         m = self.manifest()
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         key_cols = m["key_cols"]
         if len(key_cols) != 1:
             raise ValueError("read_keys supports single-column keys")
-        keys_by_bucket, kept = self._lookup_files(spark, m, schema, keys)
+        keys_by_bucket, kept = self._lookup_files(m, schema, keys)
+        probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
         if sum(e.get("bytes", float("inf")) for e in kept) <= _LOOKUP_DRIVER_MAX_BYTES:
-            probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
             return self._read_keys_local(spark, m, schema, probe, kept)
         paths = {e["path"] for e in kept}
         pruned = self._resolve(
             spark, m, sorted(keys_by_bucket), schema,
             file_pred=lambda b, e: e["path"] in paths,
         )
-        if len(keys) <= _ISIN_MAX_KEYS:
+        if len(probe) <= _ISIN_MAX_KEYS:
             # third pruning layer: a literal IN predicate reaches the
             # parquet scan as a pushed filter, so ROW GROUPS inside the
             # kept files are skipped by their min/max stats (selective
@@ -1018,9 +1014,9 @@ class LakeTable:
             # stays authoritative; the filter is a redundant narrowing,
             # applied pre-fold which is safe for the same per-key-
             # completeness reason as file pruning.
-            pruned = pruned.where(F.col(key_cols[0]).isin(list(keys)))
+            pruned = pruned.where(F.col(key_cols[0]).isin(probe))
         kdf = spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([schema[key_cols[0]]])
+            [(k,) for k in probe], T.StructType([schema[key_cols[0]]])
         )
         return pruned.join(F.broadcast(kdf), key_cols, "left_semi")
 
@@ -1044,8 +1040,6 @@ class LakeTable:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         k0 = m["key_cols"][0]
-        # a NULL probe key matches nothing, as in the semi join
-        probe = [k for k in probe if k is not None]
         file_schemas: dict[str, tuple] = {}  # sid -> (Spark, Arrow) schema
         by_sid: dict[str, list] = {}
         for e in kept if probe else []:
@@ -1114,19 +1108,16 @@ class LakeTable:
         )
         return _local_df(spark, out, schema)
 
-    def _keys_by_bucket(self, spark, m, schema, keys):
+    def _keys_by_bucket(self, m, schema, keys):
         """(bucket -> keys, bucket -> xxhash64(key)), probe keys
-        deduplicated. The hash column rides the same tiny collect the
-        bucket routing already pays, and is the SAME engine expression
-        the bloom build hashes file keys with — Python never
-        re-implements it."""
+        deduplicated and NULLs dropped (`_route_keys`)."""
         key_cols = m["key_cols"]
         if len(key_cols) != 1:
             raise ValueError("point lookups support single-column keys only")
         keys_by_bucket: dict[int, list] = {}
         hashes_by_bucket: dict[int, list[int]] = {}
         key_dt = schema[key_cols[0]].dataType
-        for k, b, h in _route_keys(spark, keys, key_dt, m["n_buckets"]):
+        for k, b, h in _route_keys(keys, key_dt, m["n_buckets"]):
             keys_by_bucket.setdefault(b, []).append(k)
             hashes_by_bucket.setdefault(b, []).append(h)
         return keys_by_bucket, hashes_by_bucket
@@ -1186,26 +1177,23 @@ class LakeTable:
         zone-map file skip (when the bucket column is also the first
         key column — the secondary-index layout), and a pushed IN
         predicate. This is the index-probe read: the table may hold
-        many rows per prefix value (one per full key)."""
+        many rows per prefix value (one per full key). A NULL value
+        matches nothing."""
         m = self.manifest()
         bcols = _bucket_cols(m)
         if len(bcols) != 1:
             raise ValueError("read_prefix requires a single bucket column")
         b0 = bcols[0]
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        vdf = spark.createDataFrame([(v,) for v in values], T.StructType([schema[b0]]))
         by_bucket: dict[int, list] = {}
-        # job-free literal-fold routing for small probe lists (see
-        # _route_keys)
-        for v, b, _h in _route_keys(
-            spark, values, schema[b0].dataType, m["n_buckets"]
-        ):
+        for v, b, _h in _route_keys(values, schema[b0].dataType, m["n_buckets"]):
             by_bucket.setdefault(b, []).append(v)
-        buckets = sorted(by_bucket)
+        probe = [v for vs in by_bucket.values() for v in vs]  # distinct
         pred = _zone_map_pred(by_bucket) if b0 == m["key_cols"][0] else None
-        out = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(values) <= _ISIN_MAX_KEYS:
-            out = out.where(F.col(b0).isin(list(values)))
+        out = self._resolve(spark, m, sorted(by_bucket), schema, file_pred=pred)
+        if len(probe) <= _ISIN_MAX_KEYS:
+            out = out.where(F.col(b0).isin(probe))
+        vdf = spark.createDataFrame([(v,) for v in probe], T.StructType([schema[b0]]))
         return out.join(F.broadcast(vdf), [b0], "left_semi")
 
     def files_for_bounds(self, bounds: dict[str, tuple]) -> list[dict]:
@@ -1227,18 +1215,16 @@ class LakeTable:
     def files_for_keys(self, spark: SparkSession, keys: list) -> list[dict]:
         """The manifest entries read_keys would scan for `keys` (after
         bucket + zone-map + bloom pruning) — introspection for
-        tests/EXPLAIN."""
+        tests/EXPLAIN. Makes no JVM call; `spark` is unused."""
         m = self.manifest()
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        return self._lookup_files(spark, m, schema, keys)[1]
+        return self._lookup_files(m, schema, keys)[1]
 
-    def _lookup_files(self, spark, m, schema, keys):
+    def _lookup_files(self, m, schema, keys):
         """(bucket -> distinct probe keys, kept manifest entries): the
         buckets the keys route to, and the files there that zone-map
         and bloom pruning keep."""
-        keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
-            spark, m, schema, keys
-        )
+        keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(m, schema, keys)
         pred = self._point_lookup_pred(
             keys_by_bucket, hashes_by_bucket,
             key_type=schema[m["key_cols"][0]].dataType.simpleString(),
@@ -1935,21 +1921,8 @@ class LakeTable:
             m = self.manifest(base)
             if n_buckets == m["n_buckets"]:
                 return base
-            schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-            folded = self._read_buckets(
-                spark, m, [int(b) for b in m["buckets"]], schema
-            )
-            if m.get("merge_strategy", "cow") == "mor":
-                from airbyte_destination_spark.operators.dedup import lww_reduce_agg
-
-                ver = m["version_col"]
-                folded = lww_reduce_agg(
-                    folded, m["key_cols"], ([ver] if ver else []) + ["_cv"]
-                )
             m["n_buckets"] = n_buckets
-            folded = self._with_bucket(folded.drop("_cv"), m)
-            new_files = self._write_bucketed(folded, m, base + 1, sort_keys=True, mark_base=True)
-            m["buckets"] = new_files
+            m["buckets"] = self._rewrite_all(spark, m, base + 1)
             m["operation"] = "rebucket"
             m["epoch_id"] = None
             m["lineage"] = []
@@ -1960,6 +1933,24 @@ class LakeTable:
                     raise
                 _conflict_backoff(attempt)
         raise CommitConflict("unreachable")
+
+    def _rewrite_all(self, spark: SparkSession, m: dict, version: int) -> dict:
+        """Every row of `m`'s files read under its current schema, MOR
+        deltas folded (tombstones kept), and written back as key-sorted
+        base files bucketed by `m`'s bucket function and n_buckets —
+        the rewrite `rebucket` and a key widening (`_evolve_if_needed`)
+        share. Returns the new {bucket: [file entries]}."""
+        schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
+        folded = self._read_buckets(spark, m, [int(b) for b in m["buckets"]], schema)
+        if m.get("merge_strategy", "cow") == "mor":
+            from airbyte_destination_spark.operators.dedup import lww_reduce_agg
+
+            ver = m["version_col"]
+            folded = lww_reduce_agg(
+                folded, m["key_cols"], ([ver] if ver else []) + ["_cv"]
+            )
+        folded = self._with_bucket(folded.drop("_cv"), m)
+        return self._write_bucketed(folded, m, version, sort_keys=True, mark_base=True)
 
     # --------------------------------------------------- bucket rescale
 
@@ -2773,11 +2764,24 @@ class LakeTable:
     def _with_bucket(self, df: DataFrame, m: dict) -> DataFrame:
         return df.withColumn(_BUCKET_COL, bucket_expr(_bucket_cols(m), m["n_buckets"]))
 
-    def _evolve_if_needed(self, m: dict, incoming: T.StructType) -> T.StructType:
-        """Mutate manifest-in-progress to include evolved schema; return it."""
+    def _evolve_if_needed(
+        self, spark: SparkSession, m: dict, incoming: T.StructType
+    ) -> T.StructType:
+        """Mutate manifest-in-progress to include evolved schema; return
+        it. Key columns may only widen by an integral promotion
+        (`_rehash_cols` raises otherwise). A promotion of a bucket
+        column to long also rewrites every file of `m` under the new
+        type, before the caller writes its rows: Spark hashes an int and
+        the same value as a long differently, so without it a key's
+        bucket would depend on the type its row was written under (a COW
+        merge would leave the old row in its old bucket, and lookups
+        would miss it). The rewrite lands in the caller's commit, so
+        every committed version is consistent; its files take the base
+        version as their `cv`, below the caller's new files."""
         current = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         merged = merge_schemas(current, incoming)
         if merged != current:
+            rehash = _rehash_cols(m, current, merged)
             new_names = {f.name for f in merged.fields} - {
                 f.name for f in current.fields
             }
@@ -2796,6 +2800,8 @@ class LakeTable:
             new_id = max(int(k) for k in m["schemas"]) + 1
             m["schemas"][str(new_id)] = merged.jsonValue()
             m["schema_id"] = new_id
+            if rehash and any(m["buckets"].values()):
+                m["buckets"] = self._rewrite_all(spark, m, m["version"])
         return merged
 
     def append(self, df: DataFrame, epoch_id: str | None = None) -> MergeStats:
@@ -3001,7 +3007,7 @@ class LakeTable:
                 self._recover_orphan()
                 base = self.current_version()
                 m = self.manifest(base)
-                self._evolve_if_needed(m, target)
+                self._evolve_if_needed(spark, m, target)
                 m["operation"] = f"backfill_schema({sorted(exprs)})"
                 m["epoch_id"] = schema_epoch
                 m["applied_epochs"][schema_epoch] = base + 1
@@ -3906,7 +3912,7 @@ class LakeTable:
             has_op = "op" in batch.columns
             skip = {"op", *carry_cols}
             data_fields = [f for f in batch.schema.fields if f.name not in skip]
-            schema = self._evolve_if_needed(m, T.StructType(data_fields))
+            schema = self._evolve_if_needed(spark, m, T.StructType(data_fields))
 
             # align data columns to the (possibly evolved) table schema,
             # carrying `op` and any carry_cols through as trailing columns

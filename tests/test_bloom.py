@@ -124,10 +124,13 @@ def test_bloom_survives_rebucket(spark, tmp_path):
 
 
 def test_key_widening_invalidates_stale_blooms(spark, tmp_path):
-    """xxhash64(int 5) != xxhash64(long 5): blooms built before a
-    key-column widening would be silent FALSE NEGATIVES. Entries record
-    their build-time key type; probes ignore mismatched entries (fail
-    open) and the next incremental build re-indexes them."""
+    """xxhash64(int 8) != xxhash64(long 8), and at 2 buckets int 8 and
+    long 8 also route to different buckets: blooms built before a
+    key-column widening would be silent FALSE NEGATIVES, and the row
+    itself would sit in the wrong bucket. The widening rewrites the
+    table under the long key; entries record their build-time key type,
+    probes ignore mismatched entries (fail open) and the next
+    incremental build re-indexes every file."""
     t = LakeTable(str(tmp_path / "w"))
     t.create(
         T.StructType(
@@ -157,12 +160,12 @@ def test_key_widening_invalidates_stale_blooms(spark, tmp_path):
     )
     # pre-widening entries are now unusable: lookups must FAIL OPEN and
     # still find the row (a stale entry would silently drop it)
-    rows = t.read_keys(spark, [5]).collect()
-    assert [r["doc_id"] for r in rows] == [5]
+    rows = t.read_keys(spark, [8]).collect()
+    assert [r["doc_id"] for r in rows] == [8]
     d = t.describe()
     assert d["files_with_blooms"] == 0  # stale ktype not counted
     rebuilt = t.build_bloom_index(spark)  # ktype mismatch == missing
     assert rebuilt == d["n_data_files"]
-    rows = t.read_keys(spark, [5]).collect()
-    assert [r["doc_id"] for r in rows] == [5]
+    rows = t.read_keys(spark, [8]).collect()
+    assert [r["doc_id"] for r in rows] == [8]
     assert t.read_keys(spark, [1_000_000_000_000]).count() == 1

@@ -854,11 +854,10 @@ def test_snapshot_tags_pin_reads_and_expiry(spark, tmp_path, monkeypatch):
 
 
 def test_point_lookup_key_routing_launches_no_spark_job(spark, tmp_path):
-    """Round-6 optimization contract: routing a probe key list to
-    buckets (read_keys/_keys_by_bucket) is a projection over a
-    LocalRelation that the optimizer folds driver-side — it must not
-    launch a Spark job (it previously paid a full distinct+collect job
-    per point lookup)."""
+    """Routing a probe key list to buckets (read_keys/_keys_by_bucket)
+    hashes the keys on the driver (lake/hashing.py) — it must not
+    launch a Spark job (it once paid a full distinct+collect job per
+    point lookup)."""
     from pyspark.sql import types as T
 
     from airbyte_destination_spark.lake import LakeTable
@@ -879,7 +878,7 @@ def test_point_lookup_key_routing_launches_no_spark_job(spark, tmp_path):
     schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
     sc = spark.sparkContext
     sc.setJobGroup("probe-routing", "probe-routing")
-    by_bucket, hashes = t._keys_by_bucket(spark, m, schema, [1, 2, 3, 2])
+    by_bucket, hashes = t._keys_by_bucket(m, schema, [1, 2, 3, 2])
     jobs = sc.statusTracker().getJobIdsForGroup("probe-routing")
     sc.setJobGroup(None, None)
     assert sum(len(v) for v in by_bucket.values()) == 3  # deduped

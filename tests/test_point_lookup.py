@@ -315,3 +315,49 @@ def test_key_widening_paths_agree(spark, tmp_path, monkeypatch):
     assert sorted(tuple(r.values()) for r in got) == [
         (1, 1, "a1"), (3, 2, "b3"), (big, 2, "big")
     ]
+
+
+def test_null_probe_keys_match_nothing(spark, tmp_path):
+    """A NULL probe key is dropped before routing: read_keys and
+    read_prefix with a None among the keys return what the same calls
+    without it return, and the read_keys call stays job-free."""
+    t = _bloom_mor_table(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("null-probe", "null-probe")
+    try:
+        with_null = _rows(t.read_keys(spark, [None, "k7"]))
+        jobs = sc.statusTracker().getJobIdsForGroup("null-probe")
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == [], f"point lookup launched Spark jobs: {jobs}"
+    assert with_null == _rows(t.read_keys(spark, ["k7"]))
+    assert [r["doc_id"] for r in with_null] == ["k7"]
+    assert _rows(t.read_keys(spark, [None])) == []
+    assert _rows(t.read_prefix(spark, [None, "k7"])) == _rows(
+        t.read_prefix(spark, ["k7"])
+    )
+    assert [r["doc_id"] for r in _rows(t.read_prefix(spark, [None, "k7"]))] == ["k7"]
+
+
+def test_key_routing_makes_no_py4j_call(spark, tmp_path, monkeypatch):
+    """files_for_keys on a warm MOR table with blooms (routing, zone
+    maps and bloom probes) sends no command through the py4j gateway:
+    the probe keys are hashed in Python (lake/hashing.py)."""
+    t = _bloom_mor_table(spark, tmp_path)
+    keys = [f"k{i}" for i in range(0, 450, 30)] + ["k5", "absent"]
+    warm = t.files_for_keys(spark, keys)
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    spark.conf.get("spark.sql.shuffle.partitions")  # the wrapper counts
+    assert sent, "the gateway wrapper saw no command"
+    sent.clear()
+    files = t.files_for_keys(spark, keys)
+    assert sent == [], f"key routing sent {len(sent)} py4j commands"
+    assert files == warm and files
