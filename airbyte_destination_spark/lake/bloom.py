@@ -134,6 +134,20 @@ def write_shard(root: str, bucket: int, entries: dict[str, dict]) -> None:
     os.replace(tmp, p)
 
 
+# byte, short and int values hash as an int (lake/hashing.py's _INT
+# kind), so a promotion among them keeps every entry's hashes
+_INT_TYPES = frozenset({"tinyint", "smallint", "int"})
+
+
+def same_hashes(ktype: str | None, key_type: str) -> bool:
+    """Whether an entry built under key type `ktype` holds the hashes
+    a probe of key type `key_type` computes (both simpleString names)."""
+    def family(t):
+        return "int" if t in _INT_TYPES else t
+
+    return ktype is not None and family(ktype) == family(key_type)
+
+
 def bloom_pred(
     raw: dict[str, dict],
     hashes_by_bucket: dict[int, list[int]],
@@ -148,9 +162,11 @@ def bloom_pred(
 
     `key_type` guards schema evolution: an entry records the key
     column's type at build time (`ktype`); if the key has since
-    WIDENED (int -> long), xxhash64 of the same logical value differs
+    WIDENED to long, xxhash64 of the same logical value differs
     between the old build and the new probe, so a stale entry would be
-    a silent FALSE NEGATIVE — such entries are ignored instead.
+    a silent FALSE NEGATIVE — such entries are ignored instead. A
+    promotion among byte, short and int keeps the hashes, so it keeps
+    the entries (`same_hashes`).
 
     Entries decode lazily (base64 + unpackbits can be MBs per entry):
     only files that survive the earlier pruning layers and actually
@@ -162,8 +178,8 @@ def bloom_pred(
         d = raw.get(path)
         if d is None:
             return True
-        if key_type is not None and d.get("ktype") != key_type:
-            return True  # built under another key type: fail open
+        if key_type is not None and not same_hashes(d.get("ktype"), key_type):
+            return True  # built under other key hashes: fail open
         be = decoded.get(path, False)
         if be is False:
             try:

@@ -1289,12 +1289,14 @@ class LakeTable:
         fail open at probe time; `describe()` reports coverage.
 
         Entries record the key column's type at build time (`ktype`):
-        a key-column WIDENING (int -> long) changes xxhash64 of the
-        same logical value, so pre-widening entries are unusable —
-        probes ignore them (fail open) and this build re-indexes them
-        (a ktype mismatch counts as missing). Shard writes also PRUNE
-        entries for files no longer in the current manifest, so shard
-        size tracks live files, not table history."""
+        a key-column WIDENING to long changes xxhash64 of the same
+        logical value, so pre-widening entries are unusable — probes
+        ignore them (fail open) and this build re-indexes them (a
+        ktype whose hashes differ counts as missing). Byte, short and
+        int hash alike, so a promotion among them keeps every entry.
+        Shard writes also PRUNE entries for files no longer in the
+        current manifest, so shard size tracks live files, not table
+        history."""
         from airbyte_destination_spark.lake import bloom as _bloom
 
         m = self.manifest()
@@ -1314,7 +1316,7 @@ class LakeTable:
             live_paths[b] = {e["path"] for e in entries}
             for e in entries:
                 have = shards[b].get(e["path"]) if only_missing else None
-                if have is not None and have.get("ktype") == ktype:
+                if have is not None and _bloom.same_hashes(have.get("ktype"), ktype):
                     continue
                 by_schema.setdefault(str(e["schema_id"]), []).append((b, e["path"]))
         if not by_schema:
@@ -1405,119 +1407,38 @@ class LakeTable:
 
         NET semantics (like Iceberg CDF between non-adjacent snapshots):
         a key inserted and deleted inside the window emits nothing.
+        With `pre_images=True` an update emits TWO rows, Delta CDF's
+        update_preimage/update_postimage shape, which signed
+        incremental aggregate maintenance needs (the -pre +post
+        contributions).
 
-        Plan shape (one-pass fast path — the common case): every data
-        file of EITHER snapshot is read ONCE, tagged with literal
-        membership flags for the before/after file sets, and a single
-        key-grouped conditional LWW fold (max_by over (version, _cv),
-        the exact read-side ordering) computes both sides' visible
-        winners — one scan + ONE exchange, replacing two snapshot
-        reads (each a scan, plus a fold exchange on MOR) and a
-        full-outer join. Shared files (untouched buckets, MOR bases)
-        are scanned once instead of twice. When the window crosses
-        schema evolution or a strategy change, the general two-read
-        full-outer-join path below still applies — both sides
-        hash-partition on the key columns, no broadcast of table-sized
-        data; with a version column the changed-row test compares
-        versions only (LWW invariant: one (key, version) is one row),
-        so payload columns never widen the join condition.
-        """
+        Defined on KEY-UNIQUE snapshots: each side is the table's
+        per-key last-writer-wins state. Every `Destination` table is
+        one (append and overwrite streams key on the raw record id);
+        a LakeTable whose COW files hold duplicate keys reports one
+        winner per key and side.
+
+        Plan shape: every data file of EITHER snapshot is read ONCE,
+        tagged with literal flags for its membership in the before and
+        after file sets, and one key-grouped conditional LWW fold
+        (max_by over (version, _cv), the read-side ordering) computes
+        both sides' visible winners: one scan and ONE exchange. Files
+        both snapshots share (untouched buckets, MOR bases) are scanned
+        once. With a version column an update is a version change (one
+        (key, version) is one row); without one it is a payload-hash
+        change. Tombstone winners make a key invisible on that side,
+        like read()'s post-fold filter.
+
+        Both sides come out in the after-snapshot's schema. A file
+        aligns through the after-manifest's column lineage, so a
+        metadata-only rename, add, default or drop + re-add changes no
+        row and a pre-image reads under the current names. The
+        exception is a before-only file whose schema id the after-
+        manifest holds with another schema or not at all (a rollback
+        discarded that schema and may have reused the id): it aligns
+        through the before-manifest, then by name to the after-schema."""
         m = self.manifest(v_to)
         mb = self.manifest(v_from)
-        key_cols = m["key_cols"]
-        ver = m["version_col"]
-        if (
-            mb["schema_id"] == m["schema_id"]
-            and mb["schemas"] == m["schemas"]
-            and mb.get("renames") == m.get("renames")
-            and mb.get("adds") == m.get("adds")
-            and mb.get("drops") == m.get("drops")
-            and mb.get("defaults") == m.get("defaults")
-            and mb["key_cols"] == key_cols
-            and mb["version_col"] == ver
-            and mb.get("merge_strategy", "cow") == m.get("merge_strategy", "cow")
-        ):
-            return self._changes_one_pass(spark, mb, m, pre_images)
-        after = self.read(spark, version=v_to)
-        before = self.read(spark, version=v_from)
-        cols = after.columns
-        # the window may span schema evolution: align the BEFORE
-        # snapshot to the after-schema (typed nulls for columns added
-        # inside the window, casts for widened ones) so the diff join
-        # resolves; pre-images of such rows carry null in new columns,
-        # which is exactly what the old snapshot said.
-        before_types = {f.name: f.dataType for f in before.schema.fields}
-        for f in after.schema.fields:
-            if f.name not in before_types:
-                before = before.withColumn(f.name, F.lit(None).cast(f.dataType))
-            elif before_types[f.name] != f.dataType:
-                before = before.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        before = before.select(cols)
-        af = after.select([F.col(c).alias(f"a_{c}") for c in cols])
-        bf = before.select([F.col(c).alias(f"b_{c}") for c in cols])
-        cond = None
-        for k in key_cols:
-            e = af[f"a_{k}"].eqNullSafe(bf[f"b_{k}"])
-            cond = e if cond is None else (cond & e)
-        j = af.join(bf, cond, "full_outer")
-        is_ins = F.col(f"b_{key_cols[0]}").isNull()
-        is_del = F.col(f"a_{key_cols[0]}").isNull()
-        if ver is not None:
-            differs = F.col(f"a_{ver}") != F.col(f"b_{ver}")
-        else:
-            payload = [c for c in cols if c not in key_cols]
-            differs = F.xxhash64(*[F.col(f"a_{c}") for c in payload]) != F.xxhash64(
-                *[F.col(f"b_{c}") for c in payload]
-            )
-        # With pre_images=True an update emits TWO rows — Delta CDF's
-        # update_preimage/update_postimage shape — which is what signed
-        # incremental aggregate maintenance needs (the -pre +post
-        # contributions). Built by exploding a per-row entry array so
-        # the full-outer join runs ONCE either way.
-        payload_cols = [c for c in cols if c not in key_cols]
-
-        def _img(side: str, ct: str):
-            return F.struct(
-                F.lit(ct).alias("change_type"),
-                *[F.col(f"{side}_{c}").alias(c) for c in payload_cols],
-            )
-
-        upd = (
-            F.array(_img("b", "update_preimage"), _img("a", "update_postimage"))
-            if pre_images
-            else F.array(_img("a", "update"))
-        )
-        entries = (
-            F.when(is_ins, F.array(_img("a", "insert")))
-            .when(is_del, F.array(_img("b", "delete")))
-            .otherwise(upd)
-        )
-        keys_out = [
-            F.coalesce(F.col(f"a_{k}"), F.col(f"b_{k}")).alias(k) for k in key_cols
-        ]
-        return (
-            j.where(is_ins | is_del | differs)
-            .select(*keys_out, F.explode(entries).alias("__c"))
-            .select(
-                *key_cols,
-                F.col("__c.change_type").alias("change_type"),
-                *[F.col(f"__c.{c}").alias(c) for c in payload_cols],
-            )
-        )
-
-    def _changes_one_pass(
-        self, spark: SparkSession, mb: dict, m: dict, pre_images: bool
-    ) -> DataFrame:
-        """Single-pass CDF (see table_changes): read the UNION of both
-        snapshots' data files once, each file flagged with its
-        membership in the before/after file sets, then fold both
-        sides' visible winners in one key-grouped aggregate. The
-        conditional max_by skips rows whose side flag is false (a null
-        ordering never wins) and uses the identical (version, _cv)
-        ordering as the read-side LWW fold, so each side's winner —
-        and therefore every emitted change row — matches the two-read
-        join path bit for bit. Tombstone winners make a key invisible
-        on that side, exactly like read()'s post-fold filter."""
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         key_cols = m["key_cols"]
         ver = m["version_col"]
@@ -1548,10 +1469,17 @@ class LakeTable:
                 )
         if not by_group:
             return spark.createDataFrame([], out_schema)
+
+        def lineage(sid: str, in_a: bool) -> dict:
+            if in_a or m["schemas"].get(sid) == mb["schemas"][sid]:
+                return m
+            return mb
+
         parts = [
-            self._read_file_group(spark, m, sid, cv, stored, paths, target)
-            .withColumn("_in_b", F.lit(in_b))
-            .withColumn("_in_a", F.lit(in_a))
+            self._read_file_group(
+                spark, lineage(sid, in_a), sid, cv, stored, paths, target
+            )
+            .withColumns({"_in_b": F.lit(in_b), "_in_a": F.lit(in_a)})
             for (sid, cv, stored, in_b, in_a), paths in by_group.items()
         ]
         src = parts[0]
@@ -2550,8 +2478,10 @@ class LakeTable:
         target: T.StructType,
     ) -> DataFrame:
         """Read ONE (schema_id, commit version, stored-cv) file group
-        aligned to `target` plus the `_cv` column — the per-group body
-        of `_read_buckets`, shared with the one-pass CDF reader."""
+        aligned through manifest `m`'s column lineage to `target` plus
+        the `_cv` column — the per-group body of `_read_buckets`, shared
+        with `table_changes`, which passes the manifest each group
+        aligns through."""
         df = spark.read.schema(self._file_schema(m, sid, stored)).parquet(*paths)
         return self._align_file_group(m, sid, df, target, None if stored else cv)
 
@@ -3200,10 +3130,11 @@ class LakeTable:
             for e in fs:
                 n_files += 1
                 with_stats += 1 if "kmin" in e else 0
-                # only entries built under the CURRENT key type are
-                # usable at probe time (see build_bloom_index)
+                # only entries whose hashes match the CURRENT key type
+                # are usable at probe time (see build_bloom_index)
                 have = shard.get(e["path"])
-                with_bloom += 1 if have and have.get("ktype") == ktype else 0
+                if have and _bloom.same_hashes(have.get("ktype"), ktype):
+                    with_bloom += 1
                 try:
                     n_bytes += os.path.getsize(os.path.join(self.root, e["path"]))
                 except OSError:

@@ -180,7 +180,7 @@ def refresh_history(spark, base, hist, max_point_keys: int = 100_000):
         return None
     # materialize the change window ONCE (see secondary_index.refresh_
     # index): the closing-key probe, the merge's lineage aggregate and
-    # its bucketed write would otherwise each recompute the CDF join —
+    # its bucketed write would otherwise each recompute the CDF fold —
     # 3x the per-refresh cost for a window that is O(epoch) rows.
     changes = changes.localCheckpoint(eager=True)
     ct = F.col("change_type")

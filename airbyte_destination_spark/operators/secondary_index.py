@@ -89,7 +89,7 @@ def refresh_index(
         return None
     # materialize the change window ONCE: the merge below runs two jobs
     # (lineage aggregate + bucketed write) and each would otherwise
-    # recompute the CDF's snapshot-diff full-outer join from scratch —
+    # recompute the CDF's scan and key-grouped fold from scratch —
     # measured as the dominant per-refresh cost of the index/SCD2/view
     # maintenance queries. The window is O(epoch), never O(table).
     changes = changes.localCheckpoint(eager=True)

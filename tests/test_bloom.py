@@ -169,3 +169,46 @@ def test_key_widening_invalidates_stale_blooms(spark, tmp_path):
     rows = t.read_keys(spark, [8]).collect()
     assert [r["doc_id"] for r in rows] == [8]
     assert t.read_keys(spark, [1_000_000_000_000]).count() == 1
+
+
+def test_short_to_int_promotion_keeps_blooms(spark, tmp_path):
+    """byte, short and int keys hash alike, so a short -> int promotion
+    rewrites nothing and every bloom entry stays usable: the entries
+    keep counting and keep pruning, and the next build indexes only the
+    new file."""
+    t = LakeTable(str(tmp_path / "s"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.ShortType(), False),
+                T.StructField("v", T.LongType(), False),
+            ]
+        ),
+        ["doc_id"],
+        "v",
+        n_buckets=2,
+        merge_strategy="mor",
+    )
+    for i in range(3):
+        # even keys over 0..3000 in every epoch: zone maps keep every
+        # file for an odd probe inside the range, only blooms prune
+        t.merge(
+            spark.createDataFrame(
+                [(6 * j + 2 * i, i, "I") for j in range(500)],
+                "doc_id smallint, v long, op string",
+            ),
+            epoch_id=f"e{i}",
+        )
+    assert t.build_bloom_index(spark) == 6
+    absent = [1001, 1501, 2001]
+    assert t.files_for_keys(spark, absent) == []
+    t.merge(
+        spark.createDataFrame([(40_000, 9, "I")], "doc_id int, v long, op string"),
+        epoch_id="e-int",
+    )
+    assert t.schema()["doc_id"].dataType == T.IntegerType()
+    d = t.describe()
+    assert (d["n_data_files"], d["files_with_blooms"]) == (7, 6)
+    assert t.files_for_keys(spark, absent) == []
+    assert sorted(r["doc_id"] for r in t.read_keys(spark, [6, 40_000]).collect()) == [6, 40_000]
+    assert t.build_bloom_index(spark) == 1

@@ -161,9 +161,10 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
 
 
 def test_table_changes_plan_has_no_serial_stage(spark, tmp_path):
-    """The CDF join must stay partition-parallel: no SinglePartition
-    exchange, no Cartesian product — at 100 TB both snapshot sides are
-    large and the plan must be a key-partitioned join."""
+    """The CDF fold must stay partition-parallel: no SinglePartition
+    exchange, no Cartesian product — at 100 TB both snapshots' files
+    are large and the plan must be one key-partitioned aggregate, for a
+    window across a schema change as for a plain one."""
     from pyspark.sql import types as T
 
     from airbyte_destination_spark.lake import LakeTable
@@ -182,17 +183,25 @@ def test_table_changes_plan_has_no_serial_stage(spark, tmp_path):
         spark.createDataFrame([(f"k{i}", [i], i, "U") for i in range(50)], bs),
         epoch_id="p-0",
     ).version
-    t.merge(
+    v1 = t.merge(
         spark.createDataFrame([("k1", [99], 100, "U")], bs), epoch_id="p-1"
+    ).version
+    t.add_column("lang", T.StringType(), initial_default="en")
+    t.merge(
+        spark.createDataFrame(
+            [("k2", [7], 101, "U", "de")], bs + ", lang string"
+        ),
+        epoch_id="p-2",
     )
-    plan = (
-        t.table_changes(spark, v_from=v0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SinglePartition" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    for v_from, v_to in ((v0, v1), (v0, None)):
+        plan = (
+            t.table_changes(spark, v_from=v_from, v_to=v_to)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "SinglePartition" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
 
 
 def test_connected_components_iteration_plan(spark):
