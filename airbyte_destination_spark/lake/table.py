@@ -142,7 +142,7 @@ _CHECKPOINT_INTERVAL = 32
 # FIXED small budget with no backoff thrashes under sustained contention
 # (N writers re-read and re-collide in lockstep; observed: a compactor
 # loop racing 4 writers starved one writer out of 5 straight attempts).
-_COMMIT_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_COMMIT_ATTEMPTS", "8"))
+_COMMIT_ATTEMPTS = 8
 
 
 def _conflict_backoff(attempt: int) -> None:
@@ -343,6 +343,13 @@ class MergeStats:
     rows_quarantined: int = 0
 
 
+def _stat_cols(m: dict) -> list[str]:
+    """Columns whose per-file bounds a manifest entry records: the
+    first key column (as kmin/kmax), then the declared stats_cols."""
+    k0 = m["key_cols"][0]
+    return [k0] + [c for c in m.get("stats_cols", []) if c != k0]
+
+
 def _entry_bounds(entry: dict, col: str, key0: str):
     """This file's (min, max) for `col` from its manifest entry, or
     None when the entry carries no bounds for it."""
@@ -430,38 +437,6 @@ def _zone_map_pred(keys_by_bucket: dict[int, list]):
             return True
 
     return pred
-
-
-# AQE toggle for merge-shaped jobs — the engine's only AQE switch. The
-# merge plan is fully determined (explicit REPARTITION_BY_NUM to
-# n_buckets, then one aggregate over that exchange), so adaptive
-# re-planning buys nothing — but it costs a driver-side
-# re-optimization barrier per stage, measured as a large fraction of
-# small-epoch wall time at high parallelism (2.3x epoch throughput
-# with it off). Every fold/write job (_apply, compact, compact_tiered)
-# runs under it. Session-wide while a job is in flight (SQLConf has no
-# per-plan switch); the lock makes nested/concurrent jobs restore the
-# right value.
-_AQE_LOCK = threading.RLock()
-
-
-class _no_aqe:
-    """Context manager: AQE off for the duration of a merge-shaped job."""
-
-    def __init__(self, spark: SparkSession):
-        self.conf = spark.conf
-
-    def __enter__(self):
-        _AQE_LOCK.acquire()
-        self.prev = self.conf.get("spark.sql.adaptive.enabled", "true")
-        self.conf.set("spark.sql.adaptive.enabled", "false")
-
-    def __exit__(self, *exc):
-        try:
-            self.conf.set("spark.sql.adaptive.enabled", self.prev)
-        finally:
-            _AQE_LOCK.release()
-        return False
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int):
@@ -1576,19 +1551,6 @@ class LakeTable:
             # silently falling back to key-sorted compaction would leave
             # the operator believing multi-dimensional pruning exists
             raise ValueError("cluster='zorder' requires cluster_by columns")
-        with _no_aqe(spark):  # fixed-shape fold+write, like _apply
-            return self._compact_no_aqe(
-                spark, min_files, cluster_by, max_records_per_file, cluster
-            )
-
-    def _compact_no_aqe(
-        self,
-        spark: SparkSession,
-        min_files: int,
-        cluster_by: list[str] | None,
-        max_records_per_file: int | None,
-        cluster: str,
-    ) -> int | None:
         for attempt in range(_COMMIT_ATTEMPTS):
             self._recover_orphan()
             base = self.current_version()
@@ -1680,12 +1642,6 @@ class LakeTable:
         Returns {"version", "buckets", "files_merged", "bytes_merged"}
         or None when no bucket holds a qualifying run.
         """
-        with _no_aqe(spark):  # fixed-shape fold+write, like compact
-            return self._compact_tiered_no_aqe(spark, min_run, tier_factor, max_run)
-
-    def _compact_tiered_no_aqe(
-        self, spark: SparkSession, min_run: int, tier_factor: float, max_run: int
-    ) -> dict | None:
         from airbyte_destination_spark.operators.dedup import lww_reduce_agg
 
         def _size(e: dict) -> int:
@@ -2089,45 +2045,15 @@ class LakeTable:
         rows over newer deltas in MOR LWW reads after publish."""
         if not by_group:
             return None
-        cv_field = T.StructField("_cv", T.LongType(), True)
-        target_cv = T.StructType(target.fields + [cv_field])
-        parts = []
-        for (sid, cv, isbase, stored), paths in by_group.items():
-            fsch = T.StructType(
-                T.StructType.fromJson(m["schemas"][sid]).fields
-                + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-                + ([cv_field] if stored else [])
-            )
-            df = spark.read.schema(fsch).parquet(*paths)
-            ren, dead = _file_column_maps(
-                m.get("renames"), m.get("adds"), m.get("drops"), sid
-            )
-            stale_cols = [c for c in dead if c in df.columns]
-            if stale_cols:
-                # prior-life force-drop BEFORE the rename projection
-                # (on-disk names) — see _read_buckets
-                df = df.drop(*stale_cols)
-            if ren:
-                df = df.select(
-                    *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
-                )
-            for dc, dv in (m.get("defaults") or {}).items():
-                if dc not in df.columns:
-                    fld = next((f for f in target.fields if f.name == dc), None)
-                    if fld is not None:
-                        df = df.withColumn(dc, F.lit(dv).cast(fld.dataType))
-            if stored:
-                # preserve the per-row original commit version verbatim
-                aligned = align_to_schema(df, target_cv)
-            else:
-                aligned = align_to_schema(df, target).withColumn(
-                    "_cv", F.lit(None).cast("long")
-                )
-            parts.append(
-                aligned.withColumn("_scv", F.lit(cv).cast("long"))
-                .withColumn("_sbase", F.lit(1 if isbase else 0))
-                .withColumn("_sstored", F.lit(1 if stored else 0))
-            )
+        # non-stored groups come back stamped with their entry cv, which
+        # is what the entry records; only stored_cv entries read it back
+        parts = [
+            self._read_file_group(spark, m, sid, cv, stored, paths, target)
+            .withColumn("_scv", F.lit(cv).cast("long"))
+            .withColumn("_sbase", F.lit(1 if isbase else 0))
+            .withColumn("_sstored", F.lit(1 if stored else 0))
+            for (sid, cv, isbase, stored), paths in by_group.items()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -2174,10 +2100,6 @@ class LakeTable:
                 _BUCKET_COL, "_scv", "_sbase", "_sstored"
             ).parquet(out_dir)
             sid_now = m["schema_id"]
-            k0 = m["key_cols"][0]
-            stat_cols = [k0] + [
-                c for c in m.get("stats_cols", []) if c != k0
-            ]
             new_entries: list[tuple[int, dict]] = []
             for bdir in sorted(os.listdir(out_dir)):
                 if not bdir.startswith(f"{_BUCKET_COL}="):
@@ -2201,13 +2123,17 @@ class LakeTable:
                             for fname in sorted(os.listdir(d)):
                                 if not fname.endswith(".parquet"):
                                     continue
+                                rel = os.path.join(
+                                    rel_snap, bdir, cvdir, basedir,
+                                    storeddir, fname
+                                )
                                 entry = {
-                                    "path": os.path.join(
-                                        rel_snap, bdir, cvdir, basedir,
-                                        storeddir, fname
-                                    ),
+                                    "path": rel,
                                     "schema_id": sid_now,
                                     "cv": cv,
+                                    "bytes": os.path.getsize(
+                                        os.path.join(self.root, rel)
+                                    ),
                                 }
                                 if isbase:
                                     entry["base"] = True
@@ -2218,23 +2144,7 @@ class LakeTable:
                                     # re-stamped with the compaction cv
                                     entry["stored_cv"] = True
                                 new_entries.append((nb, entry))
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _bind_stats(item):
-                nb, entry = item
-                stats = _file_col_stats(
-                    os.path.join(self.root, entry["path"]), stat_cols
-                )
-                if k0 in stats:
-                    entry["kmin"], entry["kmax"] = stats[k0]
-                extra = {
-                    c: list(stats[c]) for c in stat_cols[1:] if c in stats
-                }
-                if extra:
-                    entry["bounds"] = extra
-
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                list(pool.map(_bind_stats, new_entries))
+            self._bind_footer_stats(m, [e for _, e in new_entries])
             for nb, entry in new_entries:
                 old_b = nb % n_old
                 new_by_old[old_b].setdefault(str(nb), []).append(entry)
@@ -2648,27 +2558,9 @@ class LakeTable:
                         entry["stored_cv"] = True
                     new_files.setdefault(b, []).append(entry)
                     entries.append((b, entry))
-        # zone maps: first-key-column bounds (kmin/kmax — read_keys
-        # prunes FILES with these on top of bucket pruning; selective
-        # for MOR deltas whose batches cover narrow key ranges, CDC
-        # doc_ids correlate with time, and for sorted maintenance
-        # rewrites) plus declared stats_cols bounds for scan(). Footer
-        # reads release the GIL inside Arrow C++, so a small pool keeps
-        # this off the ingest critical path (~n_buckets/8 ms instead of
-        # n_buckets ms of serial driver time per commit; on a real
-        # cluster the bounds come back with the write-task metrics).
-        stat_cols = [k0] + [c for c in m.get("stats_cols", []) if c != k0]
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _bind(entry: dict) -> None:
-            stats = _file_col_stats(
-                os.path.join(self.root, entry["path"]), stat_cols
-            )
-            if k0 in stats:
-                entry["kmin"], entry["kmax"] = stats.pop(k0)
-            if stats:
-                entry["stats"] = {c: list(v) for c, v in stats.items()}
-
+        # zone maps: the lineage job's bounds where they cover a
+        # one-file bucket, else the footers (_bind_footer_stats)
+        stat_cols = _stat_cols(m)
         provided: dict[str, dict] = {}
         if entries and bounds_provider is not None:
             provided = bounds_provider() or {}
@@ -2686,10 +2578,38 @@ class LakeTable:
                     entry["stats"] = stats
             else:
                 pending.append(entry)
-        if pending:
-            with ThreadPoolExecutor(max_workers=min(8, len(pending))) as pool:
-                list(pool.map(_bind, pending))
+        self._bind_footer_stats(m, pending)
         return new_files
+
+    def _bind_footer_stats(self, m: dict, entries: list[dict]) -> None:
+        """Bind zone maps into new file entries from their parquet
+        footers: first-key-column bounds as kmin/kmax (read_keys prunes
+        FILES with these on top of bucket pruning; selective for MOR
+        deltas whose batches cover narrow key ranges, CDC doc_ids
+        correlate with time, and for sorted maintenance rewrites) plus
+        declared stats_cols bounds as `stats` for scan(). Footer reads
+        release the GIL inside Arrow C++, so a small pool keeps this
+        off the ingest critical path (~n_buckets/8 ms instead of
+        n_buckets ms of serial driver time per commit; on a real
+        cluster the bounds come back with the write-task metrics)."""
+        if not entries:
+            return
+        k0 = m["key_cols"][0]
+        stat_cols = _stat_cols(m)
+
+        def _bind(entry: dict) -> None:
+            stats = _file_col_stats(
+                os.path.join(self.root, entry["path"]), stat_cols
+            )
+            if k0 in stats:
+                entry["kmin"], entry["kmax"] = stats.pop(k0)
+            if stats:
+                entry["stats"] = {c: list(v) for c, v in stats.items()}
+
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, len(entries))) as pool:
+            list(pool.map(_bind, entries))
 
     def _with_bucket(self, df: DataFrame, m: dict) -> DataFrame:
         return df.withColumn(_BUCKET_COL, bucket_expr(_bucket_cols(m), m["n_buckets"]))
@@ -3491,6 +3411,9 @@ class LakeTable:
                 if k not in ("version", "committed_at")
             }
             m["operation"] = f"rollback({version})"
+            # the rollback applies no epoch: a copied id would make
+            # epoch_commit_version() resolve to this commit
+            m["epoch_id"] = None
             m["lineage"] = []
             try:
                 return self._commit(m, base)
@@ -3765,27 +3688,6 @@ class LakeTable:
         reduce: str = "lww",
         stage: str | None = None,
     ) -> MergeStats:
-        # every data job this method runs (lineage agg, bucketed write)
-        # has a fixed plan shape — run the whole apply with AQE off so
-        # its per-stage re-optimization barriers never tax the commit
-        with _no_aqe(batch.sparkSession):
-            return self._apply_no_aqe(
-                batch, mode, epoch_id, tiebreak_cols, lineage_df,
-                post_reduce, carry_cols, reduce, stage,
-            )
-
-    def _apply_no_aqe(
-        self,
-        batch: DataFrame,
-        mode: str,
-        epoch_id: str | None,
-        tiebreak_cols: list[str] | None = None,
-        lineage_df: DataFrame | None = None,
-        post_reduce=None,
-        carry_cols: tuple[str, ...] = (),
-        reduce: str = "lww",
-        stage: str | None = None,
-    ) -> MergeStats:
         spark = batch.sparkSession
         if reduce not in ("lww", "partial", "aggregate"):
             raise ValueError(f"unknown reduce mode {reduce!r}")
@@ -3968,75 +3870,16 @@ class LakeTable:
                     buckets[b] = buckets.get(b, []) + files
                 rows_up = sum(l["rows_applied"] for l in lineage)
                 rows_del = 0
-            elif m.get("merge_strategy", "cow") == "mor":
-                # merge-on-read: reduce the batch per key and APPEND the
-                # winners as delta files — never read or rewrite existing
-                # data, so ingest is O(batch) no matter how big the table
-                # is. Readers fold deltas (read()/compact()).
-                src = aligned if has_op else aligned.withColumn("op", F.lit("U"))
-                src = src.repartition(m["n_buckets"], *[F.col(c) for c in _bucket_cols(m)])
-                other = [c for c in src.columns if c not in key_cols]
-                ord_fields = ([F.col(ver_col)] if ver_col is not None else []) + [
-                    F.col(c) for c in tiebreak_cols or []
-                ]
-                winners = (
-                    src.groupBy(*key_cols)
-                    .agg(
-                        F.max_by(
-                            F.struct(*[F.col(c) for c in other]), F.struct(*ord_fields)
-                        ).alias("_w")
-                    )
-                    .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in other])
-                )
-                if post_reduce is not None:
-                    winners = post_reduce(winners)
-                final = winners.withColumn(
-                    _DELETED_COL, F.coalesce(F.col("op") == F.lit("D"), F.lit(False))
-                ).drop("op", *carry_cols)
-                def _lineage_bounds() -> dict:
-                    # invoked by _write_bucketed AFTER its write action:
-                    # the lineage job ran concurrently, so this join is
-                    # usually instant; its rows carry the per-bucket
-                    # bounds aggregated executor-side
-                    t.join()
-                    if "err" in holder:
-                        raise holder["err"]
-                    out: dict[str, dict] = {}
-                    for r in holder["rows"]:
-                        bmap = {}
-                        for c in bound_cols:
-                            lo, hi = r[f"_bmin_{c}"], r[f"_bmax_{c}"]
-                            if isinstance(lo, (str, int, float)) and isinstance(
-                                hi, (str, int, float)
-                            ):
-                                bmap[c] = (lo, hi)
-                        out[str(int(r[_BUCKET_COL]))] = bmap
-                    return out
-
-                try:
-                    new_files = self._write_bucketed(
-                        final, m, base + 1, already_bucket_aligned=True,
-                        bounds_provider=_lineage_bounds if bound_cols else None,
-                    )
-                finally:
-                    # always reap the background lineage job — a failed
-                    # write must not orphan the thread
-                    t.join()
-                if "err" in holder:
-                    raise holder["err"]
-                lineage = _lineage_rows(holder["rows"])
-                touched = sorted({l["partition_id"] for l in lineage})
-                buckets = dict(m["buckets"])
-                for b, files in new_files.items():
-                    buckets[b] = buckets.get(b, []) + files
-                rows_up = sum(l["rows_applied"] for l in lineage)
-                rows_del = 0
             else:
                 src = (aligned if has_op else aligned.withColumn("op", F.lit("U"))).withColumn(
                     "_src", F.lit(1)
                 )
-                has_existing = any(m["buckets"].get(str(b)) for b in touched)
-                if has_existing:
+                # merge-on-read reduces the batch alone and APPENDS the
+                # winners as delta files — it never reads or rewrites
+                # existing data, so ingest is O(batch) no matter how big
+                # the table is; readers fold deltas (read()/compact()).
+                # Copy-on-write folds the touched buckets' live rows in.
+                if not is_mor_merge and any(m["buckets"].get(str(b)) for b in touched):
                     # tombstones re-enter the reduce as op='D' rows so a
                     # late-arriving OLDER update loses to them
                     existing = (
@@ -4064,7 +3907,8 @@ class LakeTable:
                 # ClusteredDistribution is satisfied), and because the
                 # bucket function IS Spark's hash partitioning, partition
                 # i == bucket i afterwards — the write then needs no
-                # further shuffle. REPARTITION_BY_NUM is AQE-stable.
+                # further shuffle. Adaptive execution never coalesces a
+                # REPARTITION_BY_NUM exchange, so this holds with AQE on.
                 combined = combined.repartition(m["n_buckets"], *[F.col(c) for c in _bucket_cols(m)])
                 # LWW as max_by aggregation over that exchange: the only
                 # reduce on the write path, so the batch needs no
@@ -4106,6 +3950,8 @@ class LakeTable:
                     )
                     winners = self._with_bucket(winners, m)
                 else:
+                    # order (version, _src, tiebreak...): batch rows
+                    # (_src=1) beat the stored row at an equal version
                     other = [c for c in combined.columns if c not in key_cols]
                     ord_fields = ([F.col(ver_col)] if ver_col is not None else []) + [
                         F.col(c) for c in ["_src", *(tiebreak_cols or [])]
@@ -4127,12 +3973,49 @@ class LakeTable:
                     _DELETED_COL,
                     F.coalesce(F.col("op") == F.lit("D"), F.lit(False)),
                 ).drop("_src", "op", *carry_cols)
-                new_files = self._write_bucketed(
-                    final, m, base + 1, n_out=len(touched), already_bucket_aligned=True
-                )
                 buckets = dict(m["buckets"])
-                for b in touched:
-                    buckets[str(b)] = new_files.get(str(b), [])
+                if is_mor_merge:
+                    def _lineage_bounds() -> dict:
+                        # invoked by _write_bucketed AFTER its write action:
+                        # the lineage job ran concurrently, so this join is
+                        # usually instant; its rows carry the per-bucket
+                        # bounds aggregated executor-side
+                        t.join()
+                        if "err" in holder:
+                            raise holder["err"]
+                        out: dict[str, dict] = {}
+                        for r in holder["rows"]:
+                            bmap = {}
+                            for c in bound_cols:
+                                lo, hi = r[f"_bmin_{c}"], r[f"_bmax_{c}"]
+                                if isinstance(lo, (str, int, float)) and isinstance(
+                                    hi, (str, int, float)
+                                ):
+                                    bmap[c] = (lo, hi)
+                            out[str(int(r[_BUCKET_COL]))] = bmap
+                        return out
+
+                    try:
+                        new_files = self._write_bucketed(
+                            final, m, base + 1, already_bucket_aligned=True,
+                            bounds_provider=_lineage_bounds if bound_cols else None,
+                        )
+                    finally:
+                        # always reap the background lineage job — a failed
+                        # write must not orphan the thread
+                        t.join()
+                    if "err" in holder:
+                        raise holder["err"]
+                    lineage = _lineage_rows(holder["rows"])
+                    touched = sorted({l["partition_id"] for l in lineage})
+                    for b, files in new_files.items():
+                        buckets[b] = buckets.get(b, []) + files
+                else:
+                    new_files = self._write_bucketed(
+                        final, m, base + 1, n_out=len(touched), already_bucket_aligned=True
+                    )
+                    for b in touched:
+                        buckets[str(b)] = new_files.get(str(b), [])
                 rows_up = sum(l["rows_applied"] for l in lineage)
                 rows_del = 0  # refined by caller via counts if needed
 

@@ -161,9 +161,8 @@ def apply_change_batch(
 ) -> MergeStats:
     """Apply one micro-batch of change events to the table, exactly once.
 
-    The merge and any inline compaction run with AQE off
-    (lake.table._no_aqe): their plans are fixed-shape, so adaptive
-    re-planning only adds per-stage barriers."""
+    The merge and any inline compaction run under the session's own
+    settings; none of them changes a session conf."""
     cfg = cfg or IngestConfig()
     # cheap pre-check before any work: replayed epoch -> skip. epoch_id
     # may be a LIST of ids committing atomically (sharded consumer);

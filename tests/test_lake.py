@@ -657,6 +657,24 @@ def test_rollback_restores_state_and_reopens_epochs(spark, tmp_table_root):
         t.rollback(t.current_version() + 1)
 
 
+def test_rollback_commit_records_no_epoch(spark, tmp_table_root):
+    """A rollback applies no epoch, so its commit records epoch_id=None.
+    A copied id would make epoch_commit_version() resolve the rolled-to
+    epoch to the rollback commit, whose lineage is empty, and rollup or
+    metrics recovery would read that instead of the real data commit."""
+    t = LakeTable(tmp_table_root)
+    t.create(SCHEMA, key_cols=["doc_id"], version_col="change_lsn", n_buckets=2)
+    v1 = t.merge(
+        spark.createDataFrame([("a", [1], 1, "I")], BATCH_SCHEMA), epoch_id="E1"
+    ).version
+    assert v1 == 2
+    t.merge(spark.createDataFrame([("a", [2], 2, "U")], BATCH_SCHEMA), epoch_id="E2")
+    t.rollback(v1)
+    assert t.history()[-1]["epoch_id"] is None
+    assert t.epoch_commit_version("E1") == 2
+    assert t.is_epoch_applied("E1") and not t.is_epoch_applied("E2")
+
+
 def test_incremental_consumer_poll_ack(spark, tmp_table_root):
     """poll_changes/ack: bootstrap poll sees the snapshot as inserts;
     subsequent polls see only the net CDF since the acked offset; an

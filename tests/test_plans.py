@@ -5,6 +5,7 @@ pushdown reaching the parquet scan, the merge using exactly one shuffle,
 the broadcast join staying broadcast, codegen covering the hot path.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbyte_destination_spark.plans import (
@@ -66,10 +67,10 @@ def test_cosine_topk_broadcasts_queries(spark):
     assert has_broadcast(out)
 
 
-def test_merge_plan_single_payload_shuffle(spark, tmp_path):
-    """End-to-end merge: exactly one shuffle of the payload (the
-    key exchange that doubles as bucket placement), verified by bucket-
-    aligned output files being written without a second exchange."""
+_MERGE_SCHEMA = "doc_id string, tokens array<int>, change_lsn long, op string"
+
+
+def _merge_table(spark, root, strategy):
     from pyspark.sql import types as T
 
     from airbyte_destination_spark.lake import LakeTable
@@ -81,28 +82,83 @@ def test_merge_plan_single_payload_shuffle(spark, tmp_path):
             T.StructField("change_lsn", T.LongType(), False),
         ]
     )
-    t = LakeTable(str(tmp_path / "t"))
-    t.create(schema, ["doc_id"], "change_lsn", n_buckets=4)
-    b = spark.createDataFrame(
-        [(f"d{i}", [i], i, "I") for i in range(100)],
-        "doc_id string, tokens array<int>, change_lsn long, op string",
-    )
-    t.merge(b, epoch_id="e")
-    m = t.manifest()
-    # every bucket's files contain only that bucket's keys
+    t = LakeTable(str(root / strategy))
+    t.create(schema, ["doc_id"], "change_lsn", n_buckets=4, merge_strategy=strategy)
+    return t
+
+
+def _assert_one_new_file_per_bucket(spark, t, version):
+    """Each bucket written at `version` got exactly one file, and every
+    file holds only its own bucket's keys (routed by lake/hashing.py,
+    which tests/test_hashing.py pins to Spark's bucket hash)."""
     import os
 
-    from airbyte_destination_spark.lake.table import bucket_expr
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
-    for bk, files in m["buckets"].items():
-        for e in files:
-            got = (
-                spark.read.parquet(os.path.join(t.root, e["path"]))
-                .select(bucket_expr(["doc_id"], 4).alias("b"))
-                .distinct()
-                .collect()
-            )
-            assert [r.b for r in got] == [int(bk)]
+    from airbyte_destination_spark.lake.hashing import key_hashes
+
+    route = key_hashes(T.StringType())
+    m = t.manifest(version)
+    written = {
+        bk: [e for e in files if e["cv"] == version]
+        for bk, files in m["buckets"].items()
+    }
+    assert all(len(fs) == 1 for fs in written.values()), written
+    assert len(written) == m["n_buckets"]
+    for bk, files in written.items():
+        keys = pq.read_table(
+            os.path.join(t.root, files[0]["path"]), columns=["doc_id"]
+        ).column("doc_id").to_pylist()
+        assert keys and {route(k)[0] % m["n_buckets"] for k in keys} == {int(bk)}
+
+
+def test_merge_plan_single_payload_shuffle(spark, tmp_path):
+    """End-to-end merge: exactly one shuffle of the payload (the
+    key exchange that doubles as bucket placement), verified by bucket-
+    aligned output files being written without a second exchange.
+    `partitionBy` writes by value, so a file holding only its bucket's
+    keys holds whatever the partitioning; one new file per touched
+    bucket is what shows partition i == bucket i. Checked for a COW
+    merge onto existing data, MOR merges and a compaction, under the
+    session's adaptive execution setting."""
+    b1 = spark.createDataFrame(
+        [(f"d{i}", [i], i, "I") for i in range(100)], _MERGE_SCHEMA
+    )
+    b2 = spark.createDataFrame(
+        [(f"d{i}", [i * 2], 100 + i, "U") for i in range(0, 150, 3)], _MERGE_SCHEMA
+    )
+    cow = _merge_table(spark, tmp_path, "cow")
+    cow.merge(b1, epoch_id="e0")
+    _assert_one_new_file_per_bucket(spark, cow, cow.current_version())
+    cow.merge(b2, epoch_id="e1")  # rewrites every bucket over existing rows
+    _assert_one_new_file_per_bucket(spark, cow, cow.current_version())
+
+    mor = _merge_table(spark, tmp_path, "mor")
+    for e, b in enumerate([b1, b2]):
+        mor.merge(b, epoch_id=f"e{e}")
+        _assert_one_new_file_per_bucket(spark, mor, mor.current_version())
+    v = mor.compact(spark, min_files=2)
+    assert v is not None
+    _assert_one_new_file_per_bucket(spark, mor, v)
+    assert all(len(fs) == 1 for fs in mor.manifest(v)["buckets"].values())
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_plans_under_session_aqe_setting(spark, tmp_path, strategy):
+    """The merge changes no session conf: a query planned during it (here
+    its own post_reduce) sees the session's adaptive execution setting."""
+    seen = []
+
+    def post_reduce(winners):
+        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        return winners
+
+    t = _merge_table(spark, tmp_path, strategy)
+    b = spark.createDataFrame([("a", [1], 1, "I")], _MERGE_SCHEMA)
+    t.merge(b, epoch_id="e", post_reduce=post_reduce)
+    assert seen == ["true"]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_codegen_covers_enrichment(spark):

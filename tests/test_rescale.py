@@ -204,3 +204,52 @@ def test_factor_validation_and_mismatch(spark, tmp_table_root):
     t.split_buckets(spark, factor=2, max_groups=1, group_size=2)
     with pytest.raises(ValueError, match="abort_rescale"):
         t.split_buckets(spark, factor=3)
+
+
+def test_split_entries_keep_zone_maps_and_sizes(spark, tmp_table_root):
+    """Split entries carry the same `bytes` and `stats` a write records:
+    scan(bounds) prunes the re-cut files on a stats_cols column as it
+    did before the split, and a small read_keys after the rescale still
+    reads on the driver, starting no Spark job."""
+    t = LakeTable(os.path.join(tmp_table_root, "t_stats"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("k", T.LongType(), False),
+                T.StructField("ts", T.LongType(), True),
+                T.StructField("v", T.LongType(), False),
+            ]
+        ),
+        ["k"],
+        "v",
+        n_buckets=2,
+        stats_cols=["ts"],  # COW: scan(bounds) prunes on any stats column
+    )
+    for e in range(3):  # disjoint ts range per epoch
+        rows = [(e * 100 + i, e * 1000 + i, e) for i in range(100)]
+        t.append(spark.createDataFrame(rows, "k long, ts long, v long"), epoch_id=f"s-{e}")
+    window = {"ts": (1000, 1099)}
+    before = {e["cv"] for e in t.files_for_bounds(window)}
+    assert len(before) == 1
+
+    while not t.split_buckets(spark, factor=2)["published"]:
+        pass
+    m = t.manifest()
+    entries = [e for fs in m["buckets"].values() for e in fs]
+    assert m["n_buckets"] == 4 and entries
+    for e in entries:
+        assert e["bytes"] > 0 and "ts" in e["stats"], e
+    kept = t.files_for_bounds(window)
+    assert {e["cv"] for e in kept} == before
+    assert len(kept) < len(entries)
+    assert t.scan(spark, window).count() == 100
+
+    sc = spark.sparkContext
+    sc.setJobGroup("split-lookup", "split-lookup")
+    try:
+        rows = t.read_keys(spark, [5, 150, 299]).select("k", "ts").collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("split-lookup")
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == [], f"lookup after the rescale launched Spark jobs: {jobs}"
+    assert sorted((r.k, r.ts) for r in rows) == [(5, 5), (150, 1050), (299, 2099)]
