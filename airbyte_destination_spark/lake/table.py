@@ -459,11 +459,13 @@ _ISIN_MAX_KEYS = 256
 # read_keys reads its kept files on the driver with pyarrow, launching no
 # Spark job, when their manifest sizes sum to at most this; an entry
 # without a recorded size counts as over. The bound is driver memory:
-# pyarrow decodes a kept file whole before filtering, so a lookup's peak
-# follows its largest file (measured driver RSS +0.22 GB for one 62 MB
-# file, +0.91 GB for one 247 MB file). Below it the driver path also
-# took less CPU and wall time than the distributed plan at every size
-# measured (up to 309 MB of kept files and 10k keys, local[4]).
+# pyarrow decodes each kept row group whole before filtering, so a
+# lookup's peak follows its kept row groups, a whole file when the file
+# has one (measured when whole files were read: driver RSS +0.22 GB for
+# one 62 MB file, +0.91 GB for one 247 MB file). Below it the driver
+# path also took less CPU and wall time than the distributed plan at
+# every size measured (up to 309 MB of kept files and 10k keys,
+# local[4]).
 _LOOKUP_DRIVER_MAX_BYTES = 64 << 20
 
 
@@ -494,6 +496,155 @@ def _local_df(spark: SparkSession, tbl, schema: T.StructType) -> DataFrame:
     and per-file reads concatenated into one table yield such
     batches."""
     return spark.createDataFrame(tbl.combine_chunks(), schema)
+
+
+def _arrow_cast_exact(src: T.DataType, dst: T.DataType) -> bool:
+    """Whether pyarrow's cast of a `src` column to `dst` gives exactly
+    Spark's values: identity; integral to wider integral; integral or
+    float to float/double (cast with safe=False, IEEE round-to-nearest
+    as Java's primitive conversions); decimal to a decimal with no fewer
+    integer or fraction digits."""
+    if src == dst:
+        return True
+    if isinstance(src, _INTEGRAL) and isinstance(dst, _INTEGRAL):
+        return _INTEGRAL.index(type(src)) <= _INTEGRAL.index(type(dst))
+    if isinstance(dst, (T.FloatType, T.DoubleType)):
+        return isinstance(src, _INTEGRAL + (T.FloatType,))
+    if isinstance(src, T.DecimalType) and isinstance(dst, T.DecimalType):
+        return (
+            dst.scale >= src.scale
+            and dst.precision - dst.scale >= src.precision - src.scale
+        )
+    return False
+
+
+def _arrow_default(dv, dt: T.DataType):
+    """Initial default `dv` (a JSON literal) as a pyarrow scalar of
+    Spark type `dt`, or None unless the literal already has `dt`'s kind:
+    a bool for boolean, an int that fits an integral type, a float for
+    float/double (rounded as Java does), a str for string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(dv, bool):
+        ok = isinstance(dt, T.BooleanType)
+    elif isinstance(dv, int):
+        ok = isinstance(dt, _INTEGRAL)
+    elif isinstance(dv, float):
+        ok = isinstance(dt, (T.FloatType, T.DoubleType))
+    else:
+        ok = isinstance(dv, str) and isinstance(dt, T.StringType)
+    if not ok:
+        return None
+    at = to_arrow_type(dt)
+    if isinstance(dv, float):
+        return pa.array([dv]).cast(at, safe=False)[0]
+    try:
+        return pa.scalar(dv, at)
+    except (pa.ArrowInvalid, OverflowError):
+        return None  # an int beyond the type's range: Spark's cast decides
+
+
+def _arrow_align_plan(m: dict, sid: str, stored: bool, target: T.StructType):
+    """`_align_file_group` for files written under schema `sid`, as a
+    plan pyarrow applies: one (on-disk name, its Arrow type, default
+    scalar) per field of `target` (which ends in `_cv`) — a name for a
+    column the file holds after dead lineages are dropped and renames
+    applied, else a default scalar, else neither (typed nulls, or the
+    entry's commit version for `_cv`). None when a column needs a cast
+    or a default that pyarrow does not make exactly as Spark does."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    ren, dead = _file_column_maps(
+        m.get("renames"), m.get("adds"), m.get("drops"), sid
+    )
+    have = {
+        ren.get(f.name, f.name): f
+        for f in LakeTable._file_schema(m, sid, stored).fields
+        if f.name not in dead
+    }
+    defaults = m.get("defaults") or {}
+    plan = []
+    for f in target.fields:
+        src = have.get(f.name)
+        if src is not None:
+            if not _arrow_cast_exact(src.dataType, f.dataType):
+                return None
+            plan.append((src.name, to_arrow_type(src.dataType), None))
+        elif f.name in defaults:
+            dv = _arrow_default(defaults[f.name], f.dataType)
+            if dv is None:
+                return None
+            plan.append((None, None, dv))
+        else:
+            plan.append((None, None, None))
+    return plan
+
+
+def _probe_array(probe: list, key_dt: T.DataType, key_at):
+    """The probe keys as a pyarrow array of the key column's Arrow type
+    `key_at`, converted as PySpark converts them (a naive timestamp is
+    local time), with -0.0 folded into 0.0 as Spark's float equality
+    has it."""
+    import pyarrow as pa
+
+    if isinstance(key_dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        raw = pa.int32() if isinstance(key_dt, T.DateType) else pa.int64()
+        return pa.array([key_dt.toInternal(k) for k in probe], raw).cast(key_at)
+    if isinstance(key_dt, (T.FloatType, T.DoubleType)):
+        return pa.array([float(k) + 0.0 for k in probe]).cast(key_at, safe=False)
+    return pa.array(probe, key_at)
+
+
+def _row_groups_for(md, col: str, probe: list) -> list[int]:
+    """The row groups of a parquet file (footer `md`) whose min/max
+    statistics of column `col` can hold some probe key. A row group
+    without statistics, or with statistics that do not compare with
+    the keys, is kept."""
+    import pyarrow as pa
+
+    j = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == col), None
+    )
+    out = []
+    for i in range(md.num_row_groups):
+        st = None if j is None else md.row_group(i).column(j).statistics
+        try:
+            if st is not None and st.has_min_max:
+                lo, hi = st.min, st.max
+                # skip only when every key is provably outside (a NaN
+                # key compares false both ways and keeps the group)
+                if all(k < lo or k > hi for k in probe):
+                    continue
+        except (TypeError, ValueError, pa.ArrowException):
+            pass
+        out.append(i)
+    return out
+
+
+def _lww_last(tbl, k0: str, ver: str | None):
+    """The last row per key of pyarrow table `tbl` (which holds `_cv`)
+    in `lww_reduce_agg`'s order: ascending (version, _cv), a NULL
+    version below any value and, as Spark orders floats, NaN above
+    every number."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sort = tbl
+    keys = [(k0, "ascending")]
+    if ver:
+        if pa.types.is_floating(tbl[ver].type):
+            # sort_indices puts NaN with the NULLs; a NULL version's
+            # flag stays NULL, below both
+            sort = sort.append_column("_nan", pc.is_nan(tbl[ver]))
+            keys.append(("_nan", "ascending"))
+        keys.append((ver, "ascending"))
+    keys.append(("_cv", "ascending"))
+    order = pc.sort_indices(sort, sort_keys=keys, null_placement="at_start")
+    k = tbl[k0].take(order)
+    n = len(k)
+    last = pc.not_equal(k.slice(0, n - 1), k.slice(1))
+    return tbl.take(order.filter(pa.concat_arrays(last.chunks + [pa.array([True])])))
 
 
 class LakeTable:
@@ -951,14 +1102,18 @@ class LakeTable:
         Two execution paths return the same rows:
         - DRIVER path, when the kept files' manifest sizes sum to at
           most _LOOKUP_DRIVER_MAX_BYTES, however many keys the probe
-          holds: the kept files are read on the driver with pyarrow
-          (`filters=` does layer 3), aligned by the same code the
-          parquet reader uses, folded per key in Python for MOR
-          tables, and returned as a LocalRelation. No Spark job runs
-          (keys are routed by lake/hashing.py, with no JVM call), and
-          the caller's select/collect over the result stays job-free —
-          a short query does not pay the distributed pipeline's fixed
-          start-up cost.
+          holds: one Arrow pass on the driver. Each kept file's row
+          groups whose key min/max can hold a probe key (layer 3) are
+          read with pyarrow, filtered to the probe keys, aligned to the
+          current schema as `_align_file_group` aligns them, folded per
+          key for MOR tables in `lww_reduce_agg`'s order, and returned
+          as ONE LocalRelation. No Spark job runs (keys are routed by
+          lake/hashing.py, with no JVM call), and the caller's
+          select/collect over the result stays job-free — a short
+          query does not pay the distributed pipeline's fixed start-up
+          cost. A kept file that needs a cast or a default pyarrow
+          does not make exactly as Spark does (`_arrow_align_plan`)
+          sends the probe to the Spark path.
         - SPARK path otherwise (file sets too big for one machine): a
           parquet scan of the kept files, a pushed literal IN for
           layer 3 (key lists up to _ISIN_MAX_KEYS), the MOR fold, and
@@ -975,7 +1130,9 @@ class LakeTable:
         keys_by_bucket, kept = self._lookup_files(m, schema, keys)
         probe = [k for ks in keys_by_bucket.values() for k in ks]  # distinct
         if sum(e.get("bytes", float("inf")) for e in kept) <= _LOOKUP_DRIVER_MAX_BYTES:
-            return self._read_keys_local(spark, m, schema, probe, kept)
+            local = self._read_keys_local(spark, m, schema, probe, kept)
+            if local is not None:
+                return local
         paths = {e["path"] for e in kept}
         pruned = self._resolve(
             spark, m, sorted(keys_by_bucket), schema,
@@ -1002,86 +1159,93 @@ class LakeTable:
         schema: T.StructType,
         probe: list,
         kept: list[dict],
-    ) -> DataFrame:
-        """read_keys' driver path: the kept files read with pyarrow, one
-        LocalRelation per schema id aligned by `_align_file_group`,
-        collected (a Project over a LocalRelation folds to a
-        LocalTableScan, so no job runs), folded per key with
-        `lww_reduce_agg`'s order for MOR tables, tombstones dropped,
-        and the survivors returned as a LocalRelation."""
+    ) -> DataFrame | None:
+        """read_keys' driver path, one Arrow pass: the kept files' row
+        groups that can hold a probe key read with pyarrow, their rows
+        filtered to the probe keys and aligned by `_arrow_align_plan`,
+        folded per key with `lww_reduce_agg`'s order for MOR tables
+        (`_lww_last`), tombstones dropped, and the survivors returned
+        by one `createDataFrame`. None, before any file is read, when
+        a kept file cannot be aligned exactly in Arrow or the version
+        column does not sort in Arrow."""
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark.sql.conversion import LocalDataToArrowConversion
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        k0 = m["key_cols"][0]
-        file_schemas: dict[str, tuple] = {}  # sid -> (Spark, Arrow) schema
-        by_sid: dict[str, list] = {}
-        for e in kept if probe else []:
-            tbl = pq.read_table(
-                os.path.join(self.root, e["path"]),
-                filters=[(k0, "in", probe)],
-                coerce_int96_timestamp_unit="us",
-            )
-            # conform the file to the schema it was written under:
-            # columns it predates (`_deleted` before tombstones) become
-            # typed nulls; files other than tiered-compaction output get
-            # their commit version as a `_cv` column, so all files of
-            # one schema id share one LocalRelation
-            sid = str(e["schema_id"])
-            if sid not in file_schemas:
-                fs = self._file_schema(m, sid, stored=True)
-                file_schemas[sid] = (fs, to_arrow_schema(fs))
-            arrow_schema = file_schemas[sid][1]
-            n = tbl.num_rows
-            cols = []
-            for f in arrow_schema:
-                if f.name in tbl.column_names:
-                    cols.append(tbl[f.name].cast(f.type))
-                elif f.name == "_cv":
-                    cols.append(pa.array([int(e.get("cv", 0))] * n, f.type))
-                else:
-                    cols.append(pa.nulls(n, f.type))
-            by_sid.setdefault(sid, []).append(
-                pa.Table.from_arrays(cols, schema=arrow_schema)
-            )
+        k0, ver = m["key_cols"][0], m["version_col"]
+        mor = m.get("merge_strategy", "cow") == "mor"
+        if mor and ver and isinstance(
+            schema[ver].dataType, (T.ArrayType, T.MapType, T.StructType)
+        ):
+            return None
         target = T.StructType(
-            schema.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
+            schema.fields
+            + [
+                T.StructField(_DELETED_COL, T.BooleanType(), True),
+                T.StructField("_cv", T.LongType(), True),
+            ]
         )
-        rows = []
-        for sid, tables in by_sid.items():
-            tbl = pa.concat_tables(tables)
-            if tbl.num_rows:
-                df = _local_df(spark, tbl, file_schemas[sid][0])
-                rows.extend(self._align_file_group(m, sid, df, target).collect())
-        if m.get("merge_strategy", "cow") == "mor":
-            # lww_reduce_agg's winner: greatest (version, _cv), a NULL
-            # version below any value (Spark's struct ordering)
-            ver = m["version_col"]
-            names = target.fieldNames() + ["_cv"]
-            ik, icv = names.index(k0), names.index("_cv")
-            iv = names.index(ver) if ver else None
-
-            def order(r):
-                v = r[iv] if iv is not None else None
-                return (v is not None, v, r[icv])
-
-            best: dict = {}
-            for r in rows:
-                k = r[ik]
-                if k not in best or order(r) > order(best[k]):
-                    best[k] = r
-            rows = list(best.values())
+        plans: dict[tuple, list | None] = {}
+        files = []
+        for e in kept:
+            g = (str(e["schema_id"]), bool(e.get("stored_cv")))
+            if g not in plans:
+                plans[g] = _arrow_align_plan(m, *g, target)
+            if plans[g] is None:
+                return None
+            files.append((e, plans[g]))
+        arrow_target = to_arrow_schema(target)
+        key_dt = schema[k0].dataType
+        key_at = arrow_target.field(k0).type
+        float_key = isinstance(key_dt, (T.FloatType, T.DoubleType))
+        probe_arr = _probe_array(probe, key_dt, key_at)
+        parts = []
+        for e, plan in files:
+            path = os.path.join(self.root, e["path"])
+            with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+                rgs = _row_groups_for(pf.metadata, k0, probe)
+                on_disk = set(pf.schema_arrow.names)
+                names = [c for c, _, _ in plan if c in on_disk]
+                tbl = pf.read_row_groups(rgs, columns=names) if rgs else None
+            if tbl is None:
+                continue
+            # the file's keys at the current key type: files written
+            # before an int->long widening hold int32 keys
+            file_key_at = next(a for c, a, _ in plan if c == k0)
+            kcol = tbl[k0].cast(file_key_at).cast(key_at)
+            if float_key:
+                kcol = pc.add(kcol, pa.scalar(0.0, key_at))  # -0.0 -> 0.0
+            tbl = tbl.filter(pc.is_in(kcol, value_set=probe_arr))
+            n = tbl.num_rows
+            if not n:
+                continue
+            cols = []
+            for (c, at, dv), f in zip(plan, arrow_target):
+                if c in on_disk:
+                    col = tbl[c].cast(at)
+                    if at != f.type:
+                        col = col.cast(f.type, safe=not pa.types.is_floating(f.type))
+                elif dv is not None:
+                    col = pa.repeat(dv, n)
+                elif f.name == "_cv":
+                    col = pa.repeat(pa.scalar(int(e.get("cv", 0)), f.type), n)
+                else:
+                    col = pa.nulls(n, f.type)
+                cols.append(col)
+            parts.append(pa.Table.from_arrays(cols, schema=arrow_target))
+        tbl = pa.concat_tables(parts) if parts else arrow_target.empty_table()
+        if mor and tbl.num_rows:
+            tbl = _lww_last(tbl, k0, ver)
         # COW reads never fold: append-mode files may hold duplicate
         # keys, and every one of those rows is returned
-        n_out = len(schema.fields)
-        live = [r[:n_out] for r in rows if not r[_DELETED_COL]]
-        out = (
-            LocalDataToArrowConversion.convert(live, schema, False)
-            if live
-            else to_arrow_schema(schema).empty_table()
-        )
-        return _local_df(spark, out, schema)
+        tbl = tbl.filter(pc.invert(pc.fill_null(tbl[_DELETED_COL], False)))
+        tbl = tbl.select(schema.fieldNames())
+        if not tbl.num_rows:
+            # createDataFrame of a filtered zero-row table with a
+            # nested column raises ArrowInvalid
+            tbl = tbl.schema.empty_table()
+        return _local_df(spark, tbl, schema)
 
     def _keys_by_bucket(self, m, schema, keys):
         """(bucket -> keys, bucket -> xxhash64(key)), probe keys
@@ -2418,8 +2582,8 @@ class LakeTable:
         `target` plus the `_cv` column: dropped lineages out, renames
         and initial defaults applied, types cast. `cv=None` means `df`
         already carries `_cv`; otherwise `cv` is stamped on every row.
-        The one alignment both readers share — the parquet scan of
-        `_read_file_group` and read_keys' driver path."""
+        `_arrow_align_plan` is its pyarrow twin, for read_keys' driver
+        path."""
         cv_field = T.StructField("_cv", T.LongType(), True)
         target_cv = T.StructType(target.fields + [cv_field])
         tgt_types = {f.name: f.dataType for f in target.fields}

@@ -7,11 +7,13 @@ broadcast semi join). Both must return the same rows.
 """
 
 import datetime
+import decimal
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbyte_destination_spark.lake import LakeTable
@@ -37,12 +39,17 @@ def _rows(df) -> list[dict]:
     return sorted((r.asDict(recursive=True) for r in df.collect()), key=repr)
 
 
-def _both_paths(spark, t, keys, monkeypatch) -> list[dict]:
-    """read_keys on the driver path and, with the byte bound below any
-    file, on the Spark path; asserts which path ran and that the two
-    agree on every column of every row."""
+def _both_paths(spark, t, keys, monkeypatch, arrow=True) -> list[dict]:
+    """read_keys under the byte bound and, with the bound below any
+    file, on the Spark path; asserts which path ran (the driver path,
+    or with `arrow=False` the Spark path both times) and that the two
+    agree on every column of every row. Rows compare by repr, so a NaN
+    equals a NaN."""
     local = t.read_keys(spark, keys)
-    assert _plan(local).startswith("LocalTableScan"), _plan(local)
+    if arrow:
+        assert _plan(local).startswith("LocalTableScan"), _plan(local)
+    else:
+        assert "FileScan parquet" in _plan(local), _plan(local)
     with monkeypatch.context() as mp:
         mp.setattr(lake_table, "_LOOKUP_DRIVER_MAX_BYTES", -1)
         dist = t.read_keys(spark, keys)
@@ -51,8 +58,14 @@ def _both_paths(spark, t, keys, monkeypatch) -> list[dict]:
         (f.name, f.dataType) for f in dist.schema
     ]
     got = _rows(local)
-    assert got == _rows(dist)
+    assert repr(got) == repr(_rows(dist))
     return got
+
+
+def _read_rows(spark, t, keys) -> list[dict]:
+    """The rows of the full read() whose key is among `keys`."""
+    k0 = t.manifest()["key_cols"][0]
+    return _rows(t.read(spark).where(F.col(k0).isin(keys)))
 
 
 def _ts(sec: int) -> datetime.datetime:
@@ -361,3 +374,304 @@ def test_key_routing_makes_no_py4j_call(spark, tmp_path, monkeypatch):
     files = t.files_for_keys(spark, keys)
     assert sent == [], f"key routing sent {len(sent)} py4j commands"
     assert files == warm and files
+
+
+def test_nan_version_wins_mor_fold(spark, tmp_path, monkeypatch):
+    """Spark orders a NaN version above every number: a key merged at
+    5.0 and then at NaN reads the NaN row on both paths, as read()
+    does; a NULL version stays below both."""
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("v", T.DoubleType(), True),
+                T.StructField("s", T.StringType(), True),
+            ]
+        ),
+        ["doc_id"],
+        "v",
+        n_buckets=1,
+        merge_strategy="mor",
+    )
+    nan = float("nan")
+    s = "doc_id string, v double, s string, op string"
+    t.merge(
+        spark.createDataFrame(
+            [("a", 5.0, "five", "U"), ("b", nan, "b-nan", "U"), ("c", 1.0, "one", "U")], s
+        ),
+        epoch_id="e-0",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("a", nan, "nan", "U"), ("b", 7.0, "seven", "U"), ("c", None, "null", "U")], s
+        ),
+        epoch_id="e-1",
+    )
+    keys = ["a", "b", "c"]
+    got = _both_paths(spark, t, keys, monkeypatch)
+    assert repr(got) == repr(_read_rows(spark, t, keys))
+    assert [(r["doc_id"], r["s"]) for r in got] == [
+        ("a", "nan"), ("b", "b-nan"), ("c", "one")
+    ]
+
+
+def test_lookup_sends_one_local_relation(spark, tmp_path, monkeypatch):
+    """A warm driver-path read_keys whose kept files span two schema ids
+    sends exactly one toDataFrame and no collectToPython through the
+    py4j gateway before the caller collects: the files are read,
+    aligned and folded in Arrow."""
+    t = _bloom_mor_table(spark, tmp_path)
+    t.add_column("extra", T.StringType(), initial_default="dflt")
+    t.merge(
+        spark.createDataFrame(
+            [("k1", 7, _ts(1), ["x"], "p7-1", "x1", "U")],
+            T.StructType(
+                WIDE.fields
+                + [
+                    T.StructField("extra", T.StringType(), True),
+                    T.StructField("op", T.StringType(), True),
+                ]
+            ),
+        ),
+        epoch_id="e-4",
+    )
+    t.build_bloom_index(spark)
+    keys = ["k1", "k2", "k150", "k5"]
+    assert len({e["schema_id"] for e in t.files_for_keys(spark, keys)}) == 2
+    t.read_keys(spark, keys).collect()  # warm
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(client, "send_command", counting)
+        df = t.read_keys(spark, keys)
+    calls = [c.split("\n")[2] for c in sent if c.startswith("c\n")]
+    assert "collectToPython" not in calls, calls
+    assert calls.count("toDataFrame") == 1, calls
+    assert {r.doc_id: (r.v, r.payload, r.extra) for r in df.collect()} == {
+        "k1": (7, "p7-1", "x1"),
+        "k2": (0, "p0-2", "dflt"),
+        "k150": (1, "p1-150", "dflt"),
+    }
+
+
+def test_row_group_pruning_paths_agree(spark, tmp_path, monkeypatch):
+    """A key-sorted compacted file of many row groups: a one-key probe
+    reads only the row group whose key min/max holds the key, and keys
+    at row-group edges read as on the Spark path and in read()."""
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.IntegerType(), False),
+                T.StructField("v", T.LongType(), False),
+                T.StructField("s", T.StringType(), True),
+            ]
+        ),
+        ["doc_id"],
+        "v",
+        n_buckets=1,
+        merge_strategy="mor",
+    )
+    for e in range(2):
+        t.merge(
+            spark.createDataFrame(
+                [(i, e, f"s{e}-{i}", "U") for i in range(e, 2000, 2)],
+                "doc_id int, v long, s string, op string",
+            ),
+            epoch_id=f"e-{e}",
+        )
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    hadoop.set("parquet.block.size", "4096")
+    try:
+        assert t.compact(spark) is not None
+    finally:
+        hadoop.unset("parquet.block.size")
+    (entry,) = t.manifest()["buckets"]["0"]
+    md = pq.ParquetFile(os.path.join(t.root, entry["path"])).metadata
+    assert md.num_row_groups >= 4
+    bounds = [
+        (md.row_group(i).column(0).statistics.min, md.row_group(i).column(0).statistics.max)
+        for i in range(md.num_row_groups)
+    ]
+    reads = []
+    read_row_groups = pq.ParquetFile.read_row_groups
+
+    def counting(self, row_groups, *args, **kwargs):
+        reads.append(list(row_groups))
+        return read_row_groups(self, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting)
+    lo, hi = bounds[2]
+    assert [r["doc_id"] for r in _rows(t.read_keys(spark, [(lo + hi) // 2]))] == [
+        (lo + hi) // 2
+    ]
+    assert reads == [[2]]
+    edges = sorted({k for b in bounds for k in (b[0], b[1], b[1] + 1)} | {-1})
+    got = _both_paths(spark, t, edges, monkeypatch)
+    assert repr(got) == repr(_read_rows(spark, t, edges))
+    assert sorted(r["doc_id"] for r in got) == [k for k in edges if 0 <= k < 2000]
+
+
+
+@pytest.mark.parametrize(
+    "dt, stored, probe",
+    [
+        (
+            T.DateType(),
+            [datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)],
+            [datetime.date(2024, 1, 2), datetime.date(2023, 1, 1)],
+        ),
+        (T.TimestampType(), [_ts(1), _ts(2)], [_ts(2), _ts(3)]),
+        (
+            T.DecimalType(10, 2),
+            [decimal.Decimal("1.25"), decimal.Decimal("-3.50")],
+            [decimal.Decimal("-3.50"), decimal.Decimal("9.99")],
+        ),
+        (T.DoubleType(), [-0.0, 1.5, 2.25], [0.0, 2.25, 3.0]),
+    ],
+    ids=["date", "timestamp", "decimal", "double"],
+)
+def test_key_types_paths_agree(spark, tmp_path, monkeypatch, dt, stored, probe):
+    """Probe keys convert to the key column's Arrow type as PySpark
+    converts them, and a -0.0 key matches a 0.0 probe as Spark's
+    equality has it: both paths read what read() reads."""
+    t = LakeTable(str(tmp_path / "t"))
+    schema = T.StructType(
+        [T.StructField("k", dt, False), T.StructField("s", T.StringType(), True)]
+    )
+    t.create(schema, ["k"], None, n_buckets=2)
+    for e in range(2):
+        t.append(spark.createDataFrame([(k, f"e{e}-{i}") for i, k in enumerate(stored)], schema))
+    got = _both_paths(spark, t, probe, monkeypatch)
+    assert repr(got) == repr(_read_rows(spark, t, probe))
+    assert len(got) == 2 * sum(k in stored for k in probe)  # -0.0 == 0.0
+
+
+def _one_bucket_mor(tmp_path, fields) -> LakeTable:
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("v", T.LongType(), False),
+            ]
+            + fields
+        ),
+        ["doc_id"],
+        "v",
+        n_buckets=1,
+        merge_strategy="mor",
+    )
+    return t
+
+
+def test_collapsed_column_takes_spark_path(spark, tmp_path, monkeypatch):
+    """An int column collapsed to string by an incompatible batch: the
+    int->string cast is Spark's to make, so the lookup takes the Spark
+    path and reads what read() reads."""
+    t = _one_bucket_mor(tmp_path, [T.StructField("n", T.IntegerType(), True)])
+    t.merge(
+        spark.createDataFrame(
+            [(f"d{i}", 1, i * 11, "I") for i in range(4)],
+            "doc_id string, v long, n int, op string",
+        ),
+        epoch_id="e-0",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("d1", 2, True, "U")], "doc_id string, v long, n boolean, op string"
+        ),
+        epoch_id="e-1",
+    )
+    assert t.schema()["n"].dataType == T.StringType()
+    keys = ["d0", "d1", "d3"]
+    got = _both_paths(spark, t, keys, monkeypatch, arrow=False)
+    assert repr(got) == repr(_read_rows(spark, t, keys))
+    assert [r["n"] for r in got] == ["0", "true", "33"]
+
+
+def test_numeric_widening_paths_agree(spark, tmp_path, monkeypatch):
+    """long->double holding a value above 2^53 and int->float holding
+    one above 2^24: pyarrow rounds to nearest as Spark's casts do, so
+    the driver path serves them and matches the Spark path and read()."""
+    t = _one_bucket_mor(
+        tmp_path,
+        [
+            T.StructField("big", T.LongType(), True),
+            T.StructField("small", T.IntegerType(), True),
+        ],
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("a", 1, (1 << 53) + 1, (1 << 24) + 1, "I"), ("b", 1, -3, 5, "I")],
+            "doc_id string, v long, big long, small int, op string",
+        ),
+        epoch_id="e-0",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("c", 1, 0.5, 1.5, "I")],
+            "doc_id string, v long, big double, small float, op string",
+        ),
+        epoch_id="e-1",
+    )
+    assert t.schema()["big"].dataType == T.DoubleType()
+    assert t.schema()["small"].dataType == T.FloatType()
+    keys = ["a", "b", "c"]
+    got = _both_paths(spark, t, keys, monkeypatch)
+    assert repr(got) == repr(_read_rows(spark, t, keys))
+    assert (got[0]["big"], got[0]["small"]) == (float(1 << 53), float(1 << 24))
+
+
+# one castable JSON literal per (target type, literal kind); Spark casts
+# no int, float or bool to date, and no bool to timestamp
+_DEFAULT_TARGETS = {
+    "int": (T.IntegerType(), "7"),
+    "float": (T.FloatType(), "2.5"),
+    "double": (T.DoubleType(), "2.5"),
+    "dec": (T.DecimalType(10, 2), "3.25"),
+    "string": (T.StringType(), "s"),
+    "boolean": (T.BooleanType(), "true"),
+    "date": (T.DateType(), "2024-03-01"),
+    "ts": (T.TimestampType(), "2024-03-01 12:00:00"),
+}
+_SAME_KIND = {("int", "int"), ("float", "float"), ("double", "float"),
+              ("string", "str"), ("boolean", "bool")}
+
+
+def test_initial_default_kinds_paths_agree(spark, tmp_path, monkeypatch):
+    """add_column defaults of every JSON literal kind against every
+    target type Spark casts it to: a literal of the target's kind is
+    filled in Arrow, any other takes the Spark path; both read what
+    read() reads."""
+    t = _one_bucket_mor(tmp_path, [])
+    t.merge(
+        spark.createDataFrame(
+            [("a", 1, "I"), ("b", 2, "I")], "doc_id string, v long, op string"
+        ),
+        epoch_id="e-0",
+    )
+    cases = []
+    for tn, (dt, text) in _DEFAULT_TARGETS.items():
+        for kind, lit in (("str", text), ("int", 7), ("float", 2.1), ("bool", True)):
+            if tn == "date" and kind != "str" or tn == "ts" and kind == "bool":
+                continue
+            cases.append((f"c_{tn}_{kind}", dt, lit, (tn, kind) in _SAME_KIND))
+    for name, dt, lit, same in cases:
+        assert (lake_table._arrow_default(lit, dt) is not None) == same, name
+    keys = ["a", "b"]
+    for arrow in (True, False):
+        for name, dt, lit, same in cases:
+            if same == arrow:
+                t.add_column(name, dt, initial_default=lit)
+        got = _both_paths(spark, t, keys, monkeypatch, arrow=arrow)
+        assert repr(got) == repr(_read_rows(spark, t, keys))
+    assert got[0]["c_float_float"] == pytest.approx(2.1, rel=1e-7)
+    assert got[0]["c_int_str"] == 7 and got[0]["c_date_str"] == datetime.date(2024, 3, 1)
