@@ -23,9 +23,15 @@ Scale shape:
   stamp identifies each commit's files). Spark distributes partitions
   across executors.
 - `read()` runs executor-side on plain pyarrow — batched columnar
-  reads, no per-row Python — aligning old-schema files to the current
-  schema (schema evolution: missing columns null-padded, widened types
-  upcast).
+  reads, no per-row Python — aligning each file to the stream schema
+  by parquet field id with the plan `read_keys`' driver path uses
+  (`_arrow_align_plan`): a renamed column reads its old bytes, a
+  dropped and re-added one reads its initial default or NULL from
+  files of its former life, widened types are upcast. A file that
+  needs a cast or a default pyarrow does not make exactly as Spark
+  does (e.g. a column collapsed to string) fails the micro-batch with
+  an error naming the column, rather than serve a value `read()` does
+  not.
 
 Semantics notes:
 - MERGE-ON-READ tables only: a MOR commit's delta files contain
@@ -54,7 +60,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
-from airbyte_destination_spark.lake.table import _file_column_maps
+from airbyte_destination_spark.lake.table import (
+    _DELETED_FIELD,
+    _FIELD_ID,
+    _arrow_align_plan,
+    _arrow_aligned,
+    _file_fields,
+)
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -80,18 +92,10 @@ _MAINTENANCE_OPS = (
 class _FilePartition(InputPartition):
     path: str
     version: int
-    file_schema_json: str
     target_schema_json: str
-    # composed original->current column names for files written under
-    # older schema ids (column-rename evolution); "" = no renames
-    rename_map_json: str = ""
-    # {col: initial_default} for columns added with a default after
-    # this file was written (Iceberg v3 default-value evolution)
-    defaults_json: str = ""
-    # columns re-added AFTER this file was written whose bytes in the
-    # file are a prior life (dropped then re-added) — force-dropped
-    # before alignment so stale values cannot resurface
-    prior_drop_json: str = ""
+    # the file's `_arrow_align_plan` against the target, as JSON:
+    # [[file field (StructField JSON) or null, initial default], ...]
+    plan_json: str
 
 
 class LakeChangesDataSource(DataSource):
@@ -177,31 +181,36 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         return {"version": self._t.current_version()}
 
     def partitions(self, start: dict, end: dict):
-        target_json = json.dumps(self._schema.jsonValue())
         parts: list[_FilePartition] = []
         end_v = int(end["version"])
-        # rename transitions are cumulative in every manifest; the
-        # WINDOW-END manifest covers every transition a served file
-        # can need (a commit at v <= end only holds files with schema
-        # ids <= its own, and the stale-schema guard below rejects
-        # windows whose bound target predates a rename inside them)
+        # the stream schema's columns take the field ids of the
+        # WINDOW-END schema's columns of their names: the stale-schema
+        # guard below rejects windows whose bound schema predates a
+        # rename or drop inside them, so a bound name is that column
         m_end = self._t.manifest(end_v) if end_v >= 1 else {}
-        renames_end = m_end.get("renames")
-        defaults_end = m_end.get("defaults") or {}
-        adds_end = m_end.get("adds") or {}
-        drops_end = m_end.get("drops") or {}
-        names_end = (
+        ids = (
             {
-                f["name"]
+                f["name"]: f["metadata"][_FIELD_ID]
                 for f in m_end["schemas"][str(m_end["schema_id"])]["fields"]
             }
             if m_end
-            else set()
+            else {}
         )
         meta = {f.name for f in _META_COLS}
         bound_is_current = (
             {f.name for f in self._schema.fields} - meta
-        ) == names_end
+        ) == set(ids)
+        ids[_DELETED_FIELD.name] = _DELETED_FIELD.metadata[_FIELD_ID]
+        target = T.StructType(
+            [
+                T.StructField(f.name, f.dataType, f.nullable, {_FIELD_ID: ids[f.name]})
+                if f.name in ids
+                else f
+                for f in self._schema.fields
+            ]
+        )
+        target_json = json.dumps(target.jsonValue())
+        defaults_end = m_end.get("defaults") or {}
         for v in range(int(start["version"]) + 1, end_v + 1):
             try:
                 raw = self._t._read_raw(v)
@@ -226,11 +235,11 @@ class LakeChangesStreamReader(DataSourceStreamReader):
             if op.startswith(("drop_column(", "rename(")):
                 # metadata-only schema transitions. A consumer whose
                 # bound schema matches the WINDOW-END state crosses
-                # them like maintenance (the per-file rename /
-                # prior-life / default machinery serves end-state
-                # names); a consumer bound to any OTHER state is stale
-                # — silently serving it would misname or null columns
-                # (Delta CDF's schema-change discipline: fail loudly).
+                # them like maintenance (files resolve by field id, so
+                # they serve end-state names); a consumer bound to any
+                # OTHER state is stale — silently serving it would
+                # misname or null columns (Delta CDF's schema-change
+                # discipline: fail loudly).
                 if not bound_is_current:
                     raise RuntimeError(
                         f"lake_changes stream schema is stale: commit "
@@ -250,40 +259,34 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                     "the consumer from a snapshot past it"
                 )
             m = self._t.manifest(v)
-            schemas = m["schemas"]
+            plans: dict[str, str] = {}
             for entries in m["buckets"].values():
                 for e in entries:
                     if int(e.get("cv", 0)) != v:
                         continue
-                    # files written under a pre-rename schema id carry
-                    # old on-disk names; the composed map (from this
-                    # commit's cumulative renames) re-labels them
-                    # before name-based alignment executor-side
-                    # lineage-aware maps: renames that apply to THIS
-                    # file's columns, plus the prior-life (dead
-                    # lineage) names in the file's ON-DISK namespace —
-                    # the executor drops the latter BEFORE applying
-                    # the rename map, so stale bytes can't be
-                    # relabeled into the current namespace
-                    ren, prior = _file_column_maps(
-                        renames_end, adds_end, drops_end,
-                        str(e["schema_id"]),
-                    )
+                    sid = str(e["schema_id"])
+                    if sid not in plans:
+                        plan, bad = _arrow_align_plan(
+                            _file_fields(m["schemas"], sid), target, defaults_end
+                        )
+                        if plan is None:
+                            raise RuntimeError(
+                                f"lake_changes cannot serve column {bad!r} of "
+                                f"commit {v} of {self._t.root}: its files hold "
+                                "it at a type (or lack it with a default) "
+                                "that pyarrow does not convert exactly as "
+                                "Spark does; read it with "
+                                "LakeTable.table_changes instead"
+                            )
+                        plans[sid] = json.dumps(
+                            [[f and f.jsonValue(), dv] for f, dv in plan]
+                        )
                     parts.append(
                         _FilePartition(
                             path=os.path.join(self._t.root, e["path"]),
                             version=v,
-                            file_schema_json=json.dumps(
-                                schemas[str(e["schema_id"])]
-                            ),
                             target_schema_json=target_json,
-                            rename_map_json=json.dumps(ren) if ren else "",
-                            defaults_json=(
-                                json.dumps(defaults_end) if defaults_end else ""
-                            ),
-                            prior_drop_json=(
-                                json.dumps(prior) if prior else ""
-                            ),
+                            plan_json=plans[sid],
                         )
                     )
         # Spark requires a non-empty partition list; a sentinel with no
@@ -301,54 +304,21 @@ class LakeChangesStreamReader(DataSourceStreamReader):
 
 def _read_aligned(partition: _FilePartition):
     """Executor-side: read one immutable parquet file with pyarrow and
-    align it to the stream schema — null-pad columns the file predates,
-    upcast widened primitives, stamp _change_version, default _deleted
-    to false for files written before tombstones existed."""
-    import pyarrow as pa
+    align it to the stream schema by the partition's plan
+    (`_arrow_aligned`), stamp `_change_version`, and read `_deleted`
+    as false for files that do not hold it (append output)."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     target = T.StructType.fromJson(json.loads(partition.target_schema_json))
-    arrow_target = to_arrow_schema(target)
-    tbl = pq.read_table(partition.path)
-    if partition.prior_drop_json:
-        # prior-life force-drop FIRST, on on-disk names — before the
-        # rename map can relabel stale bytes into the current namespace
-        stale = [
-            c for c in json.loads(partition.prior_drop_json)
-            if c in tbl.column_names
-        ]
-        if stale:
-            tbl = tbl.drop_columns(stale)
-    if partition.rename_map_json:
-        ren = json.loads(partition.rename_map_json)
-        tbl = tbl.rename_columns([ren.get(c, c) for c in tbl.column_names])
-    n = tbl.num_rows
-    cols = []
-    for fld in arrow_target:
-        if fld.name == "_change_version":
-            cols.append(pa.array([partition.version] * n, type=fld.type))
-            continue
-        if fld.name in tbl.column_names:
-            col = tbl.column(fld.name)
-            if col.type != fld.type:
-                col = col.cast(fld.type)
-            if fld.name == "_deleted":
-                col = col.combine_chunks().fill_null(False)
-            cols.append(col)
-        elif fld.name == "_deleted":
-            cols.append(pa.array([False] * n, type=fld.type))
-        else:  # column added by schema evolution after this file:
-            # initial default if one was declared, else null-pad
-            dv = (
-                json.loads(partition.defaults_json).get(fld.name)
-                if partition.defaults_json
-                else None
-            )
-            if dv is not None:
-                cols.append(pa.array([dv] * n, type=fld.type))
-            else:
-                cols.append(pa.nulls(n, type=fld.type))
-    out = pa.table(cols, schema=arrow_target)
+    plan = [
+        (f and T.StructField.fromJson(f), dv)
+        for f, dv in json.loads(partition.plan_json)
+    ]
+    with pq.ParquetFile(partition.path, coerce_int96_timestamp_unit="us") as pf:
+        on_disk = set(pf.schema_arrow.names)
+        tbl = pf.read(columns=[f.name for f, _ in plan if f and f.name in on_disk])
+    out = _arrow_aligned(tbl, plan, target, {"_change_version": partition.version})
+    i = out.schema.get_field_index("_deleted")
+    out = out.set_column(i, out.schema.field(i), pc.fill_null(out.column(i), False))
     yield from out.to_batches(max_chunksize=1 << 16)

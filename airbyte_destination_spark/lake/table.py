@@ -54,6 +54,7 @@ _BUCKET_COL = "_b"
 _DELETED_COL = "_deleted"
 # transient sort key for z-order compaction; dropped before the write
 _ZORDER_COL = "_zorder"
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 class CommitConflict(Exception):
@@ -151,6 +152,9 @@ def _conflict_backoff(attempt: int) -> None:
     the retry budget buys progress instead of lockstep re-collisions."""
     time.sleep(random.uniform(0.0, min(0.02 * (2 ** attempt), 1.0)))
 _EPOCH_RE = re.compile(r"(.*)-(\d+)\Z")
+# the commit version in a data file's path: its (last) snapshot dir, or
+# the `_scv=<v>` dir a rescale split writes its output under
+_DIR_CV = re.compile(r".*/snap-([0-9]+)-[^/]*/_b=[^/]*/(?:_scv=([0-9]+)/)?")
 # delta-record bookkeeping keys (never part of a resolved manifest)
 _DELTA_KEYS = ("delta", "buckets_set", "buckets_del", "schemas_add",
                "epochs_add", "epochs_del")
@@ -241,72 +245,89 @@ def _delta_record(base: dict, full: dict) -> dict:
     return d
 
 
-def _file_column_maps(
-    renames: dict | None,
-    adds: dict | None,
-    drops: dict | None,
-    sid: str,
-) -> tuple[dict[str, str], list[str]]:
-    """LINEAGE-AWARE column maps for a file written under schema `sid`.
+# parquet field ids. Every top-level column of every manifest schema
+# carries one (`parquet.field.id` metadata, numbered from 1; the
+# manifest's `last_field_id` is the highest ever given): a rename or a
+# widening keeps the id, a drop retires it, and an add takes the next
+# one. Every data file carries them, so readers resolve columns by id,
+# not by name (Iceberg's column projection). The engine columns data
+# files may hold take reserved ids at the top of the int32 range.
+_FIELD_ID = "parquet.field.id"
+_DELETED_ID = 2**31 - 2
+_CV_ID = 2**31 - 3
 
-    Returns (ren, dead): `ren` maps the file's ON-DISK column names to
-    their CURRENT names; `dead` is the list of on-disk names whose
-    lineage was DROPPED after sid — their bytes are prior lives that
-    must be force-dropped BEFORE the rename projection runs.
 
-    Why name-based composition (`_compose_renames`) is not enough for
-    files: a rename transition names its source column by NAME, but a
-    name can change owners — after `rename c->r; add_column c`, a later
-    `rename c->x` applies to the NEW c lineage, not to the file's
-    on-disk c (which is still alive as r). The soak-found round-5
-    regression: blind composition chained the old file's c through the
-    new lineage's rename (c->r overwritten by c->x), relabeling live
-    bytes into a foreign (possibly dropped) name. This walk replays
-    rename/add/drop transitions in schema-id order, tracking which
-    names are owned by post-sid ADD lineages (`foreign`) — renames of
-    foreign names never touch the file's columns — and marking file
-    lineages killed by drops as `dead`."""
-    events: list[tuple[int, str, object]] = []
-    for tid, mp in (renames or {}).items():
-        if int(tid) > int(sid):
-            events.append((int(tid), "r", mp))
-    for tid, names in (adds or {}).items():
-        if int(tid) > int(sid):
-            events.append((int(tid), "a", names))
-    for tid, names in (drops or {}).items():
-        if int(tid) > int(sid):
-            events.append((int(tid), "d", names))
-    cur: dict[str, str | None] = {}  # on-disk name -> current name
-    foreign: set[str] = set()  # names owned by post-sid add lineages
-    dead: list[str] = []
-    for _, kind, payload in sorted(events, key=lambda e: e[0]):
-        if kind == "a":
-            for n in payload:
-                foreign.add(n)
-        elif kind == "d":
-            for n in payload:
-                if n in foreign:
-                    foreign.discard(n)
-                else:
-                    src = next(
-                        (k for k, v in cur.items() if v == n), n
-                    )
-                    if src not in dead:
-                        dead.append(src)
-                    cur[src] = None
-        else:  # rename {old: new}
-            for old, new in payload.items():
-                if old in foreign:
-                    foreign.discard(old)
-                    foreign.add(new)
-                    continue
-                src = next((k for k, v in cur.items() if v == old), None)
-                if src is not None:
-                    cur[src] = new
-                elif old not in dead:
-                    cur[old] = new
-    ren = {k: v for k, v in cur.items() if v is not None and k != v}
-    return ren, dead
+_DELETED_FIELD = T.StructField(_DELETED_COL, T.BooleanType(), True, {_FIELD_ID: _DELETED_ID})
+_CV_FIELD = T.StructField("_cv", T.LongType(), True, {_FIELD_ID: _CV_ID})
+
+
+def _number_fields(m: dict, schema: T.StructType, prev: T.StructType | None) -> T.StructType:
+    """`schema` with the manifest's field ids: a field keeps the id of
+    the `prev` field of its name, a new field takes the next id (and
+    advances `m["last_field_id"]`). Any other metadata, and any id the
+    incoming schema carried, is dropped."""
+    ids = {f.name: f.metadata[_FIELD_ID] for f in prev.fields} if prev else {}
+    out = []
+    for f in schema.fields:
+        fid = ids.get(f.name)
+        if fid is None:
+            fid = m["last_field_id"] = m["last_field_id"] + 1
+        out.append(T.StructField(f.name, f.dataType, f.nullable, {_FIELD_ID: fid}))
+    return T.StructType(out)
+
+
+def _reads_as(src: T.DataType, dst: T.DataType) -> bool:
+    """Whether Spark's parquet reader (vectorized and row-based alike)
+    reads a `src` column as `dst` with Spark's cast value: the casts
+    `_arrow_cast_exact` allows, and arrays, maps and structs of them,
+    except int/long to float and long to double. Files holding a
+    column it does not read as its target type (those, and `_widen`'s
+    collapse to string) are read at their own type and cast (`_scan`)."""
+    if isinstance(src, T.ArrayType) and isinstance(dst, T.ArrayType):
+        return _reads_as(src.elementType, dst.elementType)
+    if isinstance(src, T.MapType) and isinstance(dst, T.MapType):
+        return _reads_as(src.keyType, dst.keyType) and _reads_as(
+            src.valueType, dst.valueType
+        )
+    if isinstance(src, T.StructType) and isinstance(dst, T.StructType):
+        have = {f.name: f.dataType for f in src.fields}
+        return all(_reads_as(have[f.name], f.dataType) for f in dst.fields if f.name in have)
+    return _arrow_cast_exact(src, dst) and not (
+        isinstance(src, _INTEGRAL) and isinstance(dst, T.FloatType)
+        or isinstance(src, T.LongType) and isinstance(dst, T.DoubleType)
+    )
+
+
+# the Spark types each JSON literal kind of an initial default casts to
+# (Spark's ANSI cast rules for a bool, int, float or str literal)
+_FROM_ANY = _INTEGRAL + (T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BooleanType)
+_DEFAULT_CASTS = {
+    bool: _FROM_ANY,
+    int: _FROM_ANY + (T.TimestampType,),
+    float: _FROM_ANY + (T.TimestampType,),
+    str: _FROM_ANY + (T.DateType, T.TimestampType, T.TimestampNTZType, T.BinaryType),
+}
+
+
+def _default_sql(dv, dt: T.DataType) -> str:
+    """Initial default `dv` (a JSON literal) as the SQL text of
+    `F.lit(dv).cast(dt)`: the `EXISTS_DEFAULT` the parquet reader fills
+    into files that lack the column. Raises ValueError when Spark
+    cannot cast such a literal to `dt`."""
+    kind = type(dv)
+    if kind not in _DEFAULT_CASTS or not isinstance(dt, _DEFAULT_CASTS[kind]):
+        raise ValueError(
+            f"initial default {dv!r} cannot be cast to {dt.simpleString()}"
+        )
+    if kind is bool:
+        lit = "true" if dv else "false"
+    elif kind is int:
+        lit = f"{dv}L" if -(2**63) <= dv < 2**63 else str(dv)
+    elif kind is float:
+        lit = f"CAST('{dv!r}' AS DOUBLE)"
+    else:
+        lit = "'" + dv.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"CAST({lit} AS {dt.simpleString()})"
 
 
 def _resolve_delta(parent: dict, d: dict) -> dict:
@@ -348,6 +369,40 @@ def _stat_cols(m: dict) -> list[str]:
     first key column (as kmin/kmax), then the declared stats_cols."""
     k0 = m["key_cols"][0]
     return [k0] + [c for c in m.get("stats_cols", []) if c != k0]
+
+
+def _mor_fold(m: dict, df: DataFrame) -> DataFrame:
+    """For MOR tables, `df` (rows with `_cv`) folded to each key's
+    winner, the greatest (version, _cv), tombstones kept; else `df`."""
+    if m.get("merge_strategy", "cow") != "mor":
+        return df
+    from airbyte_destination_spark.operators.dedup import lww_reduce_agg
+
+    ver = m["version_col"]
+    return lww_reduce_agg(df, m["key_cols"], ([ver] if ver else []) + ["_cv"])
+
+
+def _with_field_ids(df: DataFrame, m: dict) -> DataFrame:
+    """`df` about to be written as data files of `m`: its columns of
+    the current schema, `_deleted` and `_cv` take the table's parquet
+    field ids (replacing any an incoming frame carried); other columns
+    (partition columns) pass through. The projection is built on the
+    JVM objects directly: through `Column.alias(metadata=)` it took
+    about 16 py4j round trips per column, here 4."""
+    ids = {
+        f.name: f.metadata[_FIELD_ID]
+        for f in T.StructType.fromJson(m["schemas"][str(m["schema_id"])]).fields
+        + [_DELETED_FIELD, _CV_FIELD]
+    }
+    jvm, jdf = df.sparkSession.sparkContext._jvm, df._jdf
+    meta = jvm.org.apache.spark.sql.types.Metadata
+    cols = [
+        getattr(jdf.col(c), "as")(c, meta.fromJson(json.dumps({_FIELD_ID: ids[c]})))
+        if c in ids
+        else jdf.col(c)
+        for c in df.columns
+    ]
+    return DataFrame(jdf.select(jvm.PythonUtils.toSeq(cols)), df.sparkSession)
 
 
 def _entry_bounds(entry: dict, col: str, key0: str):
@@ -394,9 +449,6 @@ def _bucket_cols(m: dict) -> list[str]:
     return m.get("bucket_cols") or m["key_cols"]
 
 
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-
 def _rehash_cols(m: dict, current: T.StructType, merged: T.StructType) -> list[str]:
     """The bucket columns whose hash changes from `current` to `merged`
     (schema evolution). A key column may change type only by an
@@ -422,15 +474,18 @@ def _rehash_cols(m: dict, current: T.StructType, merged: T.StructType) -> list[s
 
 def _zone_map_pred(keys_by_bucket: dict[int, list]):
     """file_pred keeping a file iff it lacks zone-map bounds or some
-    probe key of its bucket falls inside them. Type-mismatched bounds
-    (manifest written by an older schema) fail open — keep the file."""
+    probe key of its bucket falls inside them. A NaN probe key keeps
+    every file (it compares false with any bound, and parquet bounds
+    leave NaN out). Type-mismatched bounds (manifest written by an
+    older schema) fail open — keep the file."""
 
     def pred(b: int, entry: dict) -> bool:
         if "kmin" not in entry:
             return True
         try:
             return any(
-                k is not None and entry["kmin"] <= k <= entry["kmax"]
+                k is not None
+                and (k != k or entry["kmin"] <= k <= entry["kmax"])
                 for k in keys_by_bucket.get(b, ())
             )
         except TypeError:
@@ -545,40 +600,60 @@ def _arrow_default(dv, dt: T.DataType):
         return None  # an int beyond the type's range: Spark's cast decides
 
 
-def _arrow_align_plan(m: dict, sid: str, stored: bool, target: T.StructType):
-    """`_align_file_group` for files written under schema `sid`, as a
-    plan pyarrow applies: one (on-disk name, its Arrow type, default
-    scalar) per field of `target` (which ends in `_cv`) — a name for a
-    column the file holds after dead lineages are dropped and renames
-    applied, else a default scalar, else neither (typed nulls, or the
-    entry's commit version for `_cv`). None when a column needs a cast
-    or a default that pyarrow does not make exactly as Spark does."""
-    from pyspark.sql.pandas.types import to_arrow_type
+def _file_fields(schemas: dict, sid: str) -> list[T.StructField]:
+    """The columns, with their field ids, a data file written under
+    schema `sid` may hold: that schema's, the `_deleted` tombstone flag
+    and the per-row `_cv` of tiered-compaction and split output."""
+    return T.StructType.fromJson(schemas[sid]).fields + [_DELETED_FIELD, _CV_FIELD]
 
-    ren, dead = _file_column_maps(
-        m.get("renames"), m.get("adds"), m.get("drops"), sid
-    )
-    have = {
-        ren.get(f.name, f.name): f
-        for f in LakeTable._file_schema(m, sid, stored).fields
-        if f.name not in dead
-    }
-    defaults = m.get("defaults") or {}
+
+def _arrow_align_plan(file_fields, target: T.StructType, defaults: dict):
+    """How pyarrow aligns a data file holding `file_fields` to `target`,
+    matching columns by parquet field id: one (file field, initial
+    default) per target field — the file's field with the target
+    field's id, else the target field's default from `defaults`, else
+    neither (`_arrow_aligned` fills the caller's value or NULLs).
+    Returns (plan, None), or (None, name) for the first target column
+    whose cast or default pyarrow does not make exactly as Spark does."""
+    have = {f.metadata[_FIELD_ID]: f for f in file_fields}
     plan = []
     for f in target.fields:
-        src = have.get(f.name)
-        if src is not None:
-            if not _arrow_cast_exact(src.dataType, f.dataType):
-                return None
-            plan.append((src.name, to_arrow_type(src.dataType), None))
-        elif f.name in defaults:
-            dv = _arrow_default(defaults[f.name], f.dataType)
-            if dv is None:
-                return None
-            plan.append((None, None, dv))
+        src = have.get(f.metadata.get(_FIELD_ID))
+        dv = None if src is not None else defaults.get(f.name)
+        if (src is not None and not _arrow_cast_exact(src.dataType, f.dataType)) or (
+            dv is not None and _arrow_default(dv, f.dataType) is None
+        ):
+            return None, f.name
+        plan.append((src, dv))
+    return plan, None
+
+
+def _arrow_aligned(tbl, plan: list, target: T.StructType, fill: dict):
+    """pyarrow table `tbl` (a data file's columns by on-disk name)
+    aligned to `target` by `plan` (`_arrow_align_plan`): each column
+    cast to its target type, defaults filled, and a field the file
+    lacks (or a column its schema names but it does not hold, such as
+    `_deleted` in append output) filled with `fill[name]` when given,
+    else NULLs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
+    schema = to_arrow_schema(target)
+    n = tbl.num_rows
+    cols = []
+    for (src, dv), f, at in zip(plan, target.fields, schema.types):
+        if src is not None and src.name in tbl.column_names:
+            col = tbl[src.name].cast(to_arrow_type(src.dataType))
+            if col.type != at:
+                col = col.cast(at, safe=not pa.types.is_floating(at))
+        elif dv is not None:
+            col = pa.repeat(_arrow_default(dv, f.dataType), n)
+        elif f.name in fill:
+            col = pa.repeat(pa.scalar(fill[f.name], at), n)
         else:
-            plan.append((None, None, None))
-    return plan
+            col = pa.nulls(n, at)
+        cols.append(col)
+    return pa.Table.from_arrays(cols, schema=schema)
 
 
 def _probe_array(probe: list, key_dt: T.DataType, key_at):
@@ -687,6 +762,12 @@ class LakeTable:
         raw = self._read_raw(v)
         if raw.get("delta"):
             raw = _resolve_delta(self._resolved(v - 1), raw)
+        if "last_field_id" not in raw:
+            raise ValueError(
+                f"table {self.root} predates parquet field ids (version {v} "
+                "has no last_field_id); this engine resolves columns by id "
+                "and cannot read it"
+            )
         self._mcache[v] = raw
         if len(self._mcache) > 8:  # keep the recent tail only
             for old in sorted(self._mcache)[:-4]:
@@ -974,10 +1055,11 @@ class LakeTable:
                     "agg_spec requires a COW table — MOR delta files fold with "
                     "LWW at read time, which would drop partial aggregates"
                 )
-        manifest = {
+        manifest = {"last_field_id": 0}
+        manifest |= {
             "merge_strategy": merge_strategy,
             "schema_id": 0,
-            "schemas": {"0": schema.jsonValue()},
+            "schemas": {"0": _number_fields(manifest, schema, None).jsonValue()},
             "key_cols": key_cols,
             "version_col": version_col,
             "n_buckets": n_buckets,
@@ -1011,10 +1093,10 @@ class LakeTable:
     ) -> DataFrame:
         """Current table state as a DataFrame (bucket column excluded).
 
-        Files are grouped by the schema they were written under, each
-        group aligned (cast / null-fill) to the table's current schema,
-        then unioned — this is how added/widened columns read back
-        without rewriting history.
+        Every file is read in one scan at the table's current schema,
+        columns resolved by parquet field id (`_scan`) — this is how
+        renamed, added, defaulted and widened columns read back without
+        rewriting history.
 
         `read_optimized=True` (MOR tables; the Hudi RO-view shape):
         skip the per-key LWW fold entirely and read only each bucket's
@@ -1069,14 +1151,7 @@ class LakeTable:
         before the scan. Safe under the MOR fold only for predicates
         that are *per-key complete* — every file that can contain a
         probed key must be kept (zone-map pruning is; see read_keys)."""
-        out = self._read_buckets(spark, m, buckets, schema, file_pred=file_pred)
-        if m.get("merge_strategy", "cow") == "mor":
-            from airbyte_destination_spark.operators.dedup import lww_reduce_agg
-
-            ver = m["version_col"]
-            out = lww_reduce_agg(
-                out, m["key_cols"], ([ver] if ver else []) + ["_cv"]
-            )
+        out = _mor_fold(m, self._read_buckets(spark, m, buckets, schema, file_pred=file_pred))
         return (
             out.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False)))
             .drop(_DELETED_COL, "_cv")
@@ -1105,7 +1180,7 @@ class LakeTable:
           holds: one Arrow pass on the driver. Each kept file's row
           groups whose key min/max can hold a probe key (layer 3) are
           read with pyarrow, filtered to the probe keys, aligned to the
-          current schema as `_align_file_group` aligns them, folded per
+          current schema by field id as `_scan` aligns them, folded per
           key for MOR tables in `lww_reduce_agg`'s order, and returned
           as ONE LocalRelation. No Spark job runs (keys are routed by
           lake/hashing.py, with no JVM call), and the caller's
@@ -1171,7 +1246,7 @@ class LakeTable:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
         k0, ver = m["key_cols"][0], m["version_col"]
         mor = m.get("merge_strategy", "cow") == "mor"
@@ -1179,22 +1254,19 @@ class LakeTable:
             schema[ver].dataType, (T.ArrayType, T.MapType, T.StructType)
         ):
             return None
-        target = T.StructType(
-            schema.fields
-            + [
-                T.StructField(_DELETED_COL, T.BooleanType(), True),
-                T.StructField("_cv", T.LongType(), True),
-            ]
-        )
-        plans: dict[tuple, list | None] = {}
+        target = T.StructType(schema.fields + [_DELETED_FIELD, _CV_FIELD])
+        defaults = m.get("defaults") or {}
+        plans: dict[str, list | None] = {}
         files = []
         for e in kept:
-            g = (str(e["schema_id"]), bool(e.get("stored_cv")))
-            if g not in plans:
-                plans[g] = _arrow_align_plan(m, *g, target)
-            if plans[g] is None:
+            sid = str(e["schema_id"])
+            if sid not in plans:
+                plans[sid] = _arrow_align_plan(
+                    _file_fields(m["schemas"], sid), target, defaults
+                )[0]
+            if plans[sid] is None:
                 return None
-            files.append((e, plans[g]))
+            files.append((e, plans[sid]))
         arrow_target = to_arrow_schema(target)
         key_dt = schema[k0].dataType
         key_at = arrow_target.field(k0).type
@@ -1203,37 +1275,25 @@ class LakeTable:
         parts = []
         for e, plan in files:
             path = os.path.join(self.root, e["path"])
+            # the key column as this file holds it
+            k_src = plan[schema.fieldNames().index(k0)][0]
             with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
-                rgs = _row_groups_for(pf.metadata, k0, probe)
+                rgs = _row_groups_for(pf.metadata, k_src.name, probe)
                 on_disk = set(pf.schema_arrow.names)
-                names = [c for c, _, _ in plan if c in on_disk]
+                names = [f.name for f, _ in plan if f and f.name in on_disk]
                 tbl = pf.read_row_groups(rgs, columns=names) if rgs else None
             if tbl is None:
                 continue
             # the file's keys at the current key type: files written
             # before an int->long widening hold int32 keys
-            file_key_at = next(a for c, a, _ in plan if c == k0)
-            kcol = tbl[k0].cast(file_key_at).cast(key_at)
+            kcol = tbl[k_src.name].cast(to_arrow_type(k_src.dataType)).cast(key_at)
             if float_key:
                 kcol = pc.add(kcol, pa.scalar(0.0, key_at))  # -0.0 -> 0.0
             tbl = tbl.filter(pc.is_in(kcol, value_set=probe_arr))
-            n = tbl.num_rows
-            if not n:
-                continue
-            cols = []
-            for (c, at, dv), f in zip(plan, arrow_target):
-                if c in on_disk:
-                    col = tbl[c].cast(at)
-                    if at != f.type:
-                        col = col.cast(f.type, safe=not pa.types.is_floating(f.type))
-                elif dv is not None:
-                    col = pa.repeat(dv, n)
-                elif f.name == "_cv":
-                    col = pa.repeat(pa.scalar(int(e.get("cv", 0)), f.type), n)
-                else:
-                    col = pa.nulls(n, f.type)
-                cols.append(col)
-            parts.append(pa.Table.from_arrays(cols, schema=arrow_target))
+            if tbl.num_rows:
+                parts.append(
+                    _arrow_aligned(tbl, plan, target, {"_cv": int(e.get("cv", 0))})
+                )
         tbl = pa.concat_tables(parts) if parts else arrow_target.empty_table()
         if mor and tbl.num_rows:
             tbl = _lww_last(tbl, k0, ver)
@@ -1443,12 +1503,10 @@ class LakeTable:
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         cur_field = schema[key0]
         ktype = cur_field.dataType.simpleString()
-        # (bucket, relpath) for files needing an entry, grouped by the
-        # schema they were written under (the key may have widened —
-        # hash over the CURRENT type so probe hashes match)
+        # (bucket, relpath) by absolute path for files needing an entry
         shards: dict[int, dict] = {}
         live_paths: dict[int, set] = {}
-        by_schema: dict[str, list[tuple[int, str]]] = {}
+        rel_by_abs: dict[str, tuple[int, str]] = {}
         for b_str, entries in m["buckets"].items():
             b = int(b_str)
             shards[b] = _bloom.load_shard(self.root, b)
@@ -1457,28 +1515,18 @@ class LakeTable:
                 have = shards[b].get(e["path"]) if only_missing else None
                 if have is not None and _bloom.same_hashes(have.get("ktype"), ktype):
                     continue
-                by_schema.setdefault(str(e["schema_id"]), []).append((b, e["path"]))
-        if not by_schema:
+                ap = os.path.realpath(os.path.join(self.root, e["path"]))
+                rel_by_abs[ap] = (b, e["path"])
+        if not rel_by_abs:
             return 0
-        rel_by_abs: dict[str, tuple[int, str]] = {}
-        parts = []
-        for sid, pairs in by_schema.items():
-            file_field = T.StructType.fromJson(m["schemas"][sid])[key0]
-            paths = []
-            for b, rel in pairs:
-                ap = os.path.join(self.root, rel)
-                rel_by_abs[os.path.realpath(ap)] = (b, rel)
-                paths.append(ap)
-            df = spark.read.schema(T.StructType([file_field])).parquet(*paths)
-            parts.append(
-                df.select(
-                    F.xxhash64(F.col(key0).cast(cur_field.dataType)).alias("h"),
-                    F.input_file_name().alias("f"),
-                )
-            )
-        hashed = parts[0]
-        for p in parts[1:]:
-            hashed = hashed.unionByName(p)
+        # one scan at the CURRENT key type (a key only widens by an
+        # integral promotion, which the reader makes) so probe hashes
+        # match
+        hashed = (
+            spark.read.schema(T.StructType([cur_field]))
+            .parquet(*rel_by_abs)
+            .select(F.xxhash64(key0).alias("h"), F.input_file_name().alias("f"))
+        )
 
         def fold(pdf):
             import pandas as pd
@@ -1568,14 +1616,12 @@ class LakeTable:
         change. Tombstone winners make a key invisible on that side,
         like read()'s post-fold filter.
 
-        Both sides come out in the after-snapshot's schema. A file
-        aligns through the after-manifest's column lineage, so a
-        metadata-only rename, add, default or drop + re-add changes no
-        row and a pre-image reads under the current names. The
-        exception is a before-only file whose schema id the after-
-        manifest holds with another schema or not at all (a rollback
-        discarded that schema and may have reused the id): it aligns
-        through the before-manifest, then by name to the after-schema."""
+        Both sides come out in the after-snapshot's schema, every
+        column resolved by field id, so a metadata-only rename, add,
+        default or drop + re-add changes no row and a pre-image reads
+        under the current names. A before-only file's schema id is
+        looked up in the before-manifest (a rollback may have discarded
+        that schema, and a later commit reused the id)."""
         m = self.manifest(v_to)
         mb = self.manifest(v_from)
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
@@ -1583,43 +1629,27 @@ class LakeTable:
         ver = m["version_col"]
         cols = schema.fieldNames()
         payload_cols = [c for c in cols if c not in key_cols]
-        target = T.StructType(
-            schema.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-        )
         out_schema = T.StructType(
             [schema[k] for k in key_cols]
             + [T.StructField("change_type", T.StringType(), False)]
             + [schema[c] for c in payload_cols]
         )
-        by_group: dict[tuple, list[str]] = {}
+        # files split only by what their paths cannot tell: membership
+        # in the before and after file sets
+        groups: dict[tuple[bool, bool], list[dict]] = {}
         for b in set(m["buckets"]) | set(mb["buckets"]):
             ae = {e["path"]: e for e in m["buckets"].get(b, [])}
             be = {e["path"]: e for e in mb["buckets"].get(b, [])}
             for path, e in {**be, **ae}.items():
-                key = (
-                    str(e["schema_id"]),
-                    int(e.get("cv", 0)),
-                    bool(e.get("stored_cv")),
-                    path in be,
-                    path in ae,
-                )
-                by_group.setdefault(key, []).append(
-                    os.path.join(self.root, path)
-                )
-        if not by_group:
+                groups.setdefault((path in be, path in ae), []).append(e)
+        if not groups:
             return spark.createDataFrame([], out_schema)
-
-        def lineage(sid: str, in_a: bool) -> dict:
-            if in_a or m["schemas"].get(sid) == mb["schemas"][sid]:
-                return m
-            return mb
-
         parts = [
-            self._read_file_group(
-                spark, lineage(sid, in_a), sid, cv, stored, paths, target
-            )
-            .withColumns({"_in_b": F.lit(in_b), "_in_a": F.lit(in_a)})
-            for (sid, cv, stored, in_b, in_a), paths in by_group.items()
+            self._scan(
+                spark, m, es, T.StructType(schema.fields + [_DELETED_FIELD]),
+                schemas=m["schemas"] if in_a else {**m["schemas"], **mb["schemas"]},
+            ).withColumns({"_in_b": F.lit(in_b), "_in_a": F.lit(in_a)})
+            for (in_b, in_a), es in groups.items()
         ]
         src = parts[0]
         for p in parts[1:]:
@@ -1723,14 +1753,7 @@ class LakeTable:
             todo = [int(b) for b, fs in m["buckets"].items() if len(fs) >= min_files]
             if not todo:
                 return None
-            folded = self._read_buckets(spark, m, todo, schema)
-            if m.get("merge_strategy", "cow") == "mor":
-                from airbyte_destination_spark.operators.dedup import lww_reduce_agg
-
-                ver = m["version_col"]
-                folded = lww_reduce_agg(
-                    folded, m["key_cols"], ([ver] if ver else []) + ["_cv"]
-                )
+            folded = _mor_fold(m, self._read_buckets(spark, m, todo, schema))
             folded = self._with_bucket(folded.drop("_cv"), m)
             sort_cols = cluster_by
             if cluster == "zorder" and cluster_by:
@@ -1806,8 +1829,6 @@ class LakeTable:
         Returns {"version", "buckets", "files_merged", "bytes_merged"}
         or None when no bucket holds a qualifying run.
         """
-        from airbyte_destination_spark.operators.dedup import lww_reduce_agg
-
         def _size(e: dict) -> int:
             b = e.get("bytes")
             if b is None:
@@ -1849,12 +1870,9 @@ class LakeTable:
                 return entry["path"] in runs.get(str(b), ())
 
             todo = sorted(int(b) for b in runs)
-            folded = self._read_buckets(spark, m, todo, schema, file_pred=pred)
-            if m.get("merge_strategy", "cow") == "mor":
-                ver = m["version_col"]
-                folded = lww_reduce_agg(
-                    folded, m["key_cols"], ([ver] if ver else []) + ["_cv"]
-                )
+            folded = _mor_fold(
+                m, self._read_buckets(spark, m, todo, schema, file_pred=pred)
+            )
             folded = self._with_bucket(folded, m)
             new_files = self._write_bucketed(
                 folded, m, base + 1, n_out=len(todo), sort_keys=True,
@@ -1989,14 +2007,9 @@ class LakeTable:
         the rewrite `rebucket` and a key widening (`_evolve_if_needed`)
         share. Returns the new {bucket: [file entries]}."""
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        folded = self._read_buckets(spark, m, [int(b) for b in m["buckets"]], schema)
-        if m.get("merge_strategy", "cow") == "mor":
-            from airbyte_destination_spark.operators.dedup import lww_reduce_agg
-
-            ver = m["version_col"]
-            folded = lww_reduce_agg(
-                folded, m["key_cols"], ([ver] if ver else []) + ["_cv"]
-            )
+        folded = _mor_fold(
+            m, self._read_buckets(spark, m, [int(b) for b in m["buckets"]], schema)
+        )
         folded = self._with_bucket(folded.drop("_cv"), m)
         return self._write_bucketed(folded, m, version, sort_keys=True, mark_base=True)
 
@@ -2190,14 +2203,17 @@ class LakeTable:
         target: "T.StructType",
         n_new: int,
     ) -> DataFrame | None:
-        """The split re-cut as a DataFrame: union of per-(schema, cv,
-        base, stored_cv) file scans, schema-aligned, tagged with the
-        NEW bucket id pmod(hash(keys), n_new). Pure projection over the
-        scans — no groupBy/join/repartition anywhere, so the physical
-        plan has ZERO exchanges (asserted in tests/test_rescale.py):
-        each task reads old-bucket files and writes new-bucket
-        partitions directly, which is what makes rescale
-        O(table)/map-only rather than O(table)+shuffle like rebucket.
+        """The split re-cut as a DataFrame: the files of `by_group`
+        ({(schema id, cv, base, stored_cv): [paths]}) read at `target`
+        (`_scan`), with their entry's cv as `_scv`, their base and
+        stored_cv flags as `_sbase` / `_sstored`, and the NEW bucket id
+        pmod(hash(keys), n_new). One scan per flag pair, pure
+        projection over it — no groupBy/join/repartition anywhere, so
+        the physical plan has ZERO exchanges (asserted in
+        tests/test_rescale.py): each task reads old-bucket files and
+        writes new-bucket partitions directly, which is what makes
+        rescale O(table)/map-only rather than O(table)+shuffle like
+        rebucket.
 
         Tiered-compaction output ("stored_cv" entries) carries each
         row's ORIGINAL commit version as a real `_cv` data column; the
@@ -2207,16 +2223,19 @@ class LakeTable:
         version, higher than every unmerged delta existing at
         compaction time, so a re-stamp would silently promote stale
         rows over newer deltas in MOR LWW reads after publish."""
-        if not by_group:
+        groups: dict[tuple[bool, bool], list[dict]] = {}
+        for (sid, cv, isbase, stored), paths in by_group.items():
+            groups.setdefault((isbase, stored), []).extend(
+                {"path": os.path.relpath(p, self.root), "schema_id": sid, "cv": cv}
+                for p in paths
+            )
+        if not groups:
             return None
-        # non-stored groups come back stamped with their entry cv, which
-        # is what the entry records; only stored_cv entries read it back
         parts = [
-            self._read_file_group(spark, m, sid, cv, stored, paths, target)
-            .withColumn("_scv", F.lit(cv).cast("long"))
-            .withColumn("_sbase", F.lit(1 if isbase else 0))
-            .withColumn("_sstored", F.lit(1 if stored else 0))
-            for (sid, cv, isbase, stored), paths in by_group.items()
+            self._scan(spark, m, es, target, entry_cv="_scv").withColumns(
+                {"_sbase": F.lit(int(isbase)), "_sstored": F.lit(int(stored))}
+            )
+            for (isbase, stored), es in groups.items()
         ]
         out = parts[0]
         for p in parts[1:]:
@@ -2233,10 +2252,7 @@ class LakeTable:
         n_old = rec["n_old"]
         n_new = n_old * factor
         cur_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        target = T.StructType(
-            cur_schema.fields
-            + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-        )
+        target = T.StructType(cur_schema.fields + [_DELETED_FIELD])
         fps: dict[int, list] = {}
         by_group: dict[tuple[str, int, bool, bool], list[str]] = {}
         for b in grp:
@@ -2260,54 +2276,32 @@ class LakeTable:
                 "data", f"snap-{self.current_version() + 1:08d}-rs{nonce}"
             )
             out_dir = os.path.join(self.root, rel_snap)
-            out.write.mode("overwrite").partitionBy(
+            _with_field_ids(out, m).write.mode("overwrite").partitionBy(
                 _BUCKET_COL, "_scv", "_sbase", "_sstored"
             ).parquet(out_dir)
-            sid_now = m["schema_id"]
             new_entries: list[tuple[int, dict]] = []
-            for bdir in sorted(os.listdir(out_dir)):
-                if not bdir.startswith(f"{_BUCKET_COL}="):
-                    continue
-                nb = int(bdir.split("=", 1)[1])
-                for cvdir in sorted(os.listdir(os.path.join(out_dir, bdir))):
-                    cv = int(cvdir.split("=", 1)[1])
-                    for basedir in sorted(
-                        os.listdir(os.path.join(out_dir, bdir, cvdir))
-                    ):
-                        isbase = basedir.endswith("=1")
-                        for storeddir in sorted(
-                            os.listdir(
-                                os.path.join(out_dir, bdir, cvdir, basedir)
-                            )
-                        ):
-                            stored = storeddir.endswith("=1")
-                            d = os.path.join(
-                                out_dir, bdir, cvdir, basedir, storeddir
-                            )
-                            for fname in sorted(os.listdir(d)):
-                                if not fname.endswith(".parquet"):
-                                    continue
-                                rel = os.path.join(
-                                    rel_snap, bdir, cvdir, basedir,
-                                    storeddir, fname
-                                )
-                                entry = {
-                                    "path": rel,
-                                    "schema_id": sid_now,
-                                    "cv": cv,
-                                    "bytes": os.path.getsize(
-                                        os.path.join(self.root, rel)
-                                    ),
-                                }
-                                if isbase:
-                                    entry["base"] = True
-                                if stored:
-                                    # rows keep their ORIGINAL per-row
-                                    # commit version (_cv data column)
-                                    # through the split — never
-                                    # re-stamped with the compaction cv
-                                    entry["stored_cv"] = True
-                                new_entries.append((nb, entry))
+            # <out_dir>/_b=<nb>/_scv=<cv>/_sbase=<0|1>/_sstored=<0|1>/*.parquet
+            for d, _, fnames in sorted(os.walk(out_dir)):
+                part = dict(
+                    seg.split("=", 1) for seg in os.path.relpath(d, out_dir).split(os.sep)
+                    if "=" in seg
+                )
+                for fname in sorted(f for f in fnames if f.endswith(".parquet")):
+                    rel = os.path.relpath(os.path.join(d, fname), self.root)
+                    entry = {
+                        "path": rel,
+                        "schema_id": m["schema_id"],
+                        "cv": int(part["_scv"]),
+                        "bytes": os.path.getsize(os.path.join(self.root, rel)),
+                    }
+                    if part["_sbase"] == "1":
+                        entry["base"] = True
+                    if part["_sstored"] == "1":
+                        # rows keep their ORIGINAL per-row commit version
+                        # (_cv data column) through the split — never
+                        # re-stamped with the compaction cv
+                        entry["stored_cv"] = True
+                    new_entries.append((int(part[_BUCKET_COL]), entry))
             self._bind_footer_stats(m, [e for _, e in new_entries])
             for nb, entry in new_entries:
                 old_b = nb % n_old
@@ -2504,117 +2498,128 @@ class LakeTable:
         file_pred=None,
     ) -> DataFrame:
         """Read only the given buckets, aligned to `schema` plus the
-        `_deleted` tombstone column (null/false for live rows and for
-        files written before tombstones existed)."""
-        target = T.StructType(
-            schema.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-        )
-        # group files by (schema they were written under, commit version,
-        # stored-cv flag): schema id drives the alignment cast, commit
-        # version becomes the _cv column MOR reads use as the
-        # within-version tiebreak. Files written by TIERED compaction
-        # carry each row's ORIGINAL commit version as a real _cv data
-        # column ("stored_cv" entries) — merging an arbitrary subset of
-        # a bucket's files is order-correct only because every row keeps
-        # the commit version it was first written under.
-        by_group: dict[tuple[str, int, bool], list[str]] = {}
-        for b in buckets:
-            for entry in m["buckets"].get(str(b), []):
-                if file_pred is not None and not file_pred(b, entry):
-                    continue
-                key = (
-                    str(entry["schema_id"]),
-                    int(entry.get("cv", 0)),
-                    bool(entry.get("stored_cv")),
-                )
-                by_group.setdefault(key, []).append(os.path.join(self.root, entry["path"]))
-        if not by_group:
-            return spark.createDataFrame([], target).withColumn(
-                "_cv", F.lit(0).cast("long")
-            )
-        parts = [
-            self._read_file_group(spark, m, sid, cv, stored, paths, target)
-            for (sid, cv, stored), paths in by_group.items()
+        `_deleted` tombstone column (null/false for live rows) and the
+        `_cv` commit version MOR reads order by (`_scan`)."""
+        entries = [
+            e
+            for b in buckets
+            for e in m["buckets"].get(str(b), [])
+            if file_pred is None or file_pred(b, e)
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._scan(
+            spark, m, entries, T.StructType(schema.fields + [_DELETED_FIELD])
+        )
 
-    def _read_file_group(
+    def _scan(
         self,
         spark: SparkSession,
         m: dict,
-        sid: str,
-        cv: int,
-        stored: bool,
-        paths: list[str],
+        entries: list[dict],
         target: T.StructType,
+        schemas: dict | None = None,
+        entry_cv: str | None = None,
     ) -> DataFrame:
-        """Read ONE (schema_id, commit version, stored-cv) file group
-        aligned through manifest `m`'s column lineage to `target` plus
-        the `_cv` column — the per-group body of `_read_buckets`, shared
-        with `table_changes`, which passes the manifest each group
-        aligns through."""
-        df = spark.read.schema(self._file_schema(m, sid, stored)).parquet(*paths)
-        return self._align_file_group(m, sid, df, target, None if stored else cv)
+        """The rows of data files `entries` as ONE parquet scan at
+        `target` (columns of `m`'s current schema and `_deleted`) plus
+        `_cv`, columns resolved by parquet field id: a renamed column
+        reads its old bytes, a dropped and re-added one reads NULL or
+        its initial default (the reader's `EXISTS_DEFAULT`) from files
+        of its former life. A file's schema id is looked up in
+        `schemas` (default `m["schemas"]`).
 
-    @staticmethod
-    def _file_schema(m: dict, sid: str, stored: bool) -> T.StructType:
-        """The columns a data file written under schema `sid` holds:
-        that schema, the `_deleted` tombstone flag and, for stored-cv
-        (tiered-compaction) files, the per-row `_cv`."""
-        return T.StructType(
-            T.StructType.fromJson(m["schemas"][sid]).fields
-            + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-            + ([T.StructField("_cv", T.LongType(), True)] if stored else [])
-        )
-
-    @staticmethod
-    def _align_file_group(
-        m: dict,
-        sid: str,
-        df: DataFrame,
-        target: T.StructType,
-        cv: int | None = None,
-    ) -> DataFrame:
-        """Align `df`, rows of files written under schema `sid`, to
-        `target` plus the `_cv` column: dropped lineages out, renames
-        and initial defaults applied, types cast. `cv=None` means `df`
-        already carries `_cv`; otherwise `cv` is stamped on every row.
-        `_arrow_align_plan` is its pyarrow twin, for read_keys' driver
-        path."""
-        cv_field = T.StructField("_cv", T.LongType(), True)
-        target_cv = T.StructType(target.fields + [cv_field])
-        tgt_types = {f.name: f.dataType for f in target.fields}
-        ren, dead = _file_column_maps(
-            m.get("renames"), m.get("adds"), m.get("drops"), sid
-        )
-        stale_cols = [c for c in dead if c in df.columns]
-        if stale_cols:
-            # the file lineage of these on-disk columns was DROPPED
-            # after the file was written: the values are a prior
-            # life — force-dropped BEFORE the rename projection, so
-            # no later rename/re-add can relabel the stale bytes
-            # into the current namespace
-            df = df.drop(*stale_cols)
-        if ren:
-            # ONE projection (not sequential renames): the composed
-            # map may reuse freed names (a->b with c->a)
-            df = df.select(
-                *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
+        `_cv` is the file's stored `_cv` column where it has one
+        (tiered compaction and split output), else its entry's `cv`
+        (`_entry_cv`), which `entry_cv` names an extra column for.
+        Files of a schema id holding a column the reader does not read
+        as its target type (`_reads_as`) are scanned in a group of
+        their own at that type, cast, and unioned in."""
+        if spark.conf.get("spark.sql.parquet.fieldId.read.enabled") != "true":
+            raise RuntimeError(
+                "lake tables resolve columns by parquet field id: set "
+                "spark.sql.parquet.fieldId.read.enabled=true on the session "
+                "(airbyte_destination_spark.get_spark does)"
             )
-        for dc, dv in (m.get("defaults") or {}).items():
-            # initial-default evolution: only files whose schema
-            # PREDATES the add read the default; files that have
-            # the column keep explicit NULLs
-            if dc not in df.columns and dc in tgt_types:
-                df = df.withColumn(dc, F.lit(dv).cast(tgt_types[dc]))
-        if cv is None:
-            return align_to_schema(df, target_cv)
-        return align_to_schema(df, target).withColumn(
-            "_cv", F.lit(cv).cast("long")
+        schemas = schemas or m["schemas"]
+        defaults = m.get("defaults") or {}
+        out = T.StructType(
+            target.fields
+            + [_CV_FIELD]
+            + ([T.StructField(entry_cv, T.LongType(), True)] if entry_cv else [])
         )
+        if not entries:
+            return spark.createDataFrame([], out)
+        # one scan for every file the reader widens to the target, one
+        # per schema id holding a column it does not (read at its own
+        # type, then cast)
+        tgt = {f.metadata.get(_FIELD_ID): f.dataType for f in target.fields}
+        casts: dict[str, dict] = {}
+        groups: dict[str | None, list[dict]] = {}
+        for e in entries:
+            sid = str(e["schema_id"])
+            if sid not in casts:
+                casts[sid] = {
+                    f.metadata[_FIELD_ID]: f.dataType
+                    for f in T.StructType.fromJson(schemas[sid]).fields
+                    if f.metadata[_FIELD_ID] in tgt
+                    and not _reads_as(f.dataType, tgt[f.metadata[_FIELD_ID]])
+                }
+            groups.setdefault(sid if casts[sid] else None, []).append(e)
+        # the reader matches columns by id but looks up a file column's
+        # requested type, and pushes filters down, by NAME: every column
+        # is read under a name no file column holds for another id (the
+        # key, version and stats columns never rename or drop, so they
+        # keep theirs and their filters still prune row groups)
+        fixed = {*m["key_cols"], m["version_col"], *m.get("stats_cols", []), _DELETED_COL}
+        parts = []
+        for sid, es in groups.items():
+            own = casts[sid] if sid is not None else {}
+            read = []
+            for f in target.fields:
+                fid, meta = f.metadata.get(_FIELD_ID), dict(f.metadata)
+                if f.name in defaults and fid not in own:
+                    meta["EXISTS_DEFAULT"] = _default_sql(defaults[f.name], f.dataType)
+                name = f.name if f.name in fixed or fid is None else f"#{fid}"
+                read.append(T.StructField(name, own.get(fid, f.dataType), True, meta))
+            df = (
+                spark.read.schema(T.StructType(read + [_CV_FIELD]))
+                .parquet(*[os.path.join(self.root, e["path"]) for e in es])
+                .toDF(*target.fieldNames(), "_cv")
+            )
+            ecv = self._entry_cv(es)
+            df = df.withColumns(
+                {"_cv": F.expr(f"coalesce(_cv, {ecv})")}
+                | ({entry_cv: F.expr(ecv)} if entry_cv else {})
+            )
+            parts.append(align_to_schema(df, out) if own else df)
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
+        return df
+
+    @staticmethod
+    def _entry_cv(entries: list[dict]) -> str:
+        """The `cv` of each row's manifest entry among `entries`, as SQL
+        (one expression, so one py4j call): the commit version in the
+        file's path (`_DIR_CV`), or a literal for an entry whose `cv`
+        differs from it. It runs per row, so it cuts strings only as
+        far as these entries need (a regex cost a MOR read of 300k rows
+        about a third more wall)."""
+        # the path after its last snapshot dir: <v>-<nonce>/_b=<b>/[_scv=<v>/]...
+        rest = "substring_index(_metadata.file_path, '/snap-', -1)"
+        snap = f"substring_index({rest}, '-', 1)"
+        scv = f"substring_index(substring_index({rest}, '/_scv=', -1), '/', 1)"
+        found = [(e, _DIR_CV.match(e["path"])) for e in entries]
+        split = {d.group(2) is not None for _, d in found}
+        cv = scv if split == {True} else snap if split == {False} else (
+            f"CASE WHEN instr({rest}, '/_scv=') > 0 THEN {scv} ELSE {snap} END"
+        )
+        restamped = " ".join(
+            f"WHEN endswith(_metadata.file_path, '/{e['path']}') THEN {int(e['cv'])}"
+            for e, d in found
+            if int(e.get("cv", 0)) != int(d.group(2) or d.group(1))
+        )
+        cv = f"CAST({cv} AS BIGINT)"
+        return f"CASE {restamped} ELSE {cv} END" if restamped else cv
 
     # ------------------------------------------------------------- write
 
@@ -2688,7 +2693,7 @@ class LakeTable:
                 df = df.drop(_ZORDER_COL)
         elif sort_keys:
             df = df.sortWithinPartitions(_BUCKET_COL, *m["key_cols"])
-        writer = df.write.mode("overwrite")
+        writer = _with_field_ids(df, m).write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.partitionBy(_BUCKET_COL).parquet(out_dir)
@@ -2793,7 +2798,7 @@ class LakeTable:
         every committed version is consistent; its files take the base
         version as their `cv`, below the caller's new files."""
         current = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        merged = merge_schemas(current, incoming)
+        merged = _number_fields(m, merge_schemas(current, incoming), current)
         if merged != current:
             rehash = _rehash_cols(m, current, merged)
             new_names = {f.name for f in merged.fields} - {
@@ -2804,8 +2809,9 @@ class LakeTable:
             }
             bad = new_names & dropped_ever
             if bad:
-                # an implicit re-add would resurface prior-life values
-                # (merge evolution records no add transition)
+                # reads resolve by field id, so the re-added column
+                # would read NULL from old files; the guard keeps
+                # add_column() the one way to reuse a dropped name
                 raise ValueError(
                     f"column(s) {sorted(bad)} were dropped from this "
                     "table; re-add explicitly via add_column() so old "
@@ -3016,7 +3022,10 @@ class LakeTable:
         )
         evolved = False
         schema_epoch = f"{epoch_prefix}-schema"
-        if target != cur_schema and not self.is_epoch_applied(schema_epoch):
+        changed = [(f.name, f.dataType, f.nullable) for f in target.fields] != [
+            (f.name, f.dataType, f.nullable) for f in cur_schema.fields
+        ]  # field ids aside
+        if changed and not self.is_epoch_applied(schema_epoch):
             for attempt in range(_COMMIT_ATTEMPTS):
                 self._recover_orphan()
                 base = self.current_version()
@@ -3352,13 +3361,10 @@ class LakeTable:
         raise CommitConflict("unreachable")
 
     def rename_column(self, old: str, new: str) -> int:
-        """Metadata-only column rename — the Iceberg field-rename
-        analog (Iceberg resolves columns by field id; this format
-        resolves by name, so the manifest records the transition in a
-        `renames` map and every reader composes the mapping for files
-        written under older schema ids before name-based alignment).
-        No data moves; old files keep their on-disk column name and
-        are renamed in the read projection.
+        """Metadata-only column rename — the Iceberg field rename: the
+        column keeps its parquet field id, and readers resolve columns
+        by id, so old files serve their on-disk column under the new
+        name. No data moves.
 
         Restrictions (raise ValueError): key columns, the version
         column, and declared stats columns keep their names — they are
@@ -3368,8 +3374,8 @@ class LakeTable:
         open (keeps) pre-rename files until compaction rewrites them —
         correct, just less selective. Externally-configured secondary
         indexes on the renamed column must be re-pointed by the caller.
-        Time travel below the rename shows the old name (the mapping
-        composes per snapshot). A `lake_changes` stream bound before
+        Time travel below the rename shows the old name (each
+        snapshot's schema names the ids). A `lake_changes` stream bound before
         the rename fails loudly at the rename commit (schema change ⇒
         re-bootstrap, the Delta CDF discipline)."""
         if old == new:
@@ -3391,13 +3397,9 @@ class LakeTable:
             if any(
                 new in ns for ns in (old_m.get("drops") or {}).values()
             ):
-                # renaming ONTO a previously dropped name would collide
-                # with the dropped column's prior-life bytes in old
-                # files (two same-named columns in the read projection,
-                # with no add transition to force-drop the stale one).
-                # add_column() is the only safe way to reuse the name —
-                # it records the transition readers key the force-drop
-                # on.
+                # reads resolve by field id, so old files' bytes of the
+                # dropped column cannot resurface under the name; the
+                # guard keeps add_column() the one way to reuse it
                 raise ValueError(
                     f"column {new!r} was previously dropped; re-adding "
                     "the name is only safe via add_column(), not a "
@@ -3416,14 +3418,14 @@ class LakeTable:
             new_id = max(int(k) for k in m["schemas"]) + 1
             m["schemas"][str(new_id)] = T.StructType(
                 [
-                    T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
+                    T.StructField(
+                        new if f.name == old else f.name,
+                        f.dataType, f.nullable, f.metadata,
+                    )
                     for f in cur.fields
                 ]
             ).jsonValue()
             m["schema_id"] = new_id
-            renames = {k: dict(v) for k, v in (m.get("renames") or {}).items()}
-            renames[str(new_id)] = {old: new}
-            m["renames"] = renames
             if old in (m.get("agg_spec") or {}):
                 spec = dict(m["agg_spec"])
                 spec[new] = spec.pop(old)
@@ -3447,17 +3449,19 @@ class LakeTable:
         self, name: str, dtype: T.DataType, initial_default=None
     ) -> int:
         """Metadata-only column ADD with an optional INITIAL DEFAULT —
-        the Iceberg v3 default-value evolution shape: rows that existed
-        BEFORE the add (files whose schema lacks the column) read the
-        default; rows written after it read what was written, so an
-        explicit NULL stays NULL. No data moves — readers fill the
-        default per file before name-based alignment, exactly where
-        the rename map applies. Without a default this is just
-        union-by-name evolution made explicit (old rows read NULL).
-        `initial_default` must be a JSON-serializable literal castable
-        to `dtype`."""
+        the Iceberg v3 default-value evolution shape. The column takes
+        a new parquet field id: rows in files without it (written
+        before the add, or holding a dropped column of the same name)
+        read the default; rows written after it read what was
+        written, so an explicit NULL stays NULL. No data moves — the
+        reader fills the default (`EXISTS_DEFAULT`). Without a default
+        old rows read NULL. `initial_default` must be a bool, int,
+        float or str Spark casts to `dtype` (ValueError otherwise,
+        before anything commits)."""
         if name.startswith("_"):
             raise ValueError(f"{name!r}: leading underscore is reserved")
+        if initial_default is not None:
+            _default_sql(initial_default, dtype)  # raises unless Spark casts it
         for attempt in range(_COMMIT_ATTEMPTS):
             self._recover_orphan()
             base = self.current_version()
@@ -3473,22 +3477,14 @@ class LakeTable:
                 if k not in ("version", "committed_at")
             }
             new_id = max(int(k) for k in m["schemas"]) + 1
-            m["schemas"][str(new_id)] = T.StructType(
-                cur.fields + [T.StructField(name, dtype, True)]
+            m["schemas"][str(new_id)] = _number_fields(
+                m, T.StructType(cur.fields + [T.StructField(name, dtype, True)]), cur
             ).jsonValue()
             m["schema_id"] = new_id
             if initial_default is not None:
                 defaults = dict(m.get("defaults") or {})
                 defaults[name] = initial_default
                 m["defaults"] = defaults
-            # record the add transition: a column DROPPED and later
-            # RE-ADDED under the same name must not resurface its
-            # prior-life values out of files that physically still
-            # carry them — readers force-drop the column from files
-            # whose schema id predates the add, then apply the default
-            adds = {k: list(v) for k, v in (m.get("adds") or {}).items()}
-            adds[str(new_id)] = [name]
-            m["adds"] = adds
             m["operation"] = f"add_column({name})"
             m["epoch_id"] = None
             m["lineage"] = []
@@ -3505,12 +3501,11 @@ class LakeTable:
         the column leaves the current schema in one manifest commit; no
         data moves, old files keep the bytes until compaction rewrites
         them, and time travel below the drop still serves the column.
-        Re-adding the same name later is safe ONLY through
-        `add_column()` (it records the add transition, so prior-life
-        values in surviving files are force-dropped at read instead of
-        resurfacing); implicit merge-evolution re-adds are rejected for
-        a previously-dropped name. Key / version / stats / agg_spec
-        columns are restricted."""
+        The column's field id is retired, never reused: a column later
+        re-added under the name (only through `add_column()`; implicit
+        merge-evolution re-adds and renames onto the name are
+        rejected) takes a new id, so the old bytes never resurface.
+        Key / version / stats / agg_spec columns are restricted."""
         for attempt in range(_COMMIT_ATTEMPTS):
             self._recover_orphan()
             base = self.current_version()
@@ -3574,6 +3569,9 @@ class LakeTable:
                 for k, v in old.items()
                 if k not in ("version", "committed_at")
             }
+            # field ids are never reused: the rolled-back schemas' ids
+            # still live in files of the versions in between
+            m["last_field_id"] = self._resolved(base)["last_field_id"]
             m["operation"] = f"rollback({version})"
             # the rollback applies no epoch: a copied id would make
             # epoch_commit_version() resolve to this commit

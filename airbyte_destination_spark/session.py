@@ -53,6 +53,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # lake tables resolve columns by parquet field id (renames,
+        # drop + re-add); a data file without ids must fail the read, so
+        # `...fieldId.read.ignoreMissing` keeps its default (false)
+        .config("spark.sql.parquet.fieldId.read.enabled", "true")
+        # a lake read passes every data file of the snapshot to ONE
+        # parquet scan; past this many paths Spark stats them in a Spark
+        # job (one task per path), which cost more than the driver's own
+        # stat calls at every local table size measured
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.ui.enabled", "false")
         # 16g, not bigger: G1 on a huge heap intermittently burns minutes
         # of CPU at high thread counts (measured); nothing here caches

@@ -239,3 +239,33 @@ def test_expired_offset_fails_loudly_not_silently(spark, tmp_path, monkeypatch):
     )
     q.awaitTermination(180)
     assert len(got) == 1
+
+
+def test_collapsed_column_fails_instead_of_serving_arrow_cast(spark, tmp_path):
+    """A double column collapsed to string by merge evolution: read()
+    serves Spark's cast of the old double ('1.0'), which pyarrow does
+    not make ('1'), so the change feed fails naming the column rather
+    than serve a value read() does not."""
+    spark.dataSource.register(LakeChangesDataSource)
+    t = LakeTable(str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("change_lsn", T.LongType(), False),
+                T.StructField("x", T.DoubleType(), True),
+            ]
+        ),
+        ["doc_id"], "change_lsn", n_buckets=2, merge_strategy="mor",
+    )
+    t.merge(
+        spark.createDataFrame([("d1", 1, 1.0, "I")], "doc_id string, change_lsn long, x double, op string"),
+        epoch_id="e0",
+    )
+    t.merge(
+        spark.createDataFrame([("d2", 2, "two", "I")], "doc_id string, change_lsn long, x string, op string"),
+        epoch_id="e1",
+    )
+    assert {r.doc_id: r.x for r in t.read(spark).collect()} == {"d1": "1.0", "d2": "two"}
+    with pytest.raises(Exception, match="cannot serve column 'x'"):
+        spark.read.format("lake_changes").option("path", t.root).load().collect()

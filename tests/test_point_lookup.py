@@ -554,6 +554,27 @@ def test_key_types_paths_agree(spark, tmp_path, monkeypatch, dt, stored, probe):
     assert len(got) == 2 * sum(k in stored for k in probe)  # -0.0 == 0.0
 
 
+
+def test_nan_key_paths_agree(spark, tmp_path, monkeypatch):
+    """A NaN key matches a NaN probe, as Spark's equality has it: the
+    zone maps keep every file for a NaN probe (it compares false with
+    any bound), so both paths return the row read() holds, with and
+    without blooms."""
+    t = LakeTable(str(tmp_path / "t"))
+    schema = T.StructType(
+        [T.StructField("k", T.DoubleType(), False), T.StructField("s", T.StringType(), True)]
+    )
+    t.create(schema, ["k"], None, n_buckets=1)
+    t.append(spark.createDataFrame([(float("nan"), "nan"), (1.0, "one")], schema))
+    probe = [float("nan"), 1.0]
+    for _ in range(2):
+        assert len(t.files_for_keys(spark, [float("nan")])) == 1
+        got = _both_paths(spark, t, probe, monkeypatch)
+        assert repr(got) == repr(_read_rows(spark, t, probe))
+        assert sorted(r["s"] for r in got) == ["nan", "one"]
+        t.build_bloom_index(spark)
+
+
 def _one_bucket_mor(tmp_path, fields) -> LakeTable:
     t = LakeTable(str(tmp_path / "t"))
     t.create(

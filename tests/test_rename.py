@@ -1,14 +1,13 @@
 """Column-rename evolution (LakeTable.rename_column — the Iceberg
 field-rename analog, metadata-only): old files keep their on-disk name
-and every reader composes the rename map before name-based alignment;
-restrictions guard the names woven into routing/ordering/pruning."""
+and every reader resolves columns by parquet field id; restrictions
+guard the names woven into routing/ordering/pruning."""
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbyte_destination_spark.lake import LakeTable
-from airbyte_destination_spark.lake.table import _file_column_maps
 
 SCHEMA = T.StructType(
     [
@@ -30,47 +29,6 @@ def _mk(spark, tmp_path, strategy="mor"):
         epoch_id="e0",
     )
     return t
-
-
-def test_file_column_maps_chains_reuse_and_lineages():
-    ren = {"3": {"x": "y"}, "5": {"y": "z"}, "7": {"w": "y"}}
-    # file written under schema 2: x chased through y to z, w takes y
-    assert _file_column_maps(ren, None, None, "2") == ({"x": "z", "w": "y"}, [])
-    # file written under schema 4 has y (post first rename), w
-    assert _file_column_maps(ren, None, None, "4") == ({"y": "z", "w": "y"}, [])
-    # file written under schema 6: only the last transition applies
-    assert _file_column_maps(ren, None, None, "6") == ({"w": "y"}, [])
-    assert _file_column_maps(ren, None, None, "7") == ({}, [])
-    assert _file_column_maps(None, None, None, "0") == ({}, [])
-
-
-def test_file_column_maps_lineage_cases():
-    # drop d (t4) then re-add d (t5): the on-disk d is a DEAD lineage
-    assert _file_column_maps(None, {"5": ["d"]}, {"4": ["d"]}, "2") == (
-        {}, ["d"]
-    )
-    # rename x->n (t3), drop n (t4), re-add n (t5): the dead lineage
-    # lives on disk as x — chase the chain
-    assert _file_column_maps(
-        {"3": {"x": "n"}}, {"5": ["n"]}, {"4": ["n"]}, "2"
-    ) == ({}, ["x"])
-    # freed-name reuse (the soak-found round-5 regression): c1 renamed
-    # AWAY to r14 (t3), NEW c1 added (t4), new lineage renamed c1->r16
-    # (t5), r16 dropped (t6), c1 re-added (t7). The sid-2 file's
-    # on-disk c1 is the STILL-ALIVE r14 lineage: it must map c1->r14
-    # and nothing may be force-dropped — blind name composition chained
-    # it into the foreign lineage's rename (c1->r16, then dead).
-    assert _file_column_maps(
-        {"3": {"c1": "r14"}, "5": {"c1": "r16"}},
-        {"4": ["c1"], "7": ["c1"]},
-        {"6": ["r16"]},
-        "2",
-    ) == ({"c1": "r14"}, [])
-    # a file written AFTER the foreign add (sid 4) owns the NEW c1:
-    # its on-disk c1 follows the r16 rename and dies with the drop
-    assert _file_column_maps(
-        {"5": {"c1": "r16"}}, {"7": ["c1"]}, {"6": ["r16"]}, "4"
-    ) == ({}, ["c1"])
 
 
 def test_rename_reads_old_files_and_merges_new_name(spark, tmp_path):
@@ -268,6 +226,22 @@ def test_add_column_validation(spark, tmp_path):
     with pytest.raises(ValueError, match="reserved"):
         t.add_column("_hidden", T.StringType())
 
+
+
+@pytest.mark.parametrize(
+    "dtype, default",
+    [(T.DateType(), 7), (T.TimestampType(), True), (T.IntegerType(), [1])],
+    ids=["int-date", "bool-timestamp", "list-int"],
+)
+def test_add_column_rejects_uncastable_default(spark, tmp_path, dtype, default):
+    """An initial default Spark cannot cast to the column type is
+    refused before the commit; the table stays readable."""
+    t = _mk(spark, tmp_path)
+    v = t.current_version()
+    with pytest.raises(ValueError, match="cannot be cast"):
+        t.add_column("late", dtype, initial_default=default)
+    assert t.current_version() == v
+    assert sorted(r.doc_id for r in t.read(spark).collect()) == ["a", "b"]
 
 def test_add_column_default_in_change_feed(spark, tmp_path):
     from airbyte_destination_spark.lake.datasource import LakeChangesDataSource
@@ -509,3 +483,83 @@ def test_freed_name_reuse_add_keeps_renamed_lineage(spark, tmp_path):
         assert calls <= 5
     got = {row.doc_id: (row.r, row.c) for row in t.read(spark).collect()}
     assert got == {"a": ("keep-a", "fresh"), "b": ("keep-b", "fresh")}
+
+
+LINEAGE = "doc_id string, change_lsn long, {}, op string"
+
+
+def _lineage_reads(spark, t, monkeypatch) -> dict:
+    """{doc_id: row} of read(), after checking that both read_keys
+    paths and the batch change feed (one commit per key) serve the
+    same rows."""
+    from airbyte_destination_spark.lake.datasource import LakeChangesDataSource
+    from tests.test_point_lookup import _both_paths
+
+    spark.dataSource.register(LakeChangesDataSource)
+    got = {r.doc_id: r.asDict() for r in t.read(spark).collect()}
+    keys = sorted(got)
+    assert {r["doc_id"]: r for r in _both_paths(spark, t, keys, monkeypatch)} == got
+    feed = spark.read.format("lake_changes").option("path", t.root).load()
+    cols = t.read(spark).columns
+    assert {r.doc_id: r.asDict() for r in feed.select(*cols).collect()} == got
+    return got
+
+
+def _lineage_table(spark, tmp_path, cols):
+    t = LakeTable(str(tmp_path / "lin"))
+    t.create(
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("change_lsn", T.LongType(), False),
+            ]
+            + [T.StructField(c, T.StringType(), True) for c in cols]
+        ),
+        ["doc_id"], "change_lsn", n_buckets=2, merge_strategy="mor",
+    )
+    return t
+
+
+def _put(spark, t, row, cols):
+    ddl = LINEAGE.format(", ".join(f"{c} string" for c in cols))
+    t.merge(spark.createDataFrame([row + ("I",)], ddl), epoch_id=row[0])
+
+
+def test_rename_chain_reuses_freed_names(spark, tmp_path, monkeypatch):
+    """x->y, y->z, then w->y (the freed name taken by another column),
+    with a file written under every schema along the chain: each file's
+    bytes read under the names their column carries now."""
+    t = _lineage_table(spark, tmp_path, ["x", "w"])
+    _put(spark, t, ("a", 1, "xa", "wa"), ["x", "w"])
+    t.rename_column("x", "y")
+    _put(spark, t, ("b", 2, "yb", "wb"), ["y", "w"])
+    t.rename_column("y", "z")
+    _put(spark, t, ("c", 3, "zc", "wc"), ["z", "w"])
+    t.rename_column("w", "y")
+    _put(spark, t, ("d", 4, "zd", "yd"), ["z", "y"])
+    got = _lineage_reads(spark, t, monkeypatch)
+    assert {k: (r["z"], r["y"]) for k, r in got.items()} == {
+        "a": ("xa", "wa"), "b": ("yb", "wb"), "c": ("zc", "wc"), "d": ("zd", "yd"),
+    }
+
+
+def test_dead_lineages_never_resurface(spark, tmp_path, monkeypatch):
+    """A column renamed and then dropped (x->n, drop n, re-add n), and
+    a freed name re-added, renamed away and dropped (c->r, add c, c->s,
+    drop s, re-add c): files of the dead columns read the re-added
+    column's default, while the renamed-away column keeps its bytes."""
+    t = _lineage_table(spark, tmp_path, ["x", "c"])
+    _put(spark, t, ("a", 1, "xa", "ca"), ["x", "c"])
+    t.rename_column("x", "n")
+    t.drop_column("n")
+    t.add_column("n", T.StringType(), initial_default="und")
+    t.rename_column("c", "r")
+    t.add_column("c", T.StringType())
+    _put(spark, t, ("b", 2, "nb", "rb", "cb"), ["n", "r", "c"])
+    t.rename_column("c", "s")
+    t.drop_column("s")
+    t.add_column("c", T.StringType(), initial_default="fresh")
+    got = _lineage_reads(spark, t, monkeypatch)
+    assert {k: (r["n"], r["r"], r["c"]) for k, r in got.items()} == {
+        "a": ("und", "ca", "fresh"), "b": ("nb", "rb", "fresh"),
+    }

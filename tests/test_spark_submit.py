@@ -26,7 +26,9 @@ from pyspark.sql import SparkSession
 
 # master comes from the spark-submit CLI, never hard-coded in the job
 spark = (SparkSession.builder.appName("submit-e2e")
-         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.parquet.fieldId.read.enabled", "true")
+         .getOrCreate())
 
 from airbyte_destination_spark.lake import LakeTable
 from airbyte_destination_spark.streaming.pipeline import (

@@ -34,6 +34,7 @@ spark = (SparkSession.builder.appName("two-sizes")
          .master(master)
          .config("spark.sql.shuffle.partitions", shuffle)
          .config("spark.ui.enabled", "false")
+         .config("spark.sql.parquet.fieldId.read.enabled", "true")
          .getOrCreate())
 
 from airbyte_destination_spark.lake import LakeTable

@@ -169,6 +169,7 @@ def _loadavg():
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.appName(f"cluster-scale-{n_exec}")
          .config("spark.sql.shuffle.partitions", str(max(n_exec, 8)))
+         .config("spark.sql.parquet.fieldId.read.enabled", "true")
          .getOrCreate())
 
 from airbyte_destination_spark.lake import LakeTable
