@@ -542,7 +542,7 @@ def q_cdc_engine_tiered_final_state(spark: SparkSession, sf_dir: str) -> DataFra
     the LSM/merge-tree write-amplification answer): MOR replay with a
     tiered fold after every epoch (min_run=2 so runs actually form at
     this scale). Merged files carry per-row ORIGINAL commit versions
-    (stored_cv), so version ties across the merged/unmerged boundary
+    (the stored `_cv`), so version ties across the merged/unmerged boundary
     keep resolving exactly as an uncompacted read would — the final
     state must equal the plain LWW oracle."""
     key = (sf_dir, "tiered")

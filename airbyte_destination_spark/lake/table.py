@@ -67,7 +67,9 @@ def _file_col_stats(path: str, cols: list[str]) -> dict[str, tuple]:
     of binding per-file column bounds into the manifest at commit time.
     On a real cluster these bounds come back with the write-task
     metrics; a driver-side footer read per new file (≈ one per touched
-    bucket per commit) is the local[] equivalent and costs ~1 ms/file.
+    bucket per commit) is the local[] equivalent and costs about
+    0.09 ms of CPU per file (32 files of a 20k-event MOR epoch,
+    `plans/stored_cv/footer_bind.txt`).
 
     A column is omitted (no pruning possible for this file) when it is
     missing, any row group lacks min/max stats, or the values are not
@@ -81,8 +83,7 @@ def _file_col_stats(path: str, cols: list[str]) -> dict[str, tuple]:
         import pyarrow.parquet as pq
 
         # read_metadata parses just the footer — no ParquetFile/handle
-        # construction (measured vs a paired pre-zone-map A/B run: the
-        # whole binding costs <=1-2% of a 2M-event MOR apply epoch)
+        # construction
         md = pq.read_metadata(path)
         if md.num_row_groups == 0:
             return out
@@ -152,9 +153,8 @@ def _conflict_backoff(attempt: int) -> None:
     the retry budget buys progress instead of lockstep re-collisions."""
     time.sleep(random.uniform(0.0, min(0.02 * (2 ** attempt), 1.0)))
 _EPOCH_RE = re.compile(r"(.*)-(\d+)\Z")
-# the commit version in a data file's path: its (last) snapshot dir, or
-# the `_scv=<v>` dir a rescale split writes its output under
-_DIR_CV = re.compile(r".*/snap-([0-9]+)-[^/]*/_b=[^/]*/(?:_scv=([0-9]+)/)?")
+# the version in a data file's path: its snapshot dir's
+_DIR_CV = re.compile(r".*/snap-([0-9]+)-[^/]*/_b=")
 # delta-record bookkeeping keys (never part of a resolved manifest)
 _DELTA_KEYS = ("delta", "buckets_set", "buckets_del", "schemas_add",
                "epochs_add", "epochs_del")
@@ -259,6 +259,18 @@ _CV_ID = 2**31 - 3
 
 _DELETED_FIELD = T.StructField(_DELETED_COL, T.BooleanType(), True, {_FIELD_ID: _DELETED_ID})
 _CV_FIELD = T.StructField("_cv", T.LongType(), True, {_FIELD_ID: _CV_ID})
+# the manifest's `format_version`: 2 = every data file holds parquet
+# field ids and each row's `_cv`. `create` writes it; a table without
+# it (written before either) is refused when opened.
+_FORMAT_VERSION = 2
+
+
+def _restamped(e: dict) -> bool:
+    """Whether manifest entry `e` is a lost commit race's delta that
+    `_rebase_append_commit` re-stamped: its `cv` differs from its own
+    snapshot dir's version, which every writer gives its entries. Its
+    rows' `_cv` reads as the entry's `cv`, not as the stored column."""
+    return int(e["cv"]) != int(_DIR_CV.match(e["path"]).group(1))
 
 
 def _number_fields(m: dict, schema: T.StructType, prev: T.StructType | None) -> T.StructType:
@@ -603,7 +615,7 @@ def _arrow_default(dv, dt: T.DataType):
 def _file_fields(schemas: dict, sid: str) -> list[T.StructField]:
     """The columns, with their field ids, a data file written under
     schema `sid` may hold: that schema's, the `_deleted` tombstone flag
-    and the per-row `_cv` of tiered-compaction and split output."""
+    and each row's commit version `_cv`."""
     return T.StructType.fromJson(schemas[sid]).fields + [_DELETED_FIELD, _CV_FIELD]
 
 
@@ -762,11 +774,12 @@ class LakeTable:
         raw = self._read_raw(v)
         if raw.get("delta"):
             raw = _resolve_delta(self._resolved(v - 1), raw)
-        if "last_field_id" not in raw:
+        if raw.get("format_version") != _FORMAT_VERSION:
             raise ValueError(
-                f"table {self.root} predates parquet field ids (version {v} "
-                "has no last_field_id); this engine resolves columns by id "
-                "and cannot read it"
+                f"table {self.root} predates format version {_FORMAT_VERSION} "
+                f"(version {v} records {raw.get('format_version')}): this "
+                "engine needs parquet field ids and a `_cv` column in every "
+                "data file and cannot read it"
             )
         self._mcache[v] = raw
         if len(self._mcache) > 8:  # keep the recent tail only
@@ -1055,7 +1068,7 @@ class LakeTable:
                     "agg_spec requires a COW table — MOR delta files fold with "
                     "LWW at read time, which would drop partial aggregates"
                 )
-        manifest = {"last_field_id": 0}
+        manifest = {"format_version": _FORMAT_VERSION, "last_field_id": 0}
         manifest |= {
             "merge_strategy": merge_strategy,
             "schema_id": 0,
@@ -1277,9 +1290,11 @@ class LakeTable:
             path = os.path.join(self.root, e["path"])
             # the key column as this file holds it
             k_src = plan[schema.fieldNames().index(k0)][0]
+            # a re-stamped entry's rows take its `cv` (filled below)
+            fill = {"_cv": int(e["cv"])} if _restamped(e) else {}
             with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
                 rgs = _row_groups_for(pf.metadata, k_src.name, probe)
-                on_disk = set(pf.schema_arrow.names)
+                on_disk = set(pf.schema_arrow.names) - set(fill)
                 names = [f.name for f, _ in plan if f and f.name in on_disk]
                 tbl = pf.read_row_groups(rgs, columns=names) if rgs else None
             if tbl is None:
@@ -1291,9 +1306,7 @@ class LakeTable:
                 kcol = pc.add(kcol, pa.scalar(0.0, key_at))  # -0.0 -> 0.0
             tbl = tbl.filter(pc.is_in(kcol, value_set=probe_arr))
             if tbl.num_rows:
-                parts.append(
-                    _arrow_aligned(tbl, plan, target, {"_cv": int(e.get("cv", 0))})
-                )
+                parts.append(_arrow_aligned(tbl, plan, target, fill))
         tbl = pa.concat_tables(parts) if parts else arrow_target.empty_table()
         if mor and tbl.num_rows:
             tbl = _lww_last(tbl, k0, ver)
@@ -1754,7 +1767,7 @@ class LakeTable:
             if not todo:
                 return None
             folded = _mor_fold(m, self._read_buckets(spark, m, todo, schema))
-            folded = self._with_bucket(folded.drop("_cv"), m)
+            folded = self._with_bucket(folded, m)
             sort_cols = cluster_by
             if cluster == "zorder" and cluster_by:
                 from airbyte_destination_spark.lake.zorder import (
@@ -1808,36 +1821,24 @@ class LakeTable:
         it.
 
         Correctness (the subtle part): MOR read order is
-        (version_col, commit version) — `compact()` may renumber rows
-        to the new commit version only because it folds a WHOLE bucket.
-        Merging a SUBSET would reorder version ties against unmerged
-        files, so tiered output stores each row's ORIGINAL commit
-        version as a real `_cv` data column (`stored_cv` manifest
-        entries; `_read_buckets` reads it back instead of stamping the
-        file's own commit version). The within-run LWW fold is a
-        partial max per key — associative, so dropping rows strictly
-        dominated inside the run can never change the global winner.
-        Non-MOR tables (append mode: duplicate keys are data) skip the
-        fold and just bin-pack the run.
+        (version_col, _cv). Merging a SUBSET of a bucket's files must
+        not reorder version ties against the unmerged files, which it
+        cannot: every row keeps the `_cv` its first write gave it
+        through every rewrite (`_write_bucketed`). The within-run LWW
+        fold is a partial max per key — associative, so dropping rows
+        strictly dominated inside the run can never change the global
+        winner. Non-MOR tables (append mode: duplicate keys are data)
+        skip the fold and just bin-pack the run.
 
         Run selection is deterministic: files ascend by (bytes, path);
         the run grows while the next file is <= tier_factor x the run's
         mean size, merges when >= min_run files joined (capped at
-        max_run). File sizes come from the manifest (`bytes`, recorded
-        at write; getsize fallback for pre-existing entries).
+        max_run). File sizes come from the manifest (`bytes`, which
+        every writer records).
 
         Returns {"version", "buckets", "files_merged", "bytes_merged"}
         or None when no bucket holds a qualifying run.
         """
-        def _size(e: dict) -> int:
-            b = e.get("bytes")
-            if b is None:
-                try:
-                    b = os.path.getsize(os.path.join(self.root, e["path"]))
-                except OSError:
-                    b = 0
-            return int(b)
-
         for attempt in range(_COMMIT_ATTEMPTS):
             self._recover_orphan()
             base = self.current_version()
@@ -1849,14 +1850,14 @@ class LakeTable:
             for b, fs in m["buckets"].items():
                 if len(fs) < min_run:
                     continue
-                sized = sorted(fs, key=lambda e: (_size(e), e["path"]))
-                run, total = [sized[0]], _size(sized[0])
+                sized = sorted(fs, key=lambda e: (e["bytes"], e["path"]))
+                run, total = [sized[0]], sized[0]["bytes"]
                 for e in sized[1:]:
                     if len(run) >= max_run:
                         break
-                    if _size(e) <= tier_factor * (total / len(run)):
+                    if e["bytes"] <= tier_factor * (total / len(run)):
                         run.append(e)
-                        total += _size(e)
+                        total += e["bytes"]
                     else:
                         break
                 if len(run) >= min_run:
@@ -1875,8 +1876,7 @@ class LakeTable:
             )
             folded = self._with_bucket(folded, m)
             new_files = self._write_bucketed(
-                folded, m, base + 1, n_out=len(todo), sort_keys=True,
-                stored_cv=True,
+                folded, m, base + 1, n_out=len(todo), sort_keys=True
             )
             buckets = dict(m["buckets"])
             for b in runs:
@@ -1934,9 +1934,10 @@ class LakeTable:
             )
             if not dirty:
                 return base
-            # _resolve folds MOR deltas and drops tombstone rows
-            live = self._resolve(spark, m, dirty, schema)
-            live = self._with_bucket(live, m)
+            # MOR deltas folded, then tombstone rows dropped; rows keep `_cv`
+            live = _mor_fold(m, self._read_buckets(spark, m, dirty, schema))
+            live = live.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False)))
+            live = self._with_bucket(live.drop(_DELETED_COL), m)
             new_files = self._write_bucketed(
                 live, m, base + 1, sort_keys=True, mark_base=True
             )
@@ -2010,7 +2011,7 @@ class LakeTable:
         folded = _mor_fold(
             m, self._read_buckets(spark, m, [int(b) for b in m["buckets"]], schema)
         )
-        folded = self._with_bucket(folded.drop("_cv"), m)
+        folded = self._with_bucket(folded, m)
         return self._write_bucketed(folded, m, version, sort_keys=True, mark_base=True)
 
     # --------------------------------------------------- bucket rescale
@@ -2070,9 +2071,9 @@ class LakeTable:
         - each call splits up to `max_groups` groups of `group_size`
           old buckets, each group ONE map-only Spark job over the
           bucket's files as they are (MOR deltas are NOT folded: every
-          entry keeps its own cv / schema_id / base flag through
-          partitioned sub-dirs, so fold-on-read precedence — and the
-          exactly-once epoch state — is untouched);
+          row keeps its `_cv` and every file its base flag, so
+          fold-on-read precedence — and the exactly-once epoch state —
+          is untouched);
         - every split bucket records the fingerprint of the source
           entries it split; commits that land DURING the campaign make
           those buckets stale, and the next call re-splits just them
@@ -2199,43 +2200,26 @@ class LakeTable:
         self,
         spark: SparkSession,
         m: dict,
-        by_group: dict[tuple[str, int, bool, bool], list[str]],
+        by_base: dict[bool, list[dict]],
         target: "T.StructType",
         n_new: int,
     ) -> DataFrame | None:
-        """The split re-cut as a DataFrame: the files of `by_group`
-        ({(schema id, cv, base, stored_cv): [paths]}) read at `target`
-        (`_scan`), with their entry's cv as `_scv`, their base and
-        stored_cv flags as `_sbase` / `_sstored`, and the NEW bucket id
-        pmod(hash(keys), n_new). One scan per flag pair, pure
-        projection over it — no groupBy/join/repartition anywhere, so
-        the physical plan has ZERO exchanges (asserted in
-        tests/test_rescale.py): each task reads old-bucket files and
-        writes new-bucket partitions directly, which is what makes
-        rescale O(table)/map-only rather than O(table)+shuffle like
-        rebucket.
-
-        Tiered-compaction output ("stored_cv" entries) carries each
-        row's ORIGINAL commit version as a real `_cv` data column; the
-        split must preserve that column VERBATIM (and re-emit the new
-        entries with stored_cv=True) rather than re-stamping rows with
-        the entry's own cv — the entry cv is the compaction's commit
-        version, higher than every unmerged delta existing at
-        compaction time, so a re-stamp would silently promote stale
-        rows over newer deltas in MOR LWW reads after publish."""
-        groups: dict[tuple[bool, bool], list[dict]] = {}
-        for (sid, cv, isbase, stored), paths in by_group.items():
-            groups.setdefault((isbase, stored), []).extend(
-                {"path": os.path.relpath(p, self.root), "schema_id": sid, "cv": cv}
-                for p in paths
-            )
-        if not groups:
+        """The split re-cut as a DataFrame: the files of `by_base`
+        ({base flag: [entries]}) read at `target` plus their rows' `_cv`
+        (`_scan`), with their base flag as `_sbase` and the NEW bucket id
+        pmod(hash(keys), n_new). One scan per base flag, pure projection
+        over it — no groupBy/join/repartition anywhere, so the physical
+        plan has ZERO exchanges (asserted in tests/test_rescale.py):
+        each task reads old-bucket files and writes new-bucket
+        partitions directly, which is what makes rescale
+        O(table)/map-only rather than O(table)+shuffle like rebucket.
+        Every row keeps its `_cv`, so the MOR fold orders the re-cut
+        files exactly as it ordered their sources."""
+        if not by_base:
             return None
         parts = [
-            self._scan(spark, m, es, target, entry_cv="_scv").withColumns(
-                {"_sbase": F.lit(int(isbase)), "_sstored": F.lit(int(stored))}
-            )
-            for (isbase, stored), es in groups.items()
+            self._scan(spark, m, es, target).withColumn("_sbase", F.lit(int(isbase)))
+            for isbase, es in by_base.items()
         ]
         out = parts[0]
         for p in parts[1:]:
@@ -2247,40 +2231,33 @@ class LakeTable:
     ) -> None:
         """Split one group of old buckets into the new layout: ONE
         map-only job — no exchange (asserted in tests/test_rescale.py)
-        — whose output files inherit each source entry's (cv, schema
-        alignment, base flag) through partitioned sub-dirs."""
+        — whose output files keep each source row's `_cv` and, through
+        a partitioned sub-dir, its entry's base flag. Output entries
+        take their own snapshot dir's version as `cv`."""
         n_old = rec["n_old"]
         n_new = n_old * factor
         cur_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         target = T.StructType(cur_schema.fields + [_DELETED_FIELD])
         fps: dict[int, list] = {}
-        by_group: dict[tuple[str, int, bool, bool], list[str]] = {}
+        by_base: dict[bool, list[dict]] = {}
         for b in grp:
             entries = m["buckets"].get(str(b), [])
             fps[b] = self._entry_fp(entries)
             for e in entries:
-                key = (
-                    str(e["schema_id"]),
-                    int(e.get("cv", 0)),
-                    bool(e.get("base")),
-                    bool(e.get("stored_cv")),
-                )
-                by_group.setdefault(key, []).append(
-                    os.path.join(self.root, e["path"])
-                )
+                by_base.setdefault(bool(e.get("base")), []).append(e)
         new_by_old: dict[int, dict[str, list[dict]]] = {b: {} for b in grp}
-        out = self._split_plan(spark, m, by_group, target, n_new)
+        out = self._split_plan(spark, m, by_base, target, n_new)
         if out is not None:
-            nonce = uuid.uuid4().hex[:12]
+            cv = self.current_version() + 1
             rel_snap = os.path.join(
-                "data", f"snap-{self.current_version() + 1:08d}-rs{nonce}"
+                "data", f"snap-{cv:08d}-rs{uuid.uuid4().hex[:12]}"
             )
             out_dir = os.path.join(self.root, rel_snap)
             _with_field_ids(out, m).write.mode("overwrite").partitionBy(
-                _BUCKET_COL, "_scv", "_sbase", "_sstored"
+                _BUCKET_COL, "_sbase"
             ).parquet(out_dir)
             new_entries: list[tuple[int, dict]] = []
-            # <out_dir>/_b=<nb>/_scv=<cv>/_sbase=<0|1>/_sstored=<0|1>/*.parquet
+            # <out_dir>/_b=<nb>/_sbase=<0|1>/*.parquet
             for d, _, fnames in sorted(os.walk(out_dir)):
                 part = dict(
                     seg.split("=", 1) for seg in os.path.relpath(d, out_dir).split(os.sep)
@@ -2291,16 +2268,11 @@ class LakeTable:
                     entry = {
                         "path": rel,
                         "schema_id": m["schema_id"],
-                        "cv": int(part["_scv"]),
+                        "cv": cv,
                         "bytes": os.path.getsize(os.path.join(self.root, rel)),
                     }
                     if part["_sbase"] == "1":
                         entry["base"] = True
-                    if part["_sstored"] == "1":
-                        # rows keep their ORIGINAL per-row commit version
-                        # (_cv data column) through the split — never
-                        # re-stamped with the compaction cv
-                        entry["stored_cv"] = True
                     new_entries.append((int(part[_BUCKET_COL]), entry))
             self._bind_footer_stats(m, [e for _, e in new_entries])
             for nb, entry in new_entries:
@@ -2517,7 +2489,6 @@ class LakeTable:
         entries: list[dict],
         target: T.StructType,
         schemas: dict | None = None,
-        entry_cv: str | None = None,
     ) -> DataFrame:
         """The rows of data files `entries` as ONE parquet scan at
         `target` (columns of `m`'s current schema and `_deleted`) plus
@@ -2527,12 +2498,10 @@ class LakeTable:
         of its former life. A file's schema id is looked up in
         `schemas` (default `m["schemas"]`).
 
-        `_cv` is the file's stored `_cv` column where it has one
-        (tiered compaction and split output), else its entry's `cv`
-        (`_entry_cv`), which `entry_cv` names an extra column for.
-        Files of a schema id holding a column the reader does not read
-        as its target type (`_reads_as`) are scanned in a group of
-        their own at that type, cast, and unioned in."""
+        `_cv` is the stored column, except in re-stamped entries' files
+        (`_cv_expr`). Files of a schema id holding a column the reader
+        does not read as its target type (`_reads_as`) are scanned in a
+        group of their own at that type, cast, and unioned in."""
         if spark.conf.get("spark.sql.parquet.fieldId.read.enabled") != "true":
             raise RuntimeError(
                 "lake tables resolve columns by parquet field id: set "
@@ -2541,11 +2510,7 @@ class LakeTable:
             )
         schemas = schemas or m["schemas"]
         defaults = m.get("defaults") or {}
-        out = T.StructType(
-            target.fields
-            + [_CV_FIELD]
-            + ([T.StructField(entry_cv, T.LongType(), True)] if entry_cv else [])
-        )
+        out = T.StructType(target.fields + [_CV_FIELD])
         if not entries:
             return spark.createDataFrame([], out)
         # one scan for every file the reader widens to the target, one
@@ -2585,11 +2550,9 @@ class LakeTable:
                 .parquet(*[os.path.join(self.root, e["path"]) for e in es])
                 .toDF(*target.fieldNames(), "_cv")
             )
-            ecv = self._entry_cv(es)
-            df = df.withColumns(
-                {"_cv": F.expr(f"coalesce(_cv, {ecv})")}
-                | ({entry_cv: F.expr(ecv)} if entry_cv else {})
-            )
+            ecv = self._cv_expr(es)
+            if ecv is not None:
+                df = df.withColumn("_cv", F.expr(ecv))
             parts.append(align_to_schema(df, out) if own else df)
         df = parts[0]
         for p in parts[1:]:
@@ -2597,29 +2560,18 @@ class LakeTable:
         return df
 
     @staticmethod
-    def _entry_cv(entries: list[dict]) -> str:
-        """The `cv` of each row's manifest entry among `entries`, as SQL
-        (one expression, so one py4j call): the commit version in the
-        file's path (`_DIR_CV`), or a literal for an entry whose `cv`
-        differs from it. It runs per row, so it cuts strings only as
-        far as these entries need (a regex cost a MOR read of 300k rows
-        about a third more wall)."""
-        # the path after its last snapshot dir: <v>-<nonce>/_b=<b>/[_scv=<v>/]...
-        rest = "substring_index(_metadata.file_path, '/snap-', -1)"
-        snap = f"substring_index({rest}, '-', 1)"
-        scv = f"substring_index(substring_index({rest}, '/_scv=', -1), '/', 1)"
-        found = [(e, _DIR_CV.match(e["path"])) for e in entries]
-        split = {d.group(2) is not None for _, d in found}
-        cv = scv if split == {True} else snap if split == {False} else (
-            f"CASE WHEN instr({rest}, '/_scv=') > 0 THEN {scv} ELSE {snap} END"
-        )
-        restamped = " ".join(
+    def _cv_expr(entries: list[dict]) -> str | None:
+        """`_cv` over a scan of `entries` as SQL: the stored column, but
+        a re-stamped entry's `cv` for its file's rows (`_restamped`),
+        matched by `_metadata.file_path`. None when no entry is
+        re-stamped: the scan then reads `_cv` as a plain column and its
+        plan has no `_metadata`."""
+        over = " ".join(
             f"WHEN endswith(_metadata.file_path, '/{e['path']}') THEN {int(e['cv'])}"
-            for e, d in found
-            if int(e.get("cv", 0)) != int(d.group(2) or d.group(1))
+            for e in entries
+            if _restamped(e)
         )
-        cv = f"CAST({cv} AS BIGINT)"
-        return f"CASE {restamped} ELSE {cv} END" if restamped else cv
+        return f"CASE {over} ELSE _cv END" if over else None
 
     # ------------------------------------------------------------- write
 
@@ -2634,11 +2586,12 @@ class LakeTable:
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
         mark_base: bool = False,
-        bounds_provider=None,
-        stored_cv: bool = False,
     ) -> dict[str, list[dict]]:
         """Write df (which must carry _BUCKET_COL) partitioned by bucket;
         return {bucket: [file entries]} with paths relative to root.
+        Each entry's `cv` is `version_hint`, its snapshot dir's version.
+        Each row's `_cv` is df's own `_cv` column (a rewrite carries the
+        value a row's first write gave it), else `version_hint`.
 
         Co-locates each bucket in one task before the write (repartition
         on the bucket id) so a snapshot produces ~1 file per touched
@@ -2654,24 +2607,7 @@ class LakeTable:
         the ingest hot path stays sort-free because a per-batch sort
         would tax merge throughput for files that compaction will
         rewrite anyway (the Iceberg/ClickHouse shape: append fast,
-        sort on merge).
-
-        `bounds_provider` (optional): a zero-arg callable returning
-        {bucket_str: {col: (min, max)}} per-bucket column bounds that
-        were computed DISTRIBUTED (the caller's lineage aggregation),
-        used instead of driver-side footer reads for buckets that wrote
-        exactly one file and whose map covers every stat column —
-        the dominant fixed per-commit driver cost on the MOR hot path
-        (measured: ~0.27 s of 64 footer reads per epoch at local[8] vs
-        ~0 for dict lookups; at 10^10-event scale this is the Amdahl
-        serial term of every epoch). Provided bounds may be WIDER than
-        the file's true contents (they're aggregated over the
-        pre-reduce batch, a superset of the winners) — wider bounds
-        are still valid for pruning, just marginally less selective
-        until compaction rewrites the file with footer-exact bounds.
-        Multi-file buckets and uncovered columns fall back to footer
-        reads; provider errors propagate (they signal a failed lineage
-        job, which must abort the commit)."""
+        sort on merge)."""
         nonce = uuid.uuid4().hex[:12]
         rel_snap = os.path.join("data", f"snap-{version_hint:08d}-{nonce}")
         out_dir = os.path.join(self.root, rel_snap)
@@ -2693,14 +2629,14 @@ class LakeTable:
                 df = df.drop(_ZORDER_COL)
         elif sort_keys:
             df = df.sortWithinPartitions(_BUCKET_COL, *m["key_cols"])
+        if "_cv" not in df.columns:
+            df = df.withColumn("_cv", F.lit(version_hint).cast(T.LongType()))
         writer = _with_field_ids(df, m).write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.partitionBy(_BUCKET_COL).parquet(out_dir)
         new_files: dict[str, list[dict]] = {}
         sid = m["schema_id"]
-        k0 = m["key_cols"][0]
-        entries: list[dict] = []
         for bdir in sorted(os.listdir(out_dir)):
             if not bdir.startswith(f"{_BUCKET_COL}="):
                 continue
@@ -2711,7 +2647,7 @@ class LakeTable:
                     entry = {
                         "path": rel,
                         "schema_id": sid,
-                        "cv": version_hint,  # commit version (MOR precedence)
+                        "cv": version_hint,
                         # size in the manifest so maintenance policies
                         # (tiered compaction) never stat data files
                         "bytes": os.path.getsize(os.path.join(self.root, rel)),
@@ -2720,34 +2656,8 @@ class LakeTable:
                         # fully-folded maintenance output: key-unique
                         # per bucket, eligible for the RO view
                         entry["base"] = True
-                    if stored_cv:
-                        # rows carry their ORIGINAL commit version as a
-                        # real _cv column (tiered-compaction output);
-                        # readers must use it, not this entry's cv
-                        entry["stored_cv"] = True
                     new_files.setdefault(b, []).append(entry)
-                    entries.append((b, entry))
-        # zone maps: the lineage job's bounds where they cover a
-        # one-file bucket, else the footers (_bind_footer_stats)
-        stat_cols = _stat_cols(m)
-        provided: dict[str, dict] = {}
-        if entries and bounds_provider is not None:
-            provided = bounds_provider() or {}
-        pending: list[dict] = []
-        for b, entry in entries:
-            bmap = provided.get(b)
-            if (
-                bmap is not None
-                and len(new_files[b]) == 1
-                and all(c in bmap for c in stat_cols)
-            ):
-                entry["kmin"], entry["kmax"] = bmap[k0]
-                stats = {c: list(bmap[c]) for c in stat_cols[1:]}
-                if stats:
-                    entry["stats"] = stats
-            else:
-                pending.append(entry)
-        self._bind_footer_stats(m, pending)
+        self._bind_footer_stats(m, [e for es in new_files.values() for e in es])
         return new_files
 
     def _bind_footer_stats(self, m: dict, entries: list[dict]) -> None:
@@ -2756,29 +2666,17 @@ class LakeTable:
         FILES with these on top of bucket pruning; selective for MOR
         deltas whose batches cover narrow key ranges, CDC doc_ids
         correlate with time, and for sorted maintenance rewrites) plus
-        declared stats_cols bounds as `stats` for scan(). Footer reads
-        release the GIL inside Arrow C++, so a small pool keeps this
-        off the ingest critical path (~n_buckets/8 ms instead of
-        n_buckets ms of serial driver time per commit; on a real
-        cluster the bounds come back with the write-task metrics)."""
-        if not entries:
-            return
+        declared stats_cols bounds as `stats` for scan(). A serial loop:
+        32 footers take about 3 ms, a third of a thread pool's wall
+        time (`plans/stored_cv/footer_bind.txt`)."""
         k0 = m["key_cols"][0]
         stat_cols = _stat_cols(m)
-
-        def _bind(entry: dict) -> None:
-            stats = _file_col_stats(
-                os.path.join(self.root, entry["path"]), stat_cols
-            )
+        for entry in entries:
+            stats = _file_col_stats(os.path.join(self.root, entry["path"]), stat_cols)
             if k0 in stats:
                 entry["kmin"], entry["kmax"] = stats.pop(k0)
             if stats:
                 entry["stats"] = {c: list(v) for c, v in stats.items()}
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(entries))) as pool:
-            list(pool.map(_bind, entries))
 
     def _with_bucket(self, df: DataFrame, m: dict) -> DataFrame:
         return df.withColumn(_BUCKET_COL, bucket_expr(_bucket_cols(m), m["n_buckets"]))
@@ -2796,7 +2694,8 @@ class LakeTable:
         merge would leave the old row in its old bucket, and lookups
         would miss it). The rewrite lands in the caller's commit, so
         every committed version is consistent; its files take the base
-        version as their `cv`, below the caller's new files."""
+        version as their `cv`, below the caller's new files, and their
+        rows keep their `_cv`."""
         current = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         merged = _number_fields(m, merge_schemas(current, incoming), current)
         if merged != current:
@@ -3776,10 +3675,12 @@ class LakeTable:
         """Conflict fast-path for delta-APPEND commits (MOR merge and
         append mode): those data files never read the base snapshot, so
         a lost commit race needs a new MANIFEST, not a new write —
-        re-read the advanced base, restamp each new entry's `cv` to the
-        new target version (cv is carried only in the manifest, so the
-        LWW tiebreak ordering stays exactly what a serial commit would
-        have produced), append the entries, and commit. This turns the
+        re-read the advanced base, re-stamp each new entry's `cv` to the
+        new target version, append the entries, and commit. The files'
+        rows keep the `_cv` they were written with; readers take a
+        re-stamped entry's `cv` instead (`_restamped`), so the LWW
+        tiebreak ordering stays exactly what a serial commit would have
+        produced, and rewrites carry that value on. This turns the
         cost of a conflicted attempt from a full Spark write (seconds)
         into a metadata round (milliseconds) — without it, a compactor
         loop racing four writers starved one past its whole retry
@@ -3959,33 +3860,6 @@ class LakeTable:
                 ]
 
             is_mor_merge = mode == "merge" and m.get("merge_strategy", "cow") == "mor"
-            # MOR rider: per-bucket (min, max) of the key + declared
-            # stats columns, aggregated in the SAME lineage job, replace
-            # the post-write parquet-footer reads when each bucket wrote
-            # one delta file (the MOR shape). The footer loop was the
-            # dominant fixed per-commit driver cost (~0.27 s/epoch at 64
-            # buckets, local[8]) — a pure serial term that depressed the
-            # N->4N paired efficiency. Bounds over the PRE-reduce batch
-            # are exact for the key (the reduce preserves the distinct
-            # key set) and a valid superset for other columns (winners
-            # are a subset of batch rows). Only JSON-scalar columns
-            # participate; anything else falls back to footer reads in
-            # _write_bucketed.
-            bound_cols: list[str] = []
-            if is_mor_merge:
-                _scalar = (
-                    T.StringType, T.LongType, T.IntegerType,
-                    T.ShortType, T.ByteType, T.DoubleType, T.FloatType,
-                )
-                lin_types = {f.name: f.dataType for f in lin_src.schema.fields}
-                k0 = key_cols[0]
-                for c in [k0] + [s for s in m.get("stats_cols", []) if s != k0]:
-                    if isinstance(lin_types.get(c), _scalar):
-                        lineage_agg += [
-                            F.min(c).alias(f"_bmin_{c}"),
-                            F.max(c).alias(f"_bmax_{c}"),
-                        ]
-                        bound_cols.append(c)
             lineage_job = lin_src.groupBy(_BUCKET_COL).agg(*lineage_agg)
             if is_mor_merge:
                 # MOR never reads existing data and its bucket-aligned
@@ -4137,30 +4011,9 @@ class LakeTable:
                 ).drop("_src", "op", *carry_cols)
                 buckets = dict(m["buckets"])
                 if is_mor_merge:
-                    def _lineage_bounds() -> dict:
-                        # invoked by _write_bucketed AFTER its write action:
-                        # the lineage job ran concurrently, so this join is
-                        # usually instant; its rows carry the per-bucket
-                        # bounds aggregated executor-side
-                        t.join()
-                        if "err" in holder:
-                            raise holder["err"]
-                        out: dict[str, dict] = {}
-                        for r in holder["rows"]:
-                            bmap = {}
-                            for c in bound_cols:
-                                lo, hi = r[f"_bmin_{c}"], r[f"_bmax_{c}"]
-                                if isinstance(lo, (str, int, float)) and isinstance(
-                                    hi, (str, int, float)
-                                ):
-                                    bmap[c] = (lo, hi)
-                            out[str(int(r[_BUCKET_COL]))] = bmap
-                        return out
-
                     try:
                         new_files = self._write_bucketed(
-                            final, m, base + 1, already_bucket_aligned=True,
-                            bounds_provider=_lineage_bounds if bound_cols else None,
+                            final, m, base + 1, already_bucket_aligned=True
                         )
                     finally:
                         # always reap the background lineage job — a failed

@@ -40,6 +40,7 @@ def _assert_file_ids(t: LakeTable) -> int:
             schema = pq.read_schema(os.path.join(t.root, e["path"]))
             for f in schema:
                 assert int(f.metadata[b"PARQUET:field_id"]) == ids[f.name], (e, f)
+            assert "_cv" in schema.names, e  # each row's commit version
             n += 1
     return n
 
@@ -108,19 +109,24 @@ def test_merge_of_another_tables_read_ignores_its_ids(spark, tmp_path):
 
 
 def test_manifest_without_field_ids_is_refused(spark, tmp_path):
+    """A manifest without the format marker is refused, whether it
+    predates field ids or only the stored `_cv` column."""
     t = LakeTable(str(tmp_path / "t"))
     t.create(SCHEMA, ["k"], "v", n_buckets=2)
     path = t._version_path(1)
     with open(path) as f:
         rec = json.load(f)
-    del rec["last_field_id"]
-    for sch in rec["schemas"].values():
+    del rec["format_version"]
+    no_ids = json.loads(json.dumps(rec))
+    del no_ids["last_field_id"]
+    for sch in no_ids["schemas"].values():
         for f in sch["fields"]:
             f["metadata"] = {}
-    with open(path, "w") as f:
-        json.dump(rec, f)
-    with pytest.raises(ValueError, match="predates parquet field ids"):
-        LakeTable(t.root).read(spark)
+    for old in (rec, no_ids):
+        with open(path, "w") as f:
+            json.dump(old, f)
+        with pytest.raises(ValueError, match="predates format version 2"):
+            LakeTable(t.root).read(spark)
 
 
 def test_session_without_field_id_reads_is_refused(spark, tmp_path):
@@ -136,10 +142,27 @@ def test_session_without_field_id_reads_is_refused(spark, tmp_path):
     assert t.read(spark).count() == 1
 
 
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _stored_cv(t: LakeTable) -> dict:
+    """{k: [the `_cv` each current data file stores for k]}."""
+    out: dict = {}
+    for fs in t.manifest()["buckets"].values():
+        for e in fs:
+            tbl = pq.read_table(os.path.join(t.root, e["path"]), columns=["k", "_cv"])
+            for k, cv in zip(tbl["k"].to_pylist(), tbl["_cv"].to_pylist()):
+                out.setdefault(k, []).append(cv)
+    return out
+
+
 def test_restamped_entry_cv_orders_the_mor_fold(spark, tmp_path, monkeypatch):
     """An entry whose `cv` differs from its snapshot dir (a commit
     retry re-stamps rebased delta entries) orders the MOR fold by the
-    manifest's `cv` on every read path."""
+    manifest's `cv` on every read path, and a rescale split and a
+    compaction carry that `cv` on as the rows' stored `_cv`. Only a
+    read of such an entry's file touches `_metadata.file_path`."""
     from tests.test_point_lookup import _both_paths
 
     t = LakeTable(str(tmp_path / "t"))
@@ -147,6 +170,8 @@ def test_restamped_entry_cv_orders_the_mor_fold(spark, tmp_path, monkeypatch):
     first = t.merge(spark.createDataFrame([(1, 1, "first", None, "I")], B), epoch_id="e0").version
     t.merge(spark.createDataFrame([(1, 1, "second", None, "U")], B), epoch_id="e1")
     assert t.read(spark).first().p == "second"  # a version tie: the later commit wins
+    # no entry is re-stamped: `_cv` is a plain column read
+    assert "file_path" not in _plan_text(t.read(spark))
     base = t.current_version()
     m = t.manifest(base)
     m["buckets"] = {
@@ -154,6 +179,18 @@ def test_restamped_entry_cv_orders_the_mor_fold(spark, tmp_path, monkeypatch):
         for b, fs in m["buckets"].items()
     }
     m["operation"], m["epoch_id"], m["lineage"] = "merge", None, []
-    t._commit(m, base)
+    restamped = t._commit(m, base)
+    assert "file_path" in _plan_text(t.read(spark))
+    assert t.read(spark).first().p == "first"
+    assert [r["p"] for r in _both_paths(spark, t, [1], monkeypatch)] == ["first"]
+    # the split's rows keep the re-stamped cv, above the second commit's
+    while not t.split_buckets(spark, factor=2)["published"]:
+        pass
+    assert "file_path" not in _plan_text(t.read(spark))
+    assert sorted(_stored_cv(t)[1]) == [restamped - 1, restamped]
+    assert t.read(spark).first().p == "first"
+    assert [r["p"] for r in _both_paths(spark, t, [1], monkeypatch)] == ["first"]
+    assert t.compact(spark, min_files=1) is not None
+    assert _stored_cv(t) == {1: [restamped]}
     assert t.read(spark).first().p == "first"
     assert [r["p"] for r in _both_paths(spark, t, [1], monkeypatch)] == ["first"]

@@ -2,6 +2,9 @@
 compaction — ClickHouse ReplacingMergeTree's shape (the reference's
 actual storage engine)."""
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -208,13 +211,10 @@ def test_read_optimized_view(spark, tmp_path):
     assert ro3[1] == "NEWER"
 
 
-def test_mor_bounds_bound_from_lineage_not_footers(spark, table, monkeypatch):
-    """The MOR hot path binds per-file zone-map bounds from the lineage
-    job's per-bucket aggregates — ZERO driver-side footer reads (the
-    footer loop was the dominant fixed per-commit cost). Bounds must
-    still be valid (every key within [kmin, kmax]) and wider-than-file
-    is acceptable; COW-path maintenance (compact) keeps footer-exact
-    binding."""
+def test_mor_bounds_bound_from_footers(spark, table, monkeypatch):
+    """A MOR merge binds each new delta file's zone-map bounds from its
+    own parquet footer, so they are exactly the min and max of the keys
+    the file holds, and they prune point lookups."""
     from airbyte_destination_spark.lake import table as tmod
 
     calls = []
@@ -227,20 +227,17 @@ def test_mor_bounds_bound_from_lineage_not_footers(spark, table, monkeypatch):
     monkeypatch.setattr(tmod, "_file_col_stats", spy)
     table.merge(
         spark.createDataFrame(
-            [("a", [1], 1, "I"), ("m", [2], 2, "I"), ("z", [3], 3, "I")],
+            [("a", [1], 1, "I"), ("m", [2], 2, "I"), ("z", [3], 3, "I"), ("q", None, 4, "D")],
             BATCH_SCHEMA,
         ),
         epoch_id="e0",
     )
-    assert calls == []  # no footer reads on the MOR merge
-    m = table.manifest()
-    ents = [e for fs in m["buckets"].values() for e in fs]
-    assert ents and all("kmin" in e and "kmax" in e for e in ents)
-    assert all(e["kmin"] <= e["kmax"] for e in ents)
-    # the bounds actually prune: a probe key below every kmin opens no file
+    ents = [e for fs in table.manifest()["buckets"].values() for e in fs]
+    paths = [os.path.join(table.root, e["path"]) for e in ents]
+    assert ents and sorted(calls) == sorted(paths)  # one footer read per new file
+    for e, path in zip(ents, paths):
+        keys = pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist()
+        assert (e["kmin"], e["kmax"]) == (min(keys), max(keys))
+    # the bounds prune: a probe key below every kmin opens no file
     assert table.read_keys(spark, ["0-below-all"]).count() == 0
     assert {r.doc_id for r in table.read_keys(spark, ["m"]).collect()} == {"m"}
-    # compaction (maintenance rewrite, not the hot path) footer-binds
-    calls.clear()
-    table.compact(spark, min_files=1)
-    assert calls  # footer-exact bounds for folded files

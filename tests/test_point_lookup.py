@@ -142,9 +142,12 @@ def test_tiered_compaction_stored_cv_paths_agree(spark, tmp_path, monkeypatch):
     big = [("A", 5, "z", "U")] + [(f"pad{i}", 1, "p" * 64, "U") for i in range(4000)]
     t.merge(spark.createDataFrame(big, s), epoch_id="e-2")
     assert t.compact_tiered(spark, min_run=2, tier_factor=4.0) is not None
-    assert any(
-        e.get("stored_cv") for fs in t.manifest()["buckets"].values() for e in fs
-    )
+    stored = set()
+    for fs in t.manifest()["buckets"].values():
+        for e in fs:
+            tbl = pq.read_table(os.path.join(t.root, e["path"]), columns=["payload", "_cv"])
+            stored |= set(zip(tbl["payload"].to_pylist(), tbl["_cv"].to_pylist()))
+    assert {("y", 3), ("b1", 3), ("z", 4)} <= stored  # the merged rows keep theirs
     got = _both_paths(spark, t, ["A", "B", "pad7", "nope"], monkeypatch)
     assert [(r["doc_id"], r["payload"]) for r in got] == [
         ("A", "z"), ("B", "b1"), ("pad7", "p" * 64)

@@ -14,6 +14,7 @@ modular-arithmetic containment.
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -90,17 +91,11 @@ def test_split_plan_is_map_only(spark, tmp_table_root):
         T.StructType.fromJson(m["schemas"][str(m["schema_id"])]).fields
         + [T.StructField("_ab_deleted", T.BooleanType(), True)]
     )
-    by_group = {}
-    for b in range(m["n_buckets"]):
-        for e in m["buckets"].get(str(b), []):
-            key = (
-                str(e["schema_id"]),
-                int(e.get("cv", 0)),
-                bool(e.get("base")),
-                bool(e.get("stored_cv")),
-            )
-            by_group.setdefault(key, []).append(os.path.join(t.root, e["path"]))
-    plan = t._split_plan(spark, m, by_group, target, m["n_buckets"] * 2)
+    by_base = {}
+    for fs in m["buckets"].values():
+        for e in fs:
+            by_base.setdefault(bool(e.get("base")), []).append(e)
+    plan = t._split_plan(spark, m, by_base, target, m["n_buckets"] * 2)
     assert plan is not None
     assert count_exchanges(plan) == 0
 
@@ -229,8 +224,16 @@ def test_split_entries_keep_zone_maps_and_sizes(spark, tmp_table_root):
         rows = [(e * 100 + i, e * 1000 + i, e) for i in range(100)]
         t.append(spark.createDataFrame(rows, "k long, ts long, v long"), epoch_id=f"s-{e}")
     window = {"ts": (1000, 1099)}
-    before = {e["cv"] for e in t.files_for_bounds(window)}
-    assert len(before) == 1
+
+    def rows(entries) -> list:
+        out = []
+        for e in entries:
+            tbl = pq.read_table(os.path.join(t.root, e["path"]), columns=["k", "ts"])
+            out += zip(tbl["k"].to_pylist(), tbl["ts"].to_pylist())
+        return sorted(out)
+
+    before = rows(t.files_for_bounds(window))
+    assert [ts for _, ts in before] == list(range(1000, 1100))
 
     while not t.split_buckets(spark, factor=2)["published"]:
         pass
@@ -240,7 +243,7 @@ def test_split_entries_keep_zone_maps_and_sizes(spark, tmp_table_root):
     for e in entries:
         assert e["bytes"] > 0 and "ts" in e["stats"], e
     kept = t.files_for_bounds(window)
-    assert {e["cv"] for e in kept} == before
+    assert rows(kept) == before
     assert len(kept) < len(entries)
     assert t.scan(spark, window).count() == 100
 

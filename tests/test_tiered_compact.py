@@ -1,12 +1,12 @@
 """Size-tiered (LSM-style) compaction: merge runs of similar-sized
-files per bucket with per-row stored commit versions (`stored_cv`), so
-an arbitrary SUBSET of a bucket's files can merge without reordering
-MOR's (version, commit-version) total order — the property `compact()`
-gets only by folding whole buckets.
+files per bucket. Every row keeps its stored commit version `_cv`
+through the merge, so an arbitrary SUBSET of a bucket's files can merge
+without reordering MOR's (version, commit-version) total order.
 """
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +34,20 @@ def _batch(spark, rows):
     )
 
 
+def _stored(table, entries=None):
+    """(doc_id, payload, _cv) of every row the given entries' files
+    (default: every current file) store."""
+    if entries is None:
+        entries = [e for fs in table.manifest()["buckets"].values() for e in fs]
+    rows = set()
+    for e in entries:
+        tbl = pq.read_table(
+            os.path.join(table.root, e["path"]), columns=["doc_id", "payload", "_cv"]
+        )
+        rows |= set(zip(*(tbl[c].to_pylist() for c in tbl.column_names)))
+    return rows
+
+
 def _visible(table, spark):
     return {
         r["doc_id"]: (r["v"], r["payload"])
@@ -42,12 +56,12 @@ def _visible(table, spark):
 
 
 def test_subset_merge_preserves_version_tie_order(spark, tmp_path):
-    """THE ordering regression stored_cv exists for: key A carries the
-    SAME version in three commits (cv 2 < 3 < 4); visible payload is the
-    cv-4 row. Tiered compaction merges only the two SMALL files (cv 2,3)
-    — if the merged output were stamped with the compaction's own commit
-    version (5), the cv-3 row would suddenly outrank the cv-4 row and
-    the visible payload would flip. Stored per-row _cv keeps the
+    """THE ordering regression the stored `_cv` guards: key A carries
+    the SAME version in three commits (cv 2 < 3 < 4); visible payload is
+    the cv-4 row. Tiered compaction merges only the two SMALL files (cv
+    2,3) — if the merged output were stamped with the compaction's own
+    commit version (5), the cv-3 row would suddenly outrank the cv-4 row
+    and the visible payload would flip. Stored per-row _cv keeps the
     original order."""
     t = LakeTable(str(tmp_path / "t"))
     t.create(SCHEMA, ["doc_id"], "v", n_buckets=1, merge_strategy="mor")
@@ -62,9 +76,8 @@ def test_subset_merge_preserves_version_tie_order(spark, tmp_path):
     res = t.compact_tiered(spark, min_run=2, tier_factor=4.0)
     assert res is not None and res["files_merged"] == 2
     # the big cv-4 file was NOT rewritten
-    paths = [e["path"] for fs in t.manifest()["buckets"].values() for e in fs]
-    assert any(e.get("stored_cv") for fs in t.manifest()["buckets"].values()
-               for e in fs)
+    # the merged file keeps the cv-3 row's commit version, below cv 4
+    assert ("A", "y", 3) in _stored(t) and ("A", "z", 4) in _stored(t)
     assert _visible(t, spark)["A"] == (5, "z")  # order preserved
 
 
@@ -88,7 +101,7 @@ def test_tiered_equals_untouched_and_full_compact(spark, tmp_path):
     a = plain.read(spark).select(*cols)
     b = tiered.read(spark).select(*cols)
     assert a.exceptAll(b).count() == 0 and a.count() == b.count()
-    # a full compact over tiered output (stored_cv files re-fold) agrees
+    # a full compact over tiered output re-folds it and agrees
     tiered.compact(spark, min_files=2)
     c = tiered.read(spark).select(*cols)
     assert a.exceptAll(c).count() == 0 and a.count() == c.count()
@@ -101,14 +114,14 @@ def test_base_file_untouched_under_sustained_deltas(spark, tmp_path):
     t = LakeTable(str(tmp_path / "t"))
     t.create(SCHEMA, ["doc_id"], "v", n_buckets=1, merge_strategy="mor")
     base_rows = [(f"d{i}", 1, "x" * 128, "U") for i in range(20000)]
-    t.merge(_batch(spark, base_rows), epoch_id="seed-0")
+    merged = {t.merge(_batch(spark, base_rows), epoch_id="seed-0").version}
     base_path = t.manifest()["buckets"]["0"][0]["path"]
     v = 2
     for i in range(8):
-        t.merge(
+        merged.add(t.merge(
             _batch(spark, [(f"d{j}", v, f"u{i}", "U") for j in range(i, 50 + i)]),
             epoch_id=f"seed-{i + 1}",
-        )
+        ).version)
         v += 1
         if (i + 1) % 4 == 0:
             res = t.compact_tiered(spark, min_run=3)
@@ -116,9 +129,11 @@ def test_base_file_untouched_under_sustained_deltas(spark, tmp_path):
     paths = [e["path"] for e in t.manifest()["buckets"]["0"]]
     assert base_path in paths  # base never rewritten
     assert len(paths) < 9  # deltas folded
-    # every merged entry records bytes + stored_cv
+    # every entry records bytes, and every row keeps the commit version
+    # of the merge that wrote it, never a compaction's
     for e in t.manifest()["buckets"]["0"]:
         assert "bytes" in e
+        assert {cv for _, _, cv in _stored(t, [e])} <= merged
 
 
 def test_tombstone_still_guards_after_subset_merge(spark, tmp_path):
@@ -162,12 +177,12 @@ def test_noop_when_no_qualifying_run(spark, tmp_path):
 
 def test_rescale_preserves_stored_cv_version_ties(spark, tmp_path):
     """compact_tiered x split_buckets: the rescale re-cut must carry
-    tiered output's per-row _cv column VERBATIM (and re-emit entries
-    with stored_cv=True), never re-stamp rows with the entry's own cv.
-    The entry cv is the COMPACTION's commit version — higher than the
-    unmerged cv-4 delta — so a re-stamp would let the stale cv-3 row
-    outrank the cv-4 winner after publish (the exact reorder hazard
-    stored_cv exists to prevent, now across the rescale boundary)."""
+    each row's stored _cv VERBATIM, never re-stamp rows with an entry's
+    own cv. The tiered entry's cv is the COMPACTION's commit version —
+    higher than the unmerged cv-4 delta — so a re-stamp would let the
+    stale cv-3 row outrank the cv-4 winner after publish (the reorder
+    hazard the stored _cv prevents, now across the rescale
+    boundary)."""
     t = LakeTable(str(tmp_path / "t"))
     t.create(SCHEMA, ["doc_id"], "v", n_buckets=2, merge_strategy="mor")
     t.merge(_batch(spark, [("A", 5, "x", "U")]), epoch_id="e-0")  # cv 2
@@ -178,11 +193,7 @@ def test_rescale_preserves_stored_cv_version_ties(spark, tmp_path):
     t.merge(_batch(spark, big), epoch_id="e-2")                   # cv 4
     res = t.compact_tiered(spark, min_run=2, tier_factor=4.0)
     assert res is not None
-    assert any(
-        e.get("stored_cv")
-        for fs in t.manifest()["buckets"].values()
-        for e in fs
-    )
+    assert ("A", "y", 3) in _stored(t)
     assert _visible(t, spark)["A"] == (5, "z")
 
     r, calls = {"published": False}, 0
@@ -192,10 +203,8 @@ def test_rescale_preserves_stored_cv_version_ties(spark, tmp_path):
         assert calls <= 5
     m = t.manifest(t.current_version())
     assert m["n_buckets"] == 4 and m["operation"] == "rescale"
-    # stored entries survived the split as stored entries
-    assert any(
-        e.get("stored_cv") for fs in m["buckets"].values() for e in fs
-    )
+    # the re-cut files keep every row's commit version
+    assert {("A", "y", 3), ("A", "z", 4)} <= _stored(t)
     # and the version tie still resolves to the cv-4 winner
     assert _visible(t, spark)["A"] == (5, "z")
     # full state intact (spot: the pads survived the re-cut)
