@@ -39,9 +39,14 @@ Semantics notes:
   the change batch. A COW merge rewrites whole buckets (old rows mixed
   with new), so per-commit row attribution would be wrong — the
   source refuses cow tables rather than emitting garbage.
-- Maintenance commits (compact / purge_tombstones / rebucket /
-  rollback) rewrite or drop files without logical changes; their
-  versions are SKIPPED, like Delta CDF skipping OPTIMIZE.
+- Maintenance commits (compact / compact_tiered / purge_tombstones /
+  rebucket / the `split_buckets` publish, operation "rescale")
+  rewrite or drop files without logical changes; their versions are
+  SKIPPED, like Delta CDF skipping OPTIMIZE. A rescale re-cuts each
+  row into its new bucket's file with its `_cv` and base flag, and
+  publishes only when every split bucket still matches the head
+  manifest, so it changes no row. Rollback and delete_where do change
+  rows and fail the window.
 - Within one micro-batch, rows from multiple versions may interleave;
   `_change_version` orders them and the table's version_col orders
   within a key (the same contract the merge fold itself uses).
@@ -83,8 +88,8 @@ _DATA_OPS = ("merge", "append")
 # to skip silently (checkpoint commits no data files at all: its
 # entries keep their original commit versions)
 _MAINTENANCE_OPS = (
-    "compact", "compact_tiered", "purge_tombstones", "rebucket", "create",
-    "checkpoint",
+    "compact", "compact_tiered", "purge_tombstones", "rebucket", "rescale",
+    "create", "checkpoint",
 )
 
 

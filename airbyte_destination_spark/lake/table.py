@@ -394,6 +394,14 @@ def _mor_fold(m: dict, df: DataFrame) -> DataFrame:
     return lww_reduce_agg(df, m["key_cols"], ([ver] if ver else []) + ["_cv"])
 
 
+def _live(df: DataFrame) -> DataFrame:
+    """`df` (rows with `_deleted` and `_cv`) without its tombstone rows
+    and those two columns: the visible rows."""
+    return df.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False))).drop(
+        _DELETED_COL, "_cv"
+    )
+
+
 def _with_field_ids(df: DataFrame, m: dict) -> DataFrame:
     """`df` about to be written as data files of `m`: its columns of
     the current schema, `_deleted` and `_cv` take the table's parquet
@@ -510,13 +518,41 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a row: pmod(murmur3_hash(keys), N).
 
     Deliberately the SAME function Spark's HashPartitioning uses
-    (Murmur3, seed 42), so after `repartition(n_buckets, *key_cols)`
-    shuffle partition i holds exactly bucket i's rows — the merge's
-    aggregation exchange doubles as bucket placement and the bucketed
-    write needs no second exchange. Verified: pmod(hash(k), N) ==
-    spark_partition_id() under repartition(N, k).
+    (Murmur3, seed 42), so after `repartition(g, *key_cols)` with `g`
+    dividing N, shuffle partition p holds exactly the buckets b with
+    b mod g == p (`_by_bucket`) — the merge's aggregation exchange
+    doubles as bucket placement and the bucketed write needs no second
+    exchange. Verified: pmod(hash(k), N) == spark_partition_id() under
+    repartition(N, k).
     """
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+def _write_partitions(n_buckets: int, shuffle_partitions: int) -> int:
+    """The task count of a bucketed write: the smallest divisor of
+    `n_buckets` that is at least min(shuffle_partitions, n_buckets).
+    It divides n_buckets, so a row's partition pmod(hash, g) is its
+    bucket pmod(hash, n_buckets) mod g: each bucket lands whole in one
+    task. With shuffle_partitions >= n_buckets it is n_buckets, one
+    task per bucket."""
+    lo = min(shuffle_partitions, n_buckets)
+    return next(g for g in range(lo, n_buckets + 1) if n_buckets % g == 0)
+
+
+def _by_bucket(df: DataFrame, m: dict) -> DataFrame:
+    """`df` hash-partitioned on `m`'s bucket columns into
+    `_write_partitions` tasks: each bucket whole in one task, so a
+    bucketed write of it makes one file per bucket in about as many
+    tasks as the session has shuffle partitions, not one task per
+    bucket (each write task pays a fixed cost: it decodes the job's
+    serialized Hadoop configuration). The bucket columns are a subset
+    of the key, so an LWW, partial or aggregate fold over the key
+    reuses this exchange, and adaptive execution never coalesces a
+    REPARTITION_BY_NUM exchange."""
+    g = _write_partitions(
+        m["n_buckets"], int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
+    return df.repartition(g, *[F.col(c) for c in _bucket_cols(m)])
 
 
 # Longest probe list pushed to a parquet scan as a literal IN (read_keys'
@@ -1138,13 +1174,11 @@ class LakeTable:
             allowed: set[str] = set()
             for fs in m["buckets"].values():
                 allowed.update(e["path"] for e in fs if e.get("base"))
-            out = self._read_buckets(
-                spark, m, all_buckets, schema,
-                file_pred=lambda b, e: e["path"] in allowed,
-            )
-            return (
-                out.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False)))
-                .drop(_DELETED_COL, "_cv")
+            return _live(
+                self._read_buckets(
+                    spark, m, all_buckets, schema,
+                    file_pred=lambda b, e: e["path"] in allowed,
+                )
             )
         return self._resolve(spark, m, all_buckets, schema)
 
@@ -1164,11 +1198,25 @@ class LakeTable:
         before the scan. Safe under the MOR fold only for predicates
         that are *per-key complete* — every file that can contain a
         probed key must be kept (zone-map pruning is; see read_keys)."""
-        out = _mor_fold(m, self._read_buckets(spark, m, buckets, schema, file_pred=file_pred))
-        return (
-            out.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False)))
-            .drop(_DELETED_COL, "_cv")
+        return _live(
+            _mor_fold(m, self._read_buckets(spark, m, buckets, schema, file_pred=file_pred))
         )
+
+    def _folded(
+        self,
+        spark: SparkSession,
+        m: dict,
+        buckets: list[int],
+        schema: T.StructType,
+        file_pred=None,
+    ) -> DataFrame:
+        """The rows of the given buckets ready for a bucketed rewrite
+        (`_write_bucketed`): partitioned by `_by_bucket`, MOR deltas
+        folded per key over that same exchange (tombstones and `_cv`
+        kept), with `_BUCKET_COL`. One shuffle for the fold and the
+        write."""
+        df = _by_bucket(self._read_buckets(spark, m, buckets, schema, file_pred=file_pred), m)
+        return self._with_bucket(_mor_fold(m, df), m)
 
     def read_keys(self, spark: SparkSession, keys: list) -> DataFrame:
         """Point lookups with three pruning layers: (1) bucket pruning
@@ -1766,8 +1814,7 @@ class LakeTable:
             todo = [int(b) for b, fs in m["buckets"].items() if len(fs) >= min_files]
             if not todo:
                 return None
-            folded = _mor_fold(m, self._read_buckets(spark, m, todo, schema))
-            folded = self._with_bucket(folded, m)
+            folded = self._folded(spark, m, todo, schema)
             sort_cols = cluster_by
             if cluster == "zorder" and cluster_by:
                 from airbyte_destination_spark.lake.zorder import (
@@ -1779,7 +1826,7 @@ class LakeTable:
                 folded = folded.withColumn(_ZORDER_COL, zorder_key(ranges))
                 sort_cols = [_ZORDER_COL]
             new_files = self._write_bucketed(
-                folded, m, base + 1, n_out=len(todo),
+                folded, m, base + 1,
                 sort_keys=cluster_by is None, sort_cols=sort_cols,
                 max_records_per_file=max_records_per_file,
                 mark_base=True,
@@ -1871,12 +1918,9 @@ class LakeTable:
                 return entry["path"] in runs.get(str(b), ())
 
             todo = sorted(int(b) for b in runs)
-            folded = _mor_fold(
-                m, self._read_buckets(spark, m, todo, schema, file_pred=pred)
-            )
-            folded = self._with_bucket(folded, m)
             new_files = self._write_bucketed(
-                folded, m, base + 1, n_out=len(todo), sort_keys=True
+                self._folded(spark, m, todo, schema, file_pred=pred),
+                m, base + 1, sort_keys=True,
             )
             buckets = dict(m["buckets"])
             for b in runs:
@@ -1935,9 +1979,9 @@ class LakeTable:
             if not dirty:
                 return base
             # MOR deltas folded, then tombstone rows dropped; rows keep `_cv`
-            live = _mor_fold(m, self._read_buckets(spark, m, dirty, schema))
+            live = self._folded(spark, m, dirty, schema)
             live = live.where(~F.coalesce(F.col(_DELETED_COL), F.lit(False)))
-            live = self._with_bucket(live.drop(_DELETED_COL), m)
+            live = live.drop(_DELETED_COL)
             new_files = self._write_bucketed(
                 live, m, base + 1, sort_keys=True, mark_base=True
             )
@@ -2008,10 +2052,7 @@ class LakeTable:
         the rewrite `rebucket` and a key widening (`_evolve_if_needed`)
         share. Returns the new {bucket: [file entries]}."""
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        folded = _mor_fold(
-            m, self._read_buckets(spark, m, [int(b) for b in m["buckets"]], schema)
-        )
-        folded = self._with_bucket(folded, m)
+        folded = self._folded(spark, m, [int(b) for b in m["buckets"]], schema)
         return self._write_bucketed(folded, m, version, sort_keys=True, mark_base=True)
 
     # --------------------------------------------------- bucket rescale
@@ -2580,8 +2621,6 @@ class LakeTable:
         df: DataFrame,
         m: dict,
         version_hint: int,
-        n_out: int | None = None,
-        already_bucket_aligned: bool = False,
         sort_keys: bool = False,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
@@ -2593,10 +2632,13 @@ class LakeTable:
         Each row's `_cv` is df's own `_cv` column (a rewrite carries the
         value a row's first write gave it), else `version_hint`.
 
-        Co-locates each bucket in one task before the write (repartition
-        on the bucket id) so a snapshot produces ~1 file per touched
-        bucket instead of (tasks x buckets) small files — file count is
-        what kills both the commit listing and later scans at scale.
+        `df` must be partitioned by `_by_bucket` (callers put it under
+        their fold, so the fold and the write share one exchange): each
+        bucket is whole in one task, so a snapshot produces one file per
+        touched bucket instead of (tasks x buckets) small files — file
+        count is what kills both the commit listing and later scans at
+        scale. A task holding several buckets writes them one after the
+        other (the writer sorts its rows by bucket).
 
         `sort_keys=True` additionally sorts each task's rows by the key
         columns, so every parquet file comes out key-ordered and its
@@ -2611,13 +2653,6 @@ class LakeTable:
         nonce = uuid.uuid4().hex[:12]
         rel_snap = os.path.join("data", f"snap-{version_hint:08d}-{nonce}")
         out_dir = os.path.join(self.root, rel_snap)
-        if n_out is None:
-            n_out = m["n_buckets"]
-        if not already_bucket_aligned:
-            # co-locate each bucket in one task; callers whose plan is
-            # already hash(key)-partitioned with n_buckets partitions
-            # (the merge path) skip this exchange entirely
-            df = df.repartition(max(1, n_out), F.col(_BUCKET_COL))
         if sort_cols:
             # range clustering: the sorted stream + per-file record cap
             # makes consecutive files cut contiguous value ranges
@@ -2843,10 +2878,9 @@ class LakeTable:
                 .collect()
             )
             if dirty:
-                kept = self._resolve(spark, m, dirty, schema).where(
+                kept = _live(self._folded(spark, m, dirty, schema)).where(
                     ~pred | pred.isNull()
                 )
-                kept = self._with_bucket(kept, m)
                 new_files = self._write_bucketed(kept, m, base + 1, mark_base=True)
                 # a dirty bucket whose every row matched writes no file
                 m["buckets"] = {
@@ -2910,6 +2944,11 @@ class LakeTable:
         the SAME prefix resumes that campaign; a genuinely NEW campaign
         over the same table must use a distinct prefix or it will be
         skipped as already applied.
+
+        An expression over a key column must keep every key's value (a
+        widening cast, say): a row's key is its identity and fixes its
+        bucket, so the rewrite keeps each row in the bucket it is read
+        from.
         """
         # phase 0: metadata-only schema evolution so readers and
         # concurrent writers see the target schema before any rewrite
@@ -2970,19 +3009,20 @@ class LakeTable:
                 base = self.current_version()
                 m = self.manifest(base)
                 schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-                state = self._resolve(spark, m, group, schema)
                 dirty = group
                 if pred is not None:
                     dirty = sorted(
                         int(r[0])
-                        for r in self._with_bucket(state, m)
+                        for r in self._with_bucket(
+                            self._resolve(spark, m, group, schema), m
+                        )
                         .where(pred)
                         .select(_BUCKET_COL)
                         .distinct()
                         .collect()
                     )
-                    state = self._resolve(spark, m, dirty, schema)
                 if dirty:
+                    state = _live(self._folded(spark, m, dirty, schema))
                     out = state.withColumns(
                         {
                             c: F.expr(e)
@@ -2993,10 +3033,12 @@ class LakeTable:
                             for c, e in exprs.items()
                         }
                     )
-                    out = align_to_schema(out, schema)
-                    new_files = self._write_bucketed(
-                        self._with_bucket(out, m), m, base + 1, mark_base=True
+                    # `_folded`'s bucket column stays valid: no
+                    # expression changes a key's value
+                    out = align_to_schema(
+                        out, T.StructType([*schema.fields, state.schema[_BUCKET_COL]])
                     )
+                    new_files = self._write_bucketed(out, m, base + 1, mark_base=True)
                     m["buckets"] = {
                         **m["buckets"],
                         **{str(b): new_files.get(str(b), []) for b in dirty},
@@ -3862,12 +3904,12 @@ class LakeTable:
             is_mor_merge = mode == "merge" and m.get("merge_strategy", "cow") == "mor"
             lineage_job = lin_src.groupBy(_BUCKET_COL).agg(*lineage_agg)
             if is_mor_merge:
-                # MOR never reads existing data and its bucket-aligned
-                # write ignores n_out, so nothing in the main job's PLAN
-                # depends on the lineage result — run the lineage job on
-                # a background thread, concurrent with the merge write,
-                # and join before assembling the manifest. (COW needs
-                # `touched` up front to prune the existing-bucket read.)
+                # MOR never reads existing data, so nothing in the main
+                # job's PLAN depends on the lineage result — run the
+                # lineage job on a background thread, concurrent with
+                # the merge write, and join before assembling the
+                # manifest. (COW needs `touched` up front to prune the
+                # existing-bucket read.)
                 holder: dict = {}
 
                 def _lineage_bg() -> None:
@@ -3900,7 +3942,7 @@ class LakeTable:
 
             if mode == "append":
                 out = aligned.drop("op") if has_op else aligned
-                new_files = self._write_bucketed(out, m, base + 1, n_out=len(touched))
+                new_files = self._write_bucketed(_by_bucket(out, m), m, base + 1)
                 buckets = dict(m["buckets"])
                 for b, files in new_files.items():
                     buckets[b] = buckets.get(b, []) + files
@@ -3938,14 +3980,16 @@ class LakeTable:
                     # empty target: unioning a LocalRelation measurably
                     # slows the whole plan — skip it
                     combined = src
-                # one explicit exchange on the key with EXACTLY n_buckets
-                # partitions: the aggregation below reuses it (its
-                # ClusteredDistribution is satisfied), and because the
-                # bucket function IS Spark's hash partitioning, partition
-                # i == bucket i afterwards — the write then needs no
-                # further shuffle. Adaptive execution never coalesces a
-                # REPARTITION_BY_NUM exchange, so this holds with AQE on.
-                combined = combined.repartition(m["n_buckets"], *[F.col(c) for c in _bucket_cols(m)])
+                # one explicit exchange on the bucket columns
+                # (`_by_bucket`): the aggregation below reuses it (its
+                # ClusteredDistribution over the key is satisfied), and
+                # because the bucket function IS Spark's hash
+                # partitioning and the partition count divides
+                # n_buckets, each bucket lands whole in one partition —
+                # the write then needs no further shuffle. Adaptive
+                # execution never coalesces a REPARTITION_BY_NUM
+                # exchange, so this holds with AQE on.
+                combined = _by_bucket(combined, m)
                 # LWW as max_by aggregation over that exchange: the only
                 # reduce on the write path, so the batch needs no
                 # separate pre-dedup pass. Its partial aggregate runs
@@ -4012,9 +4056,7 @@ class LakeTable:
                 buckets = dict(m["buckets"])
                 if is_mor_merge:
                     try:
-                        new_files = self._write_bucketed(
-                            final, m, base + 1, already_bucket_aligned=True
-                        )
+                        new_files = self._write_bucketed(final, m, base + 1)
                     finally:
                         # always reap the background lineage job — a failed
                         # write must not orphan the thread
@@ -4026,9 +4068,7 @@ class LakeTable:
                     for b, files in new_files.items():
                         buckets[b] = buckets.get(b, []) + files
                 else:
-                    new_files = self._write_bucketed(
-                        final, m, base + 1, n_out=len(touched), already_bucket_aligned=True
-                    )
+                    new_files = self._write_bucketed(final, m, base + 1)
                     for b in touched:
                         buckets[str(b)] = new_files.get(str(b), [])
                 rows_up = sum(l["rows_applied"] for l in lineage)

@@ -208,6 +208,29 @@ def test_batch_read_version_window(spark, mor_table):
     assert sorted(r["change_lsn"] for r in upto.collect()) == [1, 2]
 
 
+def test_window_across_rescale_publish(spark, mor_table):
+    """A `split_buckets` publish (operation "rescale") re-cuts files
+    without changing a row: a window crossing it serves the merges on
+    both sides and nothing for the rescale itself."""
+    t = mor_table
+    while not t.split_buckets(spark, factor=2)["published"]:
+        pass
+    assert t.history()[-1]["operation"] == "rescale"
+    assert t.manifest()["n_buckets"] == 8
+    t.merge(spark.createDataFrame([("d3", [5], 5, "I")], S), epoch_id="e2")
+    got = spark.read.format("lake_changes").option("path", t.root).load().collect()
+    assert sorted(r["change_lsn"] for r in got) == [1, 2, 3, 4, 5]
+    v_rs = t.epoch_commit_version("e2") - 1
+    tail = (
+        spark.read.format("lake_changes")
+        .option("path", t.root)
+        .option("startingVersion", str(v_rs - 1))
+        .load()
+        .collect()
+    )
+    assert [(r["doc_id"], r["change_lsn"]) for r in tail] == [("d3", 5)]
+
+
 def test_expired_offset_fails_loudly_not_silently(spark, tmp_path, monkeypatch):
     """A consumer whose offset fell below retained history must get an
     error demanding re-bootstrap — silently skipping expired commits

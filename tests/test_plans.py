@@ -70,7 +70,7 @@ def test_cosine_topk_broadcasts_queries(spark):
 _MERGE_SCHEMA = "doc_id string, tokens array<int>, change_lsn long, op string"
 
 
-def _merge_table(spark, root, strategy):
+def _merge_table(spark, root, strategy, n_buckets=4):
     from pyspark.sql import types as T
 
     from airbyte_destination_spark.lake import LakeTable
@@ -83,34 +83,43 @@ def _merge_table(spark, root, strategy):
         ]
     )
     t = LakeTable(str(root / strategy))
-    t.create(schema, ["doc_id"], "change_lsn", n_buckets=4, merge_strategy=strategy)
+    t.create(
+        schema, ["doc_id"], "change_lsn", n_buckets=n_buckets, merge_strategy=strategy
+    )
     return t
 
 
-def _assert_one_new_file_per_bucket(spark, t, version):
-    """Each bucket written at `version` got exactly one file, and every
-    file holds only its own bucket's keys (routed by lake/hashing.py,
-    which tests/test_hashing.py pins to Spark's bucket hash)."""
-    import os
-
-    import pyarrow.parquet as pq
+def _bucket_of(k, n_buckets):
     from pyspark.sql import types as T
 
     from airbyte_destination_spark.lake.hashing import key_hashes
 
-    route = key_hashes(T.StringType())
+    return key_hashes(T.StringType())(k)[0] % n_buckets
+
+
+def _assert_one_new_file_per_bucket(spark, t, version, buckets=None):
+    """Each bucket written at `version` got exactly one file, and every
+    file holds only its own bucket's keys (routed by lake/hashing.py,
+    which tests/test_hashing.py pins to Spark's bucket hash). `buckets`:
+    the bucket ids the op wrote (default: every bucket)."""
+    import os
+
+    import pyarrow.parquet as pq
+
     m = t.manifest(version)
     written = {
-        bk: [e for e in files if e["cv"] == version]
+        bk: fs
         for bk, files in m["buckets"].items()
+        if (fs := [e for e in files if e["cv"] == version])
     }
     assert all(len(fs) == 1 for fs in written.values()), written
-    assert len(written) == m["n_buckets"]
+    want = set(range(m["n_buckets"])) if buckets is None else set(buckets)
+    assert {int(bk) for bk in written} == want
     for bk, files in written.items():
         keys = pq.read_table(
             os.path.join(t.root, files[0]["path"]), columns=["doc_id"]
         ).column("doc_id").to_pylist()
-        assert keys and {route(k)[0] % m["n_buckets"] for k in keys} == {int(bk)}
+        assert keys and {_bucket_of(k, m["n_buckets"]) for k in keys} == {int(bk)}
 
 
 def test_merge_plan_single_payload_shuffle(spark, tmp_path):
@@ -119,9 +128,11 @@ def test_merge_plan_single_payload_shuffle(spark, tmp_path):
     aligned output files being written without a second exchange.
     `partitionBy` writes by value, so a file holding only its bucket's
     keys holds whatever the partitioning; one new file per touched
-    bucket is what shows partition i == bucket i. Checked for a COW
-    merge onto existing data, MOR merges and a compaction, under the
-    session's adaptive execution setting."""
+    bucket is what shows each bucket landed whole in one partition
+    (partition = bucket mod the partition count, which divides
+    n_buckets: `_by_bucket`). Checked for a COW merge onto existing
+    data, MOR merges and a compaction, under the session's adaptive
+    execution setting."""
     b1 = spark.createDataFrame(
         [(f"d{i}", [i], i, "I") for i in range(100)], _MERGE_SCHEMA
     )
@@ -142,6 +153,125 @@ def test_merge_plan_single_payload_shuffle(spark, tmp_path):
     assert v is not None
     _assert_one_new_file_per_bucket(spark, mor, v)
     assert all(len(fs) == 1 for fs in mor.manifest(v)["buckets"].values())
+
+
+def test_write_partitions_divisor_rule():
+    """The bucketed write's task count is the smallest divisor of
+    n_buckets at least min(shuffle partitions, n_buckets)."""
+    from airbyte_destination_spark.lake.table import _write_partitions
+
+    cases = {
+        (32, 4): 4, (32, 8): 8, (32, 200): 32, (32, 5): 8, (16, 8): 8,
+        (12, 8): 12, (12, 4): 4, (12, 5): 6, (11, 8): 11, (11, 4): 11,
+        (11, 200): 11, (9, 2): 3, (9, 4): 9, (6, 4): 6, (3, 4): 3,
+        (2, 4): 2, (1, 4): 1, (7, 1): 1,
+    }
+    for (n, p), g in cases.items():
+        assert _write_partitions(n, p) == g, (n, p)
+    for n in range(1, 65):
+        for p in range(1, 70):
+            g = _write_partitions(n, p)
+            lo = min(p, n)
+            assert n % g == 0 and g >= lo, (n, p, g)
+            assert not any(n % d == 0 for d in range(lo, g)), (n, p, g)
+
+
+@pytest.mark.parametrize("n_buckets", [3, 11, 12, 16])
+def test_every_writer_writes_one_file_per_touched_bucket(spark, tmp_path, n_buckets):
+    """With n_buckets below (3) and above (11, 12, 16) the session's
+    shuffle partitions (4, or 8 once a `get_spark()` call with its
+    defaults has reset them) — primes, a multiple and a power of two —
+    every writer still writes exactly one file per bucket it touches,
+    holding only that bucket's keys: COW and MOR merges, append,
+    compact, compact_tiered, purge_tombstones, overwrite_where and
+    rebucket."""
+    rows = [
+        [(f"d{i}", [i], i, "I") for i in range(120)],
+        [(f"d{i}", [i * 2], 200 + i, "U" if i % 4 else "D") for i in range(0, 160, 3)],
+        [(f"d{i}", [i * 3], 400 + i, "U") for i in range(1, 120, 2)],
+    ]
+    b1, b2, b3 = (spark.createDataFrame(r, _MERGE_SCHEMA) for r in rows)
+
+    def buckets_of(keys):
+        return {_bucket_of(k, n_buckets) for k in keys}
+
+    def live_buckets(t, where="true"):
+        return buckets_of(r.doc_id for r in t.read(spark).where(where).collect())
+
+    cow = _merge_table(spark, tmp_path, "cow", n_buckets)
+    for e, (b, r) in enumerate(zip([b1, b2], rows)):
+        cow.merge(b, epoch_id=f"e{e}")
+        _assert_one_new_file_per_bucket(
+            spark, cow, cow.current_version(), buckets_of(k for k, *_ in r)
+        )
+    dirty = live_buckets(cow, "change_lsn < 10")
+    cow.overwrite_where(spark, "change_lsn < 10")
+    _assert_one_new_file_per_bucket(
+        spark, cow, cow.current_version(), dirty & live_buckets(cow)
+    )
+
+    app = _merge_table(spark, tmp_path / "append", "cow", n_buckets)
+    app.append(b1.drop("op"))
+    _assert_one_new_file_per_bucket(spark, app, app.current_version())
+
+    mor = _merge_table(spark, tmp_path, "mor", n_buckets)
+    for e, (b, r) in enumerate(zip([b1, b2, b3], rows)):
+        mor.merge(b, epoch_id=f"e{e}")
+        _assert_one_new_file_per_bucket(
+            spark, mor, mor.current_version(), buckets_of(k for k, *_ in r)
+        )
+    before = mor.manifest()["buckets"]
+    res = mor.compact_tiered(spark, min_run=3)
+    assert res is not None and res["buckets"] > 0
+    after = mor.manifest()["buckets"]
+    merged = {int(b) for b in after if after[b] != before[b]}
+    assert len(merged) == res["buckets"]
+    _assert_one_new_file_per_bucket(spark, mor, res["version"], merged)
+    mor.merge(b3, epoch_id="e3")
+    todo = {int(b) for b, fs in mor.manifest()["buckets"].items() if len(fs) >= 2}
+    v = mor.compact(spark, min_files=2)
+    _assert_one_new_file_per_bucket(spark, mor, v, todo)
+    want = {r.doc_id: r.change_lsn for r in mor.read(spark).collect()}
+    tombstoned = buckets_of(k for k, _, _, op in rows[1] if op == "D")
+    v = mor.purge_tombstones(spark)
+    _assert_one_new_file_per_bucket(spark, mor, v, tombstoned & live_buckets(mor))
+    n2 = {3: 2, 11: 16, 12: 11, 16: 12}[n_buckets]
+    v = mor.rebucket(spark, n2)
+    _assert_one_new_file_per_bucket(spark, mor, v)
+    assert {r.doc_id: r.change_lsn for r in mor.read(spark).collect()} == want
+
+
+def test_compact_plans_one_exchange(spark, tmp_path, monkeypatch):
+    """A MOR compaction folds and writes over ONE exchange: the fold's
+    key clustering reuses the bucket placement (`_by_bucket`), in
+    `_write_partitions` tasks: as many as the session's shuffle
+    partitions, on a table with twice as many buckets."""
+    from airbyte_destination_spark.lake import table as table_mod
+    from airbyte_destination_spark.plans import executed_plan
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    t = _merge_table(spark, tmp_path, "mor", n_buckets=2 * parts)
+    for e in range(2):
+        t.merge(
+            spark.createDataFrame(
+                [(f"d{i}", [i], 10 * e + i, "U") for i in range(64)], _MERGE_SCHEMA
+            ),
+            epoch_id=f"e{e}",
+        )
+    written = []
+    ids = table_mod._with_field_ids
+
+    def record(df, m):
+        written.append(df)
+        return ids(df, m)
+
+    monkeypatch.setattr(table_mod, "_with_field_ids", record)
+    assert t.compact(spark, min_files=2) is not None
+    (df,) = written
+    plan = executed_plan(df)
+    assert count_exchanges(df) == 1, plan
+    g = table_mod._write_partitions(2 * parts, parts)
+    assert g == parts and f", {g}), REPARTITION_BY_NUM" in plan, plan
 
 
 @pytest.mark.parametrize("strategy", ["cow", "mor"])
